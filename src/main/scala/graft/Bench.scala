@@ -41,11 +41,6 @@ object Bench {
     // bigger corpora / smaller P raise it via env.
     bloomExpectedPerPartition =
       sys.env.getOrElse("SPARK_GRAFT_BLOOM_EXPECTED", (1 << 16).toString).toLong,
-    // mapside is the bench default: it is the design-point tier AND, under
-    // commit pipelining, the only tier whose per-round driver work is O(1)
-    // — the broadcast tier's sketch collect forces the round's discovery
-    // branch on the foreground thread before the next round can start
-    sketchDelivery = sys.env.getOrElse("SPARK_GRAFT_SKETCH_DELIVERY", "mapside"),
     commitPipelining = sys.env.getOrElse("SPARK_GRAFT_PIPELINE", "on") != "off",
     // hop tier for the pipelined cross-round frames: "cache" (default) or
     // "checkpoint" (cluster-durable) — lets the scaling bench price the
@@ -125,6 +120,9 @@ object Bench {
     s
   }
 
+  /** Cores the bench sessions may use: `SPARK_GRAFT_CPUS` (default 32). */
+  def hostCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
   /** Pages for the crawl headline, scaled off the sf dir name. */
   def crawlPagesFor(sfDir: String): Int =
     if (sfDir.contains("sf0.1")) 60000
@@ -133,7 +131,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = hostCpus
     val spark = session(cpus)
 
     // One untimed JIT/codegen warm-up on a driver-tiny frame BEFORE the
@@ -284,7 +282,7 @@ object ScalingBench {
       val corpusOk = Files.exists(markerPath) &&
         new String(Files.readAllBytes(markerPath)) == marker
       if (!corpusOk || !Files.exists(tmplMarker)) {
-        val gen = Bench.session(32, shufflePartitions = P)
+        val gen = Bench.session(Bench.hostCpus, shufflePartitions = P)
         if (!corpusOk) {
           org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(corpus))
           Bench.genCorpus(gen, corpus, nPages, P)
@@ -350,14 +348,13 @@ object ScalingBench {
       .mkString("\n|")
     val runLists = results.map(r =>
       s"- ${r.nPages} pages, ${r.loN}→${r.hiN}: ${r.runDetail}").mkString("\n")
-    val delivery = Bench.benchCfg(head.parts).sketchDelivery
     val pairsEnv = pairs.map { case (a, b) => s"$a,$b" }.mkString(";")
     val md =
       f"""# BENCH — measured baseline (local sandbox)
          |
          |Workload: batch-iterative crawl, FixtureGen corpus on tmpfs
          |(textScale=$textScale), $rounds rounds per run, hostBudget=${Bench.benchCfg(head.parts).hostBudget},
-         |sketch delivery "$delivery", commit pipelining ${Bench.benchCfg(head.parts).commitPipelining},
+         |map-side sketch probe, commit pipelining ${Bench.benchCfg(head.parts).commitPipelining},
          |JVM heap $heap. Within a size, the partition count P (table below)
          |is IDENTICAL at both parallelism levels of a pairing — same plan,
          |task set and sketch math; only executor-core count varies
@@ -422,9 +419,9 @@ object ScalingBench {
          |lineage folded to ONE aggregate job; round metrics ride a single
          |observe() on the lineage write; the monotone seen set commits as
          |an append DELTA (never a rewrite); sketch-delta build shuffles
-         |raw keys, not bloom-sized partial states; map-side sketch
-         |delivery available ("$delivery" measured here); bootstrapped-
-         |catalog cloning makes iteration cost rounds-only.
+         |raw keys, not bloom-sized partial states; the seen sketch is
+         |probed map-side, never collected; bootstrapped-catalog cloning
+         |makes iteration cost rounds-only.
          |Round-2 findings that still hold: P=64 was ~40%% slower at both
          |levels at 240k pages (sub-2s tasks are fixed-cost-dominated);
          |AQE on/off indistinguishable under host noise; an 8 GiB heap

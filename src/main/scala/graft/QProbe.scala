@@ -12,7 +12,7 @@ object QProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("q26_ngram_jaccard")
     val iters = sys.env.getOrElse("GRAFT_PROBE_ITERS", "1").toInt
-    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = Bench.session(Bench.hostCpus)
     val explain = sys.env.get("GRAFT_PROBE_EXPLAIN").contains("1")
     for (name <- names; i <- 1 to iters) {
       if (explain && i == 1) {

@@ -10,7 +10,6 @@ import graft.functions.{CrawlUdfs, UrlExpressions}
 import graft.multimodal.Multimodal
 import graft.operators.{LinkRank, Ranks}
 import graft.sim.Similarity
-import graft.sketch.SeenFilter
 import graft.text.TextAnalysis
 
 /**
@@ -53,21 +52,12 @@ object SparkEntry {
     // GRAFT_CRAWL_TIMING, warm JVM): ~2.7 s fixture-gen + bootstrap + final
     // aggregate, then per round ~1.8 s run+rank (compute — ~15 toy-sized
     // Spark jobs, pure scheduler overhead at 8-40 fetches/round) + the
-    // commit. Config is the design-point pairing and the measured best of
-    // the 2x2 {sync,pipelined}x{broadcast,mapside} grid (warm q34 wall:
-    // 14.9 / 12.4* / 11.1 / 10.3 s):
-    //  - MAPSIDE sketch delivery: the broadcast tier's per-round driver
-    //    collect forces the sketch-merge job in the timed window (~1 s/
-    //    round) AND (r3 finding) serializes the discovery branch under
-    //    pipelining — it alone explains the r3/r4 "pipelining loses at toy
-    //    scale" 10.7->12.7 s history (*12.4 was sync+broadcast, r4's pick).
-    //  - PIPELINED commits: with the collect gone the next round's compute
-    //    genuinely overlaps the commit wall again (~0.5 s/round back).
-    // Committed bytes are identical across all four combinations (CrawlSpec
-    // tier + pipelined≡sync parity tests), so the golden oracle is unchanged.
+    // commit. PIPELINED commits: the next round's compute overlaps the
+    // commit wall (~0.5 s/round back). Committed bytes are identical in both
+    // commit modes (CrawlSpec pipelined≡sync parity), so the golden oracle
+    // does not depend on the pick.
     val cfg = CrawlConfig(numPartitions = 8, hostBudget = 8, roundBudget = 512,
-      bloomExpectedPerPartition = 1 << 12, commitPipelining = true,
-      sketchDelivery = "mapside")
+      bloomExpectedPerPartition = 1 << 12, commitPipelining = true)
     val catalog = new HadoopSnapshotCatalog(s"$dir/catalog")
     val pages = spark.read.parquet(s"$dir/pages.parquet")
     val robots = spark.read.parquet(s"$dir/robots.parquet")
@@ -1011,32 +1001,14 @@ object SparkEntry {
     }))
 
   /** Build partitioned sketches over `keys`, probe every key back through
-    * the deserialized filters: (n_keys, false_negatives) — the membership
-    * contract is zero false negatives, which the SQL oracle states as a
-    * constant the engine must reproduce. */
-  private def sketchMembership(s: SparkSession, keys: DataFrame, cfg: CrawlConfig): DataFrame = {
-    import s.implicits._
-    import graft.sketch.KeyHash
-    val sketchDf = Crawl.buildSketchDelta(s, keys, cfg)
-    // probe through the MAP-SIDE tier — the design-point delivery path the
-    // crawl loop defaults to (CrawlRound step 10's SketchTable branch): each
-    // probe key cogroups with its bucket's sketch row on partition_id, the
-    // task deserializes that one sketch and streams its keys through it; no
-    // sketch byte ever visits the driver. (The broadcast tier's codegen'd
-    // probe expression is pinned separately by SketchSpec + CrawlSpec's
-    // tier-parity test.) Absent-bucket convention matches the loop: no
-    // sketch row ⇒ "might be seen" ⇒ can only inflate hits, never
-    // false_negatives.
-    val hits = keys.select(col("canon_url")).as[String]
-      .groupByKey(u => KeyHash.pidOf(u, cfg.numPartitions))
-      .cogroup(sketchDf.select(col("partition_id"), col("sketch"))
-        .as[(Int, Array[Byte])].groupByKey(_._1)) { (_, us, ss) =>
-        val filt = if (ss.hasNext) Some(SeenFilter.deserialize(ss.next()._2)) else None
-        us.map(u => filt.forall(_.mightContain(KeyHash.of(u))))
-      }.toDF("hit")
-    hits.agg(count(lit(1)).as("n_keys"),
-      sum(when(!col("hit"), 1L).otherwise(0L)).as("false_negatives"))
-  }
+    * the crawl's own map-side probe ([[CrawlRound.probeSeen]] — same bucket
+    * routing and absent-bucket rule as the loop): (n_keys, false_negatives)
+    * — the membership contract is zero false negatives, which the SQL
+    * oracle states as a constant the engine must reproduce. */
+  private def sketchMembership(s: SparkSession, keys: DataFrame, cfg: CrawlConfig): DataFrame =
+    CrawlRound.probeSeen(keys, Crawl.buildSketchDelta(s, keys, cfg), cfg.numPartitions)
+      .agg(count(lit(1)).as("n_keys"),
+        sum(when(!col("might_seen"), 1L).otherwise(0L)).as("false_negatives"))
 
   // ---- DuckDB oracle SQL ---------------------------------------------------
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.CrawlUdfs
-import graft.sketch.{SeenFilter, SketchAgg}
+import graft.sketch.{BloomFilter, SketchAgg}
 
 /**
  * The batch-iterative crawl driver (SURVEY.md op 50): a plain Scala loop —
@@ -112,20 +112,12 @@ object Crawl {
   private def emptyFetchLog(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.fetchLog)
 
-  /** Bloom (numBits, numHashes) for an expected-items-per-partition target
-    * at false-positive rate `fpp`. Delegates to [[graft.sketch.BloomFilter
-    * .geometry]] — the single sizing authority; a second copy of the math
-    * here would let the loop and `create()` silently desynchronize, and
-    * the adaptive path depends on exact geometry equality. */
-  def bloomGeometry(expected: Long, fpp: Double): (Int, Int) =
-    graft.sketch.BloomFilter.geometry(expected, fpp)
-
   /** Per-partition sketch rows for a batch of new canon_urls. `geometry`
     * overrides the cfg-derived bloom size (adaptiveSketch resizes). */
   def buildSketchDelta(spark: SparkSession, newKeys: DataFrame, cfg: CrawlConfig,
       geometry: Option[(Int, Int)] = None): DataFrame = {
     val (bits, k) = geometry.getOrElse(
-      bloomGeometry(cfg.bloomExpectedPerPartition, cfg.bloomFpp))
+      BloomFilter.geometry(cfg.bloomExpectedPerPartition, cfg.bloomFpp))
     val keyed = newKeys
       .withColumn("partition_id", CrawlRound.partitionIdOf(col("canon_url"), cfg.numPartitions))
       .withColumn("key", xxhash64(col("canon_url")))
@@ -160,19 +152,6 @@ object Crawl {
       .select("partition_id", "kind", "sketch", "n_items")
   }
 
-  /** Collect the P sketch rows into the driver-side map the BROADCAST
-    * delivery tier probes (cfg.sketchDelivery = "broadcast" — right while
-    * P × sketch-size comfortably fits a broadcast). The design-point tier
-    * is "mapside": the round cogroups discoveries with the `url_seen`
-    * table on partition_id and no sketch byte ever visits the driver. */
-  def loadSketches(spark: SparkSession, catalog: StateCatalog): Map[Int, SeenFilter] = {
-    catalog.load(spark, "url_seen") match {
-      case None => Map.empty
-      case Some(df) => df.select("partition_id", "sketch").collect()
-        .map(r => r.getInt(0) -> SeenFilter.deserialize(r.getAs[Array[Byte]](1))).toMap
-    }
-  }
-
   /** Run rounds `from..until` (inclusive), committing each. Returns per-round
     * results. Stops early when the frontier drains.
     *
@@ -184,9 +163,10 @@ object Crawl {
     *     exchange-free instead of re-shuffling the full corpus per round.
     *     On a real cluster this is an Iceberg bucketed-table read; in cache
     *     form it is the same SPJ contract. `robots_rules` likewise.
-    *   - the driver-side sketch map is refreshed from the round's persisted
-    *     `url_seen` frame right after commit (P tiny rows), so no round
-    *     starts with a catalog read just to rebuild it.
+    *   - the URL-seen sketch never visits the driver: each round probes
+    *     the previous round's persisted `url_seen` frame map-side
+    *     ([[CrawlRound.probeSeen]]), so no round starts with a catalog read
+    *     or a collect just to deliver it.
     *   - metrics are Observations riding the commit writes (see
     *     [[CrawlRound.RoundOutput]]) — zero dedicated metric jobs.
     *   - no up-front `isEmpty` probe: an empty frontier yields fetched == 0
@@ -194,16 +174,15 @@ object Crawl {
     */
   /** Long-lived per-crawl state: the corpus cached WITH the fetch-join
     * partitioning (HashPartitioning(canon_url, P) — Catalyst-recognized, so
-    * every round's fetch join leaves the corpus side exchange-free), the
-    * robots state, and the driver-side sketch map. Opened once; callers
-    * that benchmark steady-state rounds open it eagerly OUTSIDE the timed
-    * window (it is ingest, not crawl — on a real cluster it is the Iceberg
-    * bucketed-table layout that persists between runs). */
+    * every round's fetch join leaves the corpus side exchange-free) and the
+    * robots state. Opened once; callers that benchmark steady-state rounds
+    * open it eagerly OUTSIDE the timed window (it is ingest, not crawl — on
+    * a real cluster it is the Iceberg bucketed-table layout that persists
+    * between runs). */
   final case class CrawlState(
       pagesCanon: DataFrame,
       robotsStatic: DataFrame, // null in in-loop mode
-      robotsSource: Option[DataFrame],
-      var sketches: Map[Int, SeenFilter]) {
+      robotsSource: Option[DataFrame]) {
     def close(): Unit = {
       pagesCanon.unpersist()
       if (robotsStatic != null) robotsStatic.unpersist()
@@ -239,10 +218,7 @@ object Crawl {
       if (robotsStatic != null) robotsStatic.count()
       robotsSource.foreach(_.count())
     }
-    // map-side delivery never holds sketch state on the driver
-    val sk = if (cfg.sketchDelivery == "mapside") Map.empty[Int, SeenFilter]
-             else loadSketches(spark, catalog)
-    CrawlState(pagesCanon, robotsStatic, robotsSource, sk)
+    CrawlState(pagesCanon, robotsStatic, robotsSource)
   }
 
   def runRounds(
@@ -279,7 +255,6 @@ object Crawl {
     val pagesCanon = state.pagesCanon
     val robotsSource = state.robotsSource
     val results = scala.collection.mutable.ArrayBuffer[CrawlRound.RoundResult]()
-    val mapside = cfg.sketchDelivery == "mapside"
     val timing = sys.env.contains("GRAFT_CRAWL_TIMING")
 
     // Cross-round frame hop (see CrawlConfig.pipelineHop). Both tiers force
@@ -345,7 +320,6 @@ object Crawl {
       }
     var base = catalog.metricsOf(startRound - 1).getOrElse("total_fetched",
       (0 until startRound).map(r => catalog.metricsOf(r).getOrElse("fetched", 0L)).sum)
-    var sketches = state.sketches
     // rankPriority: the accumulated host-graph (union of per-round distinct
     // deltas — committed as an APPEND chain, never a full rewrite; dedup
     // happens once per round at rank-compute time). None until links exist.
@@ -356,7 +330,7 @@ object Crawl {
     // Driver-known cumulative seen count: round 0's "enqueued" metric is the
     // seed count, each later round's is its new keys — no jobs to maintain.
     val adaptive = cfg.adaptiveSketch && cfg.filterKind == "bloom"
-    var bloomGeo = bloomGeometry(cfg.bloomExpectedPerPartition, cfg.bloomFpp)
+    var bloomGeo = BloomFilter.geometry(cfg.bloomExpectedPerPartition, cfg.bloomFpp)
     var sketchRebuild = false
     // settled results for rounds below this probed a pre-rebuild snapshot;
     // their FPR must not re-trigger a resize (each spurious trigger costs a
@@ -391,8 +365,20 @@ object Crawl {
     }
     staticDelays.foreach(live += _) // crawl-lifetime pin, released with the rest
 
+    // Every wait on a commit is bounded by cfg.commitQuiesceTimeoutSec. A
+    // commit that does not settle at the barrier fails the loop, naming its
+    // round; the finally block below then abandons it without waiting out
+    // a second window.
+    val commitWait = Duration(cfg.commitQuiesceTimeoutSec.toLong, "sec")
+    var commitWedged = false
     def settle(): Unit = inFlight.foreach { f =>
-      val res = Await.result(f.fut, Duration.Inf)
+      try Await.ready(f.fut, commitWait) catch {
+        case _: java.util.concurrent.TimeoutException =>
+          commitWedged = true
+          throw new java.util.concurrent.TimeoutException(
+            s"commit r${f.round} did not settle within ${cfg.commitQuiesceTimeoutSec}s")
+      }
+      val res = f.fut.value.get.get // rethrows a failed commit's exception
       release(retired)
       retired = f.frames
       results += res
@@ -444,11 +430,8 @@ object Crawl {
               f"[crawl] r$round $name ${(t1 - t0) / 1e9}%.2fs @${System.currentTimeMillis()}")
             t1
           }
-          val seenState: SketchState =
-            if (mapside) SketchTable(urlSeenPrev.getOrElse(
-              spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                Schemas.urlSeen)))
-            else SketchBroadcast(sketches)
+          val seenSketches = urlSeenPrev.getOrElse(spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.urlSeen))
           // run() is plan construction PLUS the rank materialization (the
           // sort cache + counts collect inside globalSeqCached force
           // fetch+parse) — it overlaps the previous round's in-flight commit.
@@ -461,7 +444,7 @@ object Crawl {
           val edgesPin = hostEdges.map { e => val p = e.distinct().persist(); live += p; p }
           val hostRanks = edgesPin.map(e => graft.operators.LinkRank.bucketByRank(
             graft.operators.LinkRank.linkRank(e, cfg.rankIters), cfg.rankBuckets))
-          val out = CrawlRound.run(spark, frontier, seenExact, seenState, pagesCanon,
+          val out = CrawlRound.run(frontier, seenExact, seenSketches, pagesCanon,
             robotsRules, cfg, round, base, robotsSource, hostRanks, staticDelays)
           live ++= out.persisted
           val tRun = phase("run+rank", tRound)
@@ -482,7 +465,7 @@ object Crawl {
               val n = seenExact.select("canon_url").unionByName(out.newKeys).count()
               val target = math.max(
                 2L * n / cfg.numPartitions, cfg.bloomExpectedPerPartition)
-              val g = bloomGeometry(target, cfg.bloomFpp)
+              val g = BloomFilter.geometry(target, cfg.bloomFpp)
               // a same-or-smaller-size rebuild reproduces the merged bits
               // exactly (same keys, same geometry) — skip the scan
               if (g._1 > bloomGeo._1) Some(g) else None
@@ -507,7 +490,7 @@ object Crawl {
 
           // ---- barrier: settle round-1's commit before committing this one
           settle()
-          val tBar = phase("barrier", tRun)
+          phase("barrier", tRun)
           if (lastRes.exists(noProgress)) {
             // the previous round turned out to be the drain: this round ran
             // SPECULATIVELY and is discarded uncommitted — committed state
@@ -633,18 +616,6 @@ object Crawl {
               if (cfg.rankPriority) hostEdges = catalog.load(spark, "host_edges")
             }
             base += out.fetchedCount
-            if (!mapside) {
-              // broadcast tier: refresh the driver map for round+1 BEFORE it
-              // runs. The collect forces the (P-row) sketch merge job and
-              // overlaps the in-flight commit like everything else; the
-              // map-side tier reads sketchNext straight from cache instead —
-              // sketch bytes never visit the driver.
-              sketches = sketchNext.select("partition_id", "sketch").collect()
-                .map(rw => rw.getInt(0) ->
-                  graft.sketch.SeenFilter.deserialize(rw.getAs[Array[Byte]](1)))
-                .toMap
-              phase("sketchCollect", tBar)
-            }
             if (timing) System.err.println(
               f"[crawl] r$round LOOP ${(System.nanoTime() - tRound) / 1e9}%.2fs fetched=${out.fetchedCount}")
             round += 1
@@ -652,7 +623,6 @@ object Crawl {
         }
       }
       settle() // the last committed round
-      state.sketches = sketches
       results.toSeq
     } finally {
       commitEc.shutdown()
@@ -662,9 +632,10 @@ object Crawl {
       // latest, then round N's manifest would appear asynchronously). If the
       // in-flight commit itself failed, the loop already threw from settle();
       // the Try here only absorbs that duplicate on the error path. The
-      // await is FINITE: a wedged commit (hung filesystem write) must not
-      // block the finally path forever and swallow the primary exception —
-      // on timeout the commit is ABANDONED SAFELY, in three layers:
+      // await is FINITE (zero when settle() already waited out the window):
+      // a wedged commit (hung filesystem write) must not block the finally
+      // path forever and swallow the primary exception — on timeout the
+      // commit is ABANDONED SAFELY, in three layers:
       //   1. the poison flag (commitAbandoned, polled by the catalog before
       //      each not-yet-started table write and again immediately before
       //      the manifest rename) stops the commit from publishing or
@@ -683,8 +654,7 @@ object Crawl {
       // no abandoned write outlives the quiesce to race a retry's .tmp
       // paths beyond cancellation-delivery latency.
       inFlight.foreach(f => scala.util.Try(
-        Await.result(f.fut, scala.concurrent.duration.Duration(
-          cfg.commitQuiesceTimeoutSec.toLong, "sec"))) match {
+        Await.result(f.fut, if (commitWedged) Duration.Zero else commitWait)) match {
         case scala.util.Failure(_: java.util.concurrent.TimeoutException) =>
           commitAbandoned.set(true)
           spark.sparkContext.cancelJobGroup(StateCatalog.commitJobGroup(f.round))

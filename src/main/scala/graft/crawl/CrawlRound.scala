@@ -1,13 +1,14 @@
 package graft.crawl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BooleanType
 
 import graft.functions.CrawlUdfs
 import graft.functions.UrlExpressions.{canonicalize_url, host_rev, url_host}
 import graft.operators.Ranks
-import graft.sketch.{SeenFilter, SketchAgg}
+import graft.sketch.{KeyHash, SeenFilter}
 
 /**
  * One crawl round (SURVEY.md §3.1) as a single declarative dataflow:
@@ -111,6 +112,29 @@ object CrawlRound {
 
   def partitionIdOf(c: Column, p: Int): Column = pmod(xxhash64(c), lit(p)).cast("int")
 
+  /** The URL-seen sketch probe (op 24): `keys` (any frame with a `canon_url`
+    * column) comes back with a `might_seen` flag. Keys cogroup with the
+    * `url_seen` rows' (partition_id, sketch) on the bucket id, so each task
+    * deserializes ITS bucket's sketch once and streams that bucket's keys
+    * through it — no sketch byte visits the driver, which the design point
+    * needs (P = 2^15 × ~1.5 MB ≈ 48 GB can neither collect nor broadcast).
+    * KeyHash is bit-identical to [[partitionIdOf]], so keys land exactly on
+    * their build-side bucket (SURVEY §7.5.4). Absent bucket row ⇒ `true`
+    * ("might be seen"): it can only send a key to the exact verify, never
+    * let a seen one through. */
+  def probeSeen(keys: DataFrame, sketchRows: DataFrame, p: Int): DataFrame = {
+    val spark = keys.sparkSession
+    import spark.implicits._
+    val url = keys.schema.fieldIndex("canon_url")
+    keys.groupByKey(r => KeyHash.pidOf(r.getString(url), p))
+      .cogroup(sketchRows.select(col("partition_id"), col("sketch"))
+        .as[(Int, Array[Byte])].groupByKey(_._1)) { (_, rs, ss) =>
+        val filt = if (ss.hasNext) Some(SeenFilter.deserialize(ss.next()._2)) else None
+        rs.map(r => Row.fromSeq(r.toSeq :+
+          filt.forall(_.mightContain(KeyHash.of(r.getString(url))))))
+      }(Encoders.row(keys.schema.add("might_seen", BooleanType, nullable = false)))
+  }
+
   /** Politeness layout (op 47): repartition on (host, salt) where
     * salt = (host_rank−1) / hostSaltThreshold. Hosts at or under the
     * threshold get salt ≡ 0 — plain host clustering; a Zipf-hot host chunks
@@ -212,10 +236,9 @@ object CrawlRound {
   /** The round dataflow. `pagesCanon` is the bootstrap-canonicalized corpus;
     * `robotsRules` is (host, rules array) — broadcastable. */
   def run(
-      spark: SparkSession,
       frontier: DataFrame,
       seenExact: DataFrame, // canon_url
-      seenState: SketchState,
+      seenSketches: DataFrame, // url_seen rows (partition_id, kind, sketch, n_items)
       pagesCanon: DataFrame,
       robotsRules: DataFrame,
       cfg: CrawlConfig,
@@ -230,8 +253,6 @@ object CrawlRound {
       // schedule step skips the join). In-loop mode ignores this and
       // derives per round from the growing rules table.
       hostDelays: Option[DataFrame] = None): RoundOutput = {
-    import spark.implicits._
-
     // ---- 1. eligibility: scheme + depth (pushable predicates, SURVEY 21/22)
     val eligibleAll = frontier
       .filter(col("canon_url").startsWith("http://") || col("canon_url").startsWith("https://"))
@@ -445,39 +466,10 @@ object CrawlRound {
         .distinct()
         .persist())
 
-    // ---- 10. seen-dedup: Bloom negative test ⇒ definitely new; the rest
+    // ---- 10. seen-dedup: sketch negative test ⇒ definitely new; the rest
     // verify against the exact store (keeps exactness, shrinks the join).
-    // Two delivery tiers with IDENTICAL verdicts (absent sketch row ⇒ "might
-    // be seen" ⇒ exact-store verify, in both):
-    val flagged = (seenState match {
-      case SketchBroadcast(m) =>
-        // native codegen'd probe expression (op 24) — no UDF boundary in
-        // the discovery-dedup hot path; stays inside whole-stage codegen
-        val bSketches = spark.sparkContext.broadcast(m)
-        firstSeenInBatch.withColumn("might_seen",
-          graft.functions.SketchExpressions.sketch_might_contain(
-            col("canon_url"), bSketches, cfg.numPartitions))
-      case SketchTable(rows) =>
-        // map-side: cogroup discoveries with the url_seen table on the
-        // bucket id — each task deserializes ITS bucket's sketch once and
-        // streams its keys through it. One discovery shuffle (which the
-        // sketch-delta build pays anyway) replaces the driver collect +
-        // ~P×sketch-size broadcast; nothing sketch-sized ever crosses the
-        // driver. KeyHash is bit-identical to pmod(xxhash64, P), so rows
-        // land exactly on their build-side bucket (SURVEY §7.5.4).
-        val p = cfg.numPartitions
-        firstSeenInBatch.as[FrontierEntry]
-          .groupByKey(e => graft.sketch.KeyHash.pidOf(e.canon_url, p))
-          .cogroup(rows.select(col("partition_id"), col("sketch"))
-            .as[(Int, Array[Byte])].groupByKey(_._1)) { (_, es, ss) =>
-            val filt = if (ss.hasNext) Some(SeenFilter.deserialize(ss.next()._2)) else None
-            es.map { e =>
-              val might = filt.forall(_.mightContain(graft.sketch.KeyHash.of(e.canon_url)))
-              FlaggedEntry(e.canon_url, e.raw_url, e.host, e.host_rev,
-                e.depth, e.discovery_round, e.src_url, might)
-            }
-          }.toDF()
-    })
+    // One discovery shuffle, which the sketch-delta build pays anyway.
+    val flagged = probeSeen(firstSeenInBatch, seenSketches, cfg.numPartitions)
     flagged.persist()
     val definitelyNew = flagged.filter(!col("might_seen")).drop("might_seen")
     val mustVerify = flagged.filter(col("might_seen")).drop("might_seen")

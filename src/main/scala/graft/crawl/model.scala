@@ -15,17 +15,6 @@ final case class PageRow(
     text: String,
     lang: String)
 
-/** One discovered-not-yet-fetched URL. `discovery_round` (not wall time)
-  * orders discoveries — determinism forbids clocks (SURVEY.md §7.5.1). */
-final case class FrontierEntry(
-    canon_url: String,
-    raw_url: String,
-    host: String,
-    host_rev: String,
-    depth: Int,
-    discovery_round: Int,
-    src_url: String)
-
 /** A frontier entry that survived dedup/robots/budget and got scheduled. */
 final case class Candidate(
     canon_url: String,
@@ -101,7 +90,10 @@ final case class CrawlConfig(
     numPartitions: Int = 32,
     bloomFpp: Double = 0.01,
     bloomExpectedPerPartition: Long = 1 << 16,
-    filterKind: String = "bloom", // "bloom" | "cuckoo"
+    // URL-seen sketch tier: "bloom" | "cuckoo" (delete-capable). Either way
+    // the P per-partition sketches stay where they live — the round probes
+    // them map-side ([[CrawlRound.probeSeen]]), never through the driver.
+    filterKind: String = "bloom",
     // Adaptive seen-sketch sizing (bloom tier only): each round the loop
     // computes the REALIZED false-positive rate from its own lineage
     // metrics (fp = enqueued − deduped_bloom_definite over tested =
@@ -131,16 +123,6 @@ final case class CrawlConfig(
     // <loc>s that are not pages, so they simply miss the corpus join; the
     // flag is off by default (the golden fixtures pin seed-list-only runs).
     seedFromSitemaps: Boolean = false,
-    // URL-seen sketch delivery to the discovery probe (op 24):
-    //   "broadcast" — collect the P sketch rows to the driver once per round
-    //     and broadcast them; the probe is a codegen'd per-row expression.
-    //     Right tier while P × sketch-size fits a broadcast comfortably.
-    //   "mapside"   — never collect: route each discovery to its sketch's
-    //     bucket (cogroup on partition_id), deserialize that one sketch per
-    //     task and stream the keys through it. The tier for the design
-    //     point, where P=2^15 × ~1.5 MB ≈ 48 GB can neither collect nor
-    //     broadcast. Verdicts are identical between tiers by construction.
-    sketchDelivery: String = "broadcast",
     // Overlap round N's commit (table writes + manifest) with round N+1's
     // compute: the commit is a fixed per-round cost (parquet writes, mostly
     // I/O-bound — measured at ~half the round wall at 16 cores) that does
@@ -171,36 +153,15 @@ final case class CrawlConfig(
     // catalog); empty = a fresh local temp dir (sandbox/tests). Ignored by
     // the cache tier.
     checkpointDir: String = "",
-    // How long the loop's FAILURE path waits for an in-flight commit to
-    // settle before abandoning it (finally-block quiesce). Abandonment is
-    // safe — publication is poisoned and the commit thread interrupted, so
-    // the wedged commit can never publish its manifest after the caller
-    // observed the crawl as failed — but generous is right in production: a
-    // slow-but-healthy commit that settles inside the window keeps its
-    // round. Tests shrink it to exercise the abandonment path.
+    // Bound on EVERY wait for an in-flight commit: the loop's barrier
+    // before the next commit, and the failure path's finally-block quiesce.
+    // A commit that does not settle in time fails the loop (naming its
+    // round) and is ABANDONED — publication is poisoned and the commit
+    // thread interrupted, so the wedged commit can never publish its
+    // manifest after the caller observed the crawl as failed. Generous is
+    // right in production: a slow-but-healthy commit that settles inside
+    // the window keeps its round. Tests shrink it to exercise abandonment.
     commitQuiesceTimeoutSec: Int = 600)
-
-/** A discovered frontier entry tagged with its URL-seen sketch verdict —
-  * the map-side probe's output row ([[CrawlRound.run]] step 10). */
-final case class FlaggedEntry(
-    canon_url: String,
-    raw_url: String,
-    host: String,
-    host_rev: String,
-    depth: Int,
-    discovery_round: Int,
-    src_url: String,
-    might_seen: Boolean)
-
-/** How the URL-seen sketch state reaches the round's discovery probe. */
-sealed trait SketchState
-/** Driver-held map, broadcast to executors (small-P tier). */
-final case class SketchBroadcast(sketches: Map[Int, graft.sketch.SeenFilter])
-    extends SketchState
-/** The committed `url_seen` table itself (partition_id, kind, sketch,
-  * n_items) — probed map-side, no driver hop (design-point tier). */
-final case class SketchTable(rows: org.apache.spark.sql.DataFrame)
-    extends SketchState
 
 object Schemas {
   /** BASELINE.json input_hint, exactly. */
@@ -211,6 +172,9 @@ object Schemas {
     StructField("text", StringType),
     StructField("lang", StringType)))
 
+  /** One row per discovered-not-yet-fetched URL. `discovery_round` (not
+    * wall time) orders discoveries — determinism forbids clocks (SURVEY.md
+    * §7.5.1). */
   val frontier: StructType = StructType(Seq(
     StructField("canon_url", StringType, nullable = false),
     StructField("raw_url", StringType),

@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.crawl._
-import graft.sketch.KeyHash
 
 class CrawlSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -34,6 +33,102 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   private def tmp(): String = Files.createTempDirectory("crawlspec").toString
+
+  /** Asserts the committed `url_seen` sketches have no false negative for
+    * any `url_seen_exact` key, through the loop's own map-side probe — and
+    * that every such key's bucket HAS a sketch row, since the probe's
+    * absent-bucket ⇒ "might be seen" rule would otherwise mask a lost one. */
+  private def assertSketchesCoverSeen(catalog: StateCatalog, p: Int): Unit = {
+    val seen = catalog.load(spark, "url_seen_exact").get.select("canon_url")
+    val urlSeen = catalog.load(spark, "url_seen").get
+    assert(seen.select(CrawlRound.partitionIdOf(col("canon_url"), p).as("partition_id"))
+      .join(urlSeen, Seq("partition_id"), "left_anti").isEmpty,
+      "a seen url's bucket has no sketch row")
+    val misses = CrawlRound.probeSeen(seen, urlSeen, p).filter(!col("might_seen"))
+      .select("canon_url").collect().map(_.getString(0))
+    assert(misses.isEmpty, s"sketch false negatives: ${misses.take(5).mkString(", ")}")
+  }
+
+  /** Catalog whose round-1 commit wedges UNINTERRUPTIBLY until `release` —
+    * so only the poison flag (not the quiesce interrupt) can stop
+    * publication. The loop's round-1 pipelined handoff (the as-of seen-chain
+    * read right after commit submission) is held until the commit thread is
+    * provably inside the wedge, and with `plantFailure` then throws there. */
+  private class WedgedCommitCatalog(inner: StateCatalog, plantFailure: Boolean)
+      extends StateCatalog {
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val attempted = new java.util.concurrent.CountDownLatch(1)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    override def latestRound = inner.latestRound
+    override def load(spark: org.apache.spark.sql.SparkSession, table: String,
+        atRound: Option[Int]) = {
+      if (table == "url_seen_exact" && atRound.contains(0)) {
+        assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "commit thread never entered the wedge")
+        if (plantFailure) throw new RuntimeException("planted loop failure")
+      }
+      inner.load(spark, table, atRound)
+    }
+    override def commit(round: Int, tables: Map[String, org.apache.spark.sql.DataFrame],
+        metrics: => Map[String, Long],
+        appends: Map[String, org.apache.spark.sql.DataFrame],
+        abort: () => Boolean) = {
+      if (round == 1) {
+        // freeze the frames while the loop still pins their caches: the
+        // abandonment path unpersists the originals, and these tests want
+        // nothing BUT the abort gates (not a recompute crash over released
+        // caches) to be able to stop publication
+        val fTables = tables.map { case (k, df) => k -> df.localCheckpoint(true) }
+        val fAppends = appends.map { case (k, df) => k -> df.localCheckpoint(true) }
+        entered.countDown()
+        var done = false
+        while (!done) try { release.await(); done = true }
+        catch { case _: InterruptedException => } // swallow the quiesce interrupt
+        try inner.commit(round, fTables, metrics, fAppends, abort)
+        catch { case t: Throwable => failure.set(t); throw t }
+        finally attempted.countDown()
+      } else inner.commit(round, tables, metrics, appends, abort)
+    }
+    override def metricsOf(round: Int) = inner.metricsOf(round)
+  }
+
+  /** Runs a 3-round crawl whose round-1 commit wedges, expects runRounds to
+    * throw, then releases the wedge and asserts the abandoned commit refused
+    * to publish round 1. Returns the loop's exception. The call is guarded
+    * by a 120 s await, so a loop that waits forever fails instead of hangs. */
+  private def crawlAbandoningRound1(plantFailure: Boolean): Throwable = {
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = tmp()
+    val uni = FixtureGen.Universe(500)
+    val pages = spark.range(500).map(p => uni.pageRow(p)).toDF()
+    val robots = (0 until uni.nHosts).flatMap(i => uni.robotsBody(i).map(b => (uni.host(i), b)))
+      .toDF("host", "robots_body")
+    val inner = new HadoopSnapshotCatalog(dir)
+    val catalog = new WedgedCommitCatalog(inner, plantFailure)
+    val c = cfg.copy(commitQuiesceTimeoutSec = 2) // pipelined by default
+    Crawl.bootstrap(spark, catalog, pages, robots, uni.seeds(8), c)
+    val run = Future(scala.util.Try(Crawl.runRounds(spark, catalog, c, 3)))(ExecutionContext.global)
+    val thrown = try Await.result(run, 120.seconds).failed
+      .getOrElse(fail("runRounds returned although round 1's commit never settled"))
+    finally catalog.release.countDown()
+    // the abandoned thread resumes, runs the real commit, and must abort at
+    // an abort-thunk gate BEFORE the manifest rename (here the pre-write
+    // poll — abort() is already true when the wedge releases; the frozen
+    // frames rule out a recompute crash masquerading as the gate)
+    assert(catalog.attempted.await(120, java.util.concurrent.TimeUnit.SECONDS),
+      "abandoned commit thread never finished its attempt")
+    assert(catalog.failure.get.isInstanceOf[IllegalStateException] &&
+        catalog.failure.get.getMessage.contains("aborted by caller"),
+      s"expected an abort-gate refusal, got: ${catalog.failure.get}")
+    assert(!java.nio.file.Files.exists(
+        java.nio.file.Paths.get(dir, "_manifests", "manifest_000001.json")),
+      "abandoned commit published round 1's manifest after the caller saw the failure")
+    assert(inner.latestRound.contains(0), "catalog advanced past the bootstrap snapshot")
+    thrown
+  }
 
   test("three rounds end-to-end: fetches happen, text parity is exact") {
     val (catalog, results, _) = runCrawl(tmp(), 1000, 8, 3)
@@ -281,7 +376,7 @@ class CrawlSpec extends AnyFunSuite {
     val bytes = catA.load(spark, "url_seen").get
       .select("sketch").head().getAs[Array[Byte]](0)
     val bb = java.nio.ByteBuffer.wrap(bytes); bb.getInt(); bb.getInt()
-    assert(bb.getInt() > Crawl.bloomGeometry(16, cfg.bloomFpp)._1,
+    assert(bb.getInt() > graft.sketch.BloomFilter.geometry(16, cfg.bloomFpp)._1,
       "committed sketch geometry never grew")
     // resume inherits the resized geometry (a cfg-sized delta would fail to
     // OR-merge): two more rounds on catalog A must not throw and stay green
@@ -412,44 +507,7 @@ class CrawlSpec extends AnyFunSuite {
     val frontier = catalog.load(spark, "frontier").get
     assert(frontier.join(seen, Seq("canon_url"), "left_anti").count() == 0)
     // every seen url is positive in its partition's sketch
-    val sketches = Crawl.loadSketches(spark, catalog)
-    val urls = seen.collect().map(_.getString(0))
-    urls.foreach { u =>
-      val pid = KeyHash.pidOf(u, cfg.numPartitions)
-      assert(sketches.contains(pid) && sketches(pid).mightContain(KeyHash.of(u)),
-        s"sketch false negative for $u (pid $pid)")
-    }
-  }
-
-  test("map-side sketch delivery: fetch_log ≡ broadcast tier; driver holds zero sketch state") {
-    import spark.implicits._
-    val (catA, _, _) = runCrawl(tmp(), 800, 6, 3)
-    // same fixture, map-side tier — keep the state handle to prove the
-    // driver never materializes a sketch map (open or across rounds)
-    val cM = cfg.copy(sketchDelivery = "mapside")
-    val uni = FixtureGen.Universe(800)
-    val pages = spark.range(800).map(p => uni.pageRow(p)).toDF()
-    val v2 = spark.range(800).filter(p => uni.hasSecondVersion(p)).map(p => uni.pageRowV2(p)).toDF()
-    val robots = (0 until uni.nHosts).flatMap(i => uni.robotsBody(i).map(b => (uni.host(i), b)))
-      .toDF("host", "robots_body")
-    val catB = new HadoopSnapshotCatalog(tmp())
-    Crawl.bootstrap(spark, catB, pages.unionByName(v2), robots, uni.seeds(6), cM)
-    val st = Crawl.openState(spark, catB, cM)
-    try {
-      val resB = Crawl.runRounds(spark, catB, cM, 3, st)
-      assert(resB.head.fetched > 0)
-      assert(st.sketches.isEmpty, "map-side tier must never hold sketch bytes on the driver")
-    } finally st.close()
-    val proj = Seq("fetch_seq", "canon_url", "status", "scheduled_offset_ms", "text_sha256")
-    val a = Crawl.fullFetchLog(spark, catA).orderBy("fetch_seq").select(proj.map(col): _*).collect()
-    val b = Crawl.fullFetchLog(spark, catB).orderBy("fetch_seq").select(proj.map(col): _*).collect()
-    assert(a.length == b.length && a.sameElements(b),
-      "map-side and broadcast sketch delivery must produce identical crawl order")
-    // the committed seen state agrees too
-    val seenA = catA.load(spark, "url_seen_exact").get.select("canon_url")
-    val seenB = catB.load(spark, "url_seen_exact").get.select("canon_url")
-    assert(seenA.exceptAll(seenB).isEmpty && seenB.exceptAll(seenA).isEmpty,
-      "URL-seen sets diverge between delivery tiers")
+    assertSketchesCoverSeen(catalog, cfg.numPartitions)
   }
 
   test("pipelined commit ≡ synchronous loop ≡ checkpoint hop: tables, metrics, drain") {
@@ -512,76 +570,17 @@ class CrawlSpec extends AnyFunSuite {
   }
 
   test("abandoned in-flight commit never publishes its manifest (quiesce poison)") {
-    import spark.implicits._
-    val dir = tmp()
-    val uni = FixtureGen.Universe(500)
-    val pages = spark.range(500).map(p => uni.pageRow(p)).toDF()
-    val robots = (0 until uni.nHosts).flatMap(i => uni.robotsBody(i).map(b => (uni.host(i), b)))
-      .toDF("host", "robots_body")
-    val inner = new HadoopSnapshotCatalog(dir)
-    // Wedges round 1's commit UNINTERRUPTIBLY until `releaseWedge` — so only
-    // the poison flag (not the quiesce interrupt) can stop publication — and
-    // plants a failure into the loop thread's pipelined handoff (the as-of
-    // seen-chain read that immediately follows commit submission).
-    val entered = new java.util.concurrent.CountDownLatch(1)
-    val releaseWedge = new java.util.concurrent.CountDownLatch(1)
-    val attempted = new java.util.concurrent.CountDownLatch(1)
-    val commitFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val catalog = new StateCatalog {
-      override def latestRound = inner.latestRound
-      override def load(spark: org.apache.spark.sql.SparkSession, table: String,
-          atRound: Option[Int]) = {
-        if (table == "url_seen_exact" && atRound.contains(0)) {
-          // only the round-1 pipelined handoff reads this as-of frame; wait
-          // for the commit thread to be provably inside the wedge first
-          assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS),
-            "commit thread never entered the wedge")
-          throw new RuntimeException("planted loop failure")
-        }
-        inner.load(spark, table, atRound)
-      }
-      override def commit(round: Int, tables: Map[String, org.apache.spark.sql.DataFrame],
-          metrics: => Map[String, Long],
-          appends: Map[String, org.apache.spark.sql.DataFrame],
-          abort: () => Boolean) = {
-        if (round == 1) {
-          // freeze the frames while the loop still pins their caches: the
-          // abandonment path unpersists the originals, and this test wants
-          // nothing BUT the abort gates (not a recompute crash over
-          // released caches) to be able to stop publication
-          val fTables = tables.map { case (k, df) => k -> df.localCheckpoint(true) }
-          val fAppends = appends.map { case (k, df) => k -> df.localCheckpoint(true) }
-          entered.countDown()
-          var done = false
-          while (!done) try { releaseWedge.await(); done = true }
-          catch { case _: InterruptedException => } // swallow the quiesce interrupt
-          try inner.commit(round, fTables, metrics, fAppends, abort)
-          catch { case t: Throwable => commitFailure.set(t); throw t }
-          finally attempted.countDown()
-        } else inner.commit(round, tables, metrics, appends, abort)
-      }
-      override def metricsOf(round: Int) = inner.metricsOf(round)
-    }
-    val c = cfg.copy(commitQuiesceTimeoutSec = 2) // pipelined by default
-    Crawl.bootstrap(spark, catalog, pages, robots, uni.seeds(8), c)
-    val thrown = try intercept[RuntimeException] {
-      Crawl.runRounds(spark, catalog, c, 3)
-    } finally releaseWedge.countDown()
     // the PRIMARY exception surfaces — the quiesce timeout did not mask it
-    assert(thrown.getMessage == "planted loop failure")
-    // the abandoned thread resumes, runs the real commit, and must abort at
-    // an abort-thunk gate BEFORE the manifest rename (here the pre-write
-    // poll — abort() is already true when the wedge releases; the frozen
-    // frames rule out a recompute crash masquerading as the gate)
-    assert(attempted.await(120, java.util.concurrent.TimeUnit.SECONDS),
-      "abandoned commit thread never finished its attempt")
-    assert(commitFailure.get.isInstanceOf[IllegalStateException] &&
-        commitFailure.get.getMessage.contains("aborted by caller"),
-      s"expected an abort-gate refusal, got: ${commitFailure.get}")
-    assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "_manifests", "manifest_000001.json")),
-      "abandoned commit published round 1's manifest after the caller saw the failure")
-    assert(inner.latestRound.contains(0), "catalog advanced past the bootstrap snapshot")
+    val thrown = crawlAbandoningRound1(plantFailure = true)
+    assert(thrown.getMessage == "planted loop failure", s"unexpected failure: $thrown")
+  }
+
+  test("wedged commit, no loop failure: the bounded barrier fails the crawl, round 1 never publishes") {
+    // nothing else goes wrong: the loop reaches round 2's barrier and must
+    // give up on round 1's commit after commitQuiesceTimeoutSec, naming it
+    val thrown = crawlAbandoningRound1(plantFailure = false)
+    assert(thrown.isInstanceOf[java.util.concurrent.TimeoutException] &&
+      thrown.getMessage.contains("commit r1"), s"unexpected failure: $thrown")
   }
 
   test("determinism: identical fetch_log across two full runs") {
@@ -659,10 +658,10 @@ class CrawlSpec extends AnyFunSuite {
     assert(rr.changed >= changedFetched.size, s"changed ${rr.changed} < ${changedFetched.size}")
     assert(rr.vanished >= 1)
     // the vanished key's fingerprint is DELETED from its cuckoo sketch
-    val sketches = Crawl.loadSketches(spark, catalog)
     val vu = uni.canonUrl(vanishP)
-    assert(!sketches(KeyHash.pidOf(vu, c2.numPartitions)).mightContain(KeyHash.of(vu)),
-      "cuckoo sketch must drop a vanished key (fp collision is ~2^-16 here)")
+    val vuMight = CrawlRound.probeSeen(Seq(vu).toDF("canon_url"),
+      catalog.load(spark, "url_seen").get, c2.numPartitions).head().getAs[Boolean]("might_seen")
+    assert(!vuMight, "cuckoo sketch must drop a vanished key (fp collision is ~2^-16 here)")
     // and it is gone from the exact store
     assert(catalog.load(spark, "url_seen_exact").get
       .filter(col("canon_url") === vu).count() == 0)
@@ -758,8 +757,9 @@ class CrawlSpec extends AnyFunSuite {
       .withColumn("rules", graft.functions.CrawlUdfs.robots_parse(col("robots_body")))
       .select("host", "rules")
     val c = cfg.copy(rankPriority = true, roundBudget = 4, numPartitions = 4)
-    val out = CrawlRound.run(spark, frontier, Seq.empty[String].toDF("canon_url"),
-      SketchBroadcast(Map.empty), pages, robots, c, round = 1, fetchSeqBase = 0L,
+    val out = CrawlRound.run(frontier, Seq.empty[String].toDF("canon_url"),
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.urlSeen),
+      pages, robots, c, round = 1, fetchSeqBase = 0L,
       robotsSource = None, hostRanks = Some(Seq(("a.test", 0)).toDF("host", "rank_bucket")))
     val got = out.fetchLog.select("canon_url", "fetch_seq").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -810,12 +810,7 @@ class CrawlSpec extends AnyFunSuite {
     val c2 = cfg.copy(filterKind = "cuckoo")
     val (catalog, results, _) = runCrawl(tmp(), 500, 4, 2, c2)
     assert(results.head.fetched > 0)
-    val sketches = Crawl.loadSketches(spark, catalog)
-    val seen = catalog.load(spark, "url_seen_exact").get.collect().map(_.getString(0))
-    seen.foreach { u =>
-      val pid = KeyHash.pidOf(u, c2.numPartitions)
-      assert(sketches(pid).mightContain(KeyHash.of(u)), s"cuckoo false negative for $u")
-    }
+    assertSketchesCoverSeen(catalog, c2.numPartitions)
   }
 
   test("catalog maintenance: compact + expire + vacuum keep state; resumed crawl identical") {

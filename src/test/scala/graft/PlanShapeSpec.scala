@@ -92,28 +92,6 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
 
-  test("sketch probe is a native codegen'd expression, not a UDF boundary") {
-    val bf = graft.sketch.BloomFilter.create(100, 0.01)
-    bf.insert(graft.sketch.KeyHash.of("https://a.com/x"))
-    val sketches: Map[Int, graft.sketch.SeenFilter] =
-      (0 until 8).map(_ -> (new graft.sketch.SeenFilter.OfBloom(bf): graft.sketch.SeenFilter)).toMap
-    val b = spark.sparkContext.broadcast(sketches)
-    // non-literal source — over literals the expression CONSTANT-FOLDS into
-    // the local relation (which itself proves it is a native expression; a
-    // UDF never folds)
-    val df = spark.range(2)
-      .select(when(col("id") === 0, "https://a.com/x").otherwise("https://b.com/y").as("canon_url"))
-      .withColumn("might", graft.functions.SketchExpressions.sketch_might_contain(
-        col("canon_url"), b, 8))
-    val plan = physical(df)
-    assert(plan.contains("sketch_might_contain"), plan)
-    assert(!plan.contains("UDF("), s"probe must not be a black-box UDF: $plan")
-    assert(plan.contains("*(1)"), s"probe must stay in whole-stage codegen: $plan")
-    // and it actually probes: the inserted key is positive
-    val out = df.collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-    assert(out("https://a.com/x"))
-  }
-
   test("vector top-k is a bounded aggregate: no per-query window materialization") {
     import spark.implicits._
     val vecs = spark.range(200).map { i =>
