@@ -40,12 +40,7 @@ object Bench {
     // cuckoo tier throws loudly). Default 2^16 fits the 240k corpus at P=32;
     // bigger corpora / smaller P raise it via env.
     bloomExpectedPerPartition =
-      sys.env.getOrElse("SPARK_GRAFT_BLOOM_EXPECTED", (1 << 16).toString).toLong,
-    commitPipelining = sys.env.getOrElse("SPARK_GRAFT_PIPELINE", "on") != "off",
-    // hop tier for the pipelined cross-round frames: "cache" (default) or
-    // "checkpoint" (cluster-durable) — lets the scaling bench price the
-    // durable tier's extra write+read against the cache hop
-    pipelineHop = sys.env.getOrElse("SPARK_GRAFT_PIPELINE_HOP", "cache"))
+      sys.env.getOrElse("SPARK_GRAFT_BLOOM_EXPECTED", (1 << 16).toString).toLong)
 
   /** Bootstrap `catalogDir` from `corpusDir` (ingest: canonicalize + seed). */
   def bootstrapCatalog(spark: SparkSession, corpusDir: String, catalogDir: String,
@@ -354,7 +349,7 @@ object ScalingBench {
          |
          |Workload: batch-iterative crawl, FixtureGen corpus on tmpfs
          |(textScale=$textScale), $rounds rounds per run, hostBudget=${Bench.benchCfg(head.parts).hostBudget},
-         |map-side sketch probe, commit pipelining ${Bench.benchCfg(head.parts).commitPipelining},
+         |map-side sketch probe, commit N overlapped with round N+1 (one checkpoint hop),
          |JVM heap $heap. Within a size, the partition count P (table below)
          |is IDENTICAL at both parallelism levels of a pairing — same plan,
          |task set and sketch math; only executor-core count varies

@@ -52,12 +52,12 @@ object SparkEntry {
     // GRAFT_CRAWL_TIMING, warm JVM): ~2.7 s fixture-gen + bootstrap + final
     // aggregate, then per round ~1.8 s run+rank (compute — ~15 toy-sized
     // Spark jobs, pure scheduler overhead at 8-40 fetches/round) + the
-    // commit. PIPELINED commits: the next round's compute overlaps the
-    // commit wall (~0.5 s/round back). Committed bytes are identical in both
-    // commit modes (CrawlSpec pipelined≡sync parity), so the golden oracle
-    // does not depend on the pick.
+    // commit; the next round's compute overlaps the commit wall
+    // (~0.5 s/round back). Committed bytes equal those of a crawl resumed
+    // after every round (CrawlSpec parity), so the golden oracle does not
+    // depend on the overlap.
     val cfg = CrawlConfig(numPartitions = 8, hostBudget = 8, roundBudget = 512,
-      bloomExpectedPerPartition = 1 << 12, commitPipelining = true)
+      bloomExpectedPerPartition = 1 << 12)
     val catalog = new HadoopSnapshotCatalog(s"$dir/catalog")
     val pages = spark.read.parquet(s"$dir/pages.parquet")
     val robots = spark.read.parquet(s"$dir/robots.parquet")
@@ -950,8 +950,9 @@ object SparkEntry {
       // sequence-packing manifest (concat-and-chunk): docs concatenated in
       // doc_id order, cut into 64-token training sequences; one row per
       // (chunk, doc) span. The global token offset is the two-phase prefix
-      // sum (Ranks.globalCumsumPinned) — no single-partition window.
-      graft.operators.SeqPack.packManifest(t(s, d, "documents"), seqLen = 64)
+      // sum (Ranks.globalCumsumPinned) — no single-partition window. The
+      // pin is left to the harness's between-query clearCache.
+      graft.operators.SeqPack.packManifest(t(s, d, "documents"), seqLen = 64)._1
         .orderBy(col("chunk_id"), col("doc_id"))
     }),
 

@@ -163,8 +163,11 @@ object Crawl {
     *     exchange-free instead of re-shuffling the full corpus per round.
     *     On a real cluster this is an Iceberg bucketed-table read; in cache
     *     form it is the same SPJ contract. `robots_rules` likewise.
+    *   - commit N runs on a background thread under round N+1's compute;
+    *     round N+1 reads round N's state through one in-memory handoff
+    *     ([[hop]]), never through the catalog.
     *   - the URL-seen sketch never visits the driver: each round probes
-    *     the previous round's persisted `url_seen` frame map-side
+    *     the previous round's handed-off `url_seen` frame map-side
     *     ([[CrawlRound.probeSeen]]), so no round starts with a catalog read
     *     or a collect just to deliver it.
     *   - metrics are Observations riding the commit writes (see
@@ -230,17 +233,29 @@ object Crawl {
     try runRounds(spark, catalog, cfg, maxRounds, st) finally st.close()
   }
 
-  /** Frame-lifetime rule of the pipelined loop: round N's caches back (a)
-    * commit N's writes and (b) round N+1's OUTPUT plans (frontierNext_{N+1}
-    * is built over frontierNext_N, etc.), which materialize no later than
-    * commit N+1. So frames_N retire exactly when commit N+1 settles —
-    * freeing them earlier would silently recompute plans whose inputs are
-    * gone (and re-sample the rank's range boundaries: a correctness trap,
-    * not just a slowdown). */
+  /** Frame-lifetime rule of the loop: round N's caches back commit N's
+    * writes and its handoff (the [[hop]]ped copies of its cross-round
+    * frames); round N+1's plans read only those copies and parquet, and
+    * materialize no later than commit N+1. So both retire together exactly
+    * when commit N+1 settles — freeing them earlier would fail round N+1's
+    * plans on a released block (a cached frame would instead silently
+    * recompute and re-sample the rank's range boundaries: a correctness
+    * trap, not just a slowdown). */
   private final case class InFlight(
       round: Int,
       fut: scala.concurrent.Future[CrawlRound.RoundResult],
-      frames: Seq[DataFrame])
+      frames: Iterable[DataFrame])
+
+  /** The cross-round handoff of one frame: forced on the calling thread,
+    * lineage cut by [[graft.operators.Ranks.truncate]] (reliable checkpoint
+    * under the session's checkpoint dir, local checkpoint otherwise). A
+    * round's plan embeds its input frame several times over (eligibility,
+    * scheduled anti-join, discovery union), so chaining raw DataFrames
+    * grows the LOGICAL tree exponentially in round count — measured as a
+    * driver OOM just stringifying a 3-round tree. The hop plays the role an
+    * Iceberg table boundary plays on a real cluster. */
+  private[crawl] def hop(df: DataFrame): DataFrame =
+    graft.operators.Ranks.truncate(df, eager = true)
 
   def runRounds(
       spark: SparkSession,
@@ -256,29 +271,6 @@ object Crawl {
     val robotsSource = state.robotsSource
     val results = scala.collection.mutable.ArrayBuffer[CrawlRound.RoundResult]()
     val timing = sys.env.contains("GRAFT_CRAWL_TIMING")
-
-    // Cross-round frame hop (see CrawlConfig.pipelineHop). Both tiers force
-    // the frame on the calling thread (df.rdd materializes the AQE stages;
-    // checkpoint() is eager by design), so the overlap shape is identical —
-    // only the durability of the handed-off bytes differs.
-    if (cfg.pipelineHop != "checkpoint" && cfg.pipelineHop != "cache")
-      throw new IllegalArgumentException(s"unknown pipelineHop ${cfg.pipelineHop}")
-    val hopCheckpoint = cfg.commitPipelining && cfg.pipelineHop == "checkpoint"
-    if (hopCheckpoint) {
-      val dir =
-        if (cfg.checkpointDir.nonEmpty) cfg.checkpointDir
-        else java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
-      // idempotent: setCheckpointDir creates a fresh UUID subdir per call,
-      // so two crawls sharing a session never collide. Checkpoint files
-      // retire with the RDDs when spark.cleaner.referenceTracking
-      // .cleanCheckpoints is on; otherwise one narrow frame-set per round
-      // accumulates (bounded by crawl length, GC'd out-of-band — the same
-      // lifecycle as Iceberg's expired-snapshot files).
-      spark.sparkContext.setCheckpointDir(dir)
-    }
-    def hop(df: DataFrame): DataFrame =
-      if (hopCheckpoint) df.checkpoint() // eager + RELIABLE: lineage ends at durable files
-      else spark.createDataFrame(df.rdd, df.schema) // flat LogicalRDD over the pinned cache
 
     // Commit executor: ONE dedicated daemon thread. Commits must be ordered
     // (manifest N settles before commit N+1 starts — N+1's append chain
@@ -297,9 +289,10 @@ object Crawl {
     // observed the crawl as failed.
     val commitAbandoned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-    // Cross-round state handed off IN MEMORY: under pipelining the catalog
-    // lags one round, so the loop never reads a round's own tables back.
-    // Initial values come from the settled catalog — resume is unchanged.
+    // Cross-round state handed off IN MEMORY: the catalog lags one round
+    // (commit N runs under round N+1), so the loop never reads a round's own
+    // tables back. Initial values come from the settled catalog — resume is
+    // unchanged.
     var frontier = catalog.load(spark, "frontier").get
     var seenExact = catalog.load(spark, "url_seen_exact").get
     var urlSeenPrev = catalog.load(spark, "url_seen")
@@ -352,7 +345,7 @@ object Crawl {
     }
 
     var inFlight: Option[InFlight] = None
-    var retired: Seq[DataFrame] = Nil // frames of the last SETTLED round
+    var retired: Iterable[DataFrame] = Nil // frames of the last SETTLED round
     var lastRes: Option[CrawlRound.RoundResult] = None
 
     // Every frame the loop has pinned and not yet released. Cleanup runs in
@@ -361,7 +354,7 @@ object Crawl {
     // round's caches AND the half-built round's — not just the happy path's.
     val live = scala.collection.mutable.LinkedHashSet[DataFrame]()
     def release(dfs: Iterable[DataFrame]): Unit = dfs.foreach { df =>
-      scala.util.Try(df.unpersist()); live -= df
+      scala.util.Try(graft.operators.Ranks.release(df)); live -= df
     }
     staticDelays.foreach(live += _) // crawl-lifetime pin, released with the rest
 
@@ -399,9 +392,10 @@ object Crawl {
           // adaptive sizing: consult the last settled round's lineage. The
           // check only SCHEDULES the rebuild — sizing happens at rebuild
           // time from the actual exact-store count, because here the
-          // settled counters lag the loop by up to two rounds (pipelined
-          // commits) and a target derived from them births the new sketch
-          // already saturated under geometric frontier growth.
+          // settled counters lag the loop by up to two rounds (round N's
+          // result settles at round N+1's barrier, after this check) and a
+          // target derived from them births the new sketch already
+          // saturated under geometric frontier growth.
           if (adaptive) lastRes.foreach { r =>
             val tested = r.discovered - r.dedupedExact // bloom-tested negatives
             val fp = r.enqueued - r.dedupedBloomDefinite // verified-new "might"s
@@ -438,7 +432,7 @@ object Crawl {
           // rankPriority: distinct + pin the accumulated edge set (the K
           // unrolled LinkRank iterations scan it 2K+1 times), rank it, and
           // hand the bucketed tiers to the round. The signal covers rounds
-          // < this one in BOTH commit modes (parity). Lifecycle: the pin
+          // < this one, as it does on resume (parity). Lifecycle: the pin
           // backs this round's cached frames (priority embeds rank_bucket),
           // so it retires with them when commit round+1 settles.
           val edgesPin = hostEdges.map { e => val p = e.distinct().persist(); live += p; p }
@@ -548,72 +542,41 @@ object Crawl {
               if (r == null) r = CrawlRound.result(thisOut)
               r
             }(commitEc)
-            inFlight = Some(InFlight(round, fut,
-              out.persisted ++ Seq(out.frontierNext, sketchNext) ++ edgesPin.toSeq))
+            // round N's frames: its caches, then the hopped copies below
+            val frames = scala.collection.mutable.ArrayBuffer[DataFrame](
+              out.persisted ++ Seq(out.frontierNext, sketchNext) ++ edgesPin.toSeq: _*)
+            inFlight = Some(InFlight(round, fut, frames))
 
-            if (cfg.commitPipelining) {
-              // ---- hand off state for round+1 IN MEMORY: cached output
-              // frames plus as-of reads anchored on SETTLED manifests
-              // (≤ round-1). Chains re-anchor on parquet every round, so no
-              // handed-off plan ever references caches older than one round
-              // (see frame-lifetime rule above).
-              //
-              // The cached frames cross the round boundary through an RDD hop
-              // (flat LogicalRDD over the pinned cache): a round's plan embeds
-              // its input frame several times over (eligibility, scheduled
-              // anti-join, discovery union), so chaining raw DataFrames grows
-              // the LOGICAL tree exponentially in round count — measured as a
-              // driver OOM just stringifying a 3-round tree. The hop plays the
-              // role an Iceberg table boundary plays on a real cluster; the
-              // narrow frontier/sketch rows make the Row re-encode cost noise.
-              //
-              // DURABILITY (cluster deployment): the default "cache" hop's
-              // lineage is the pinned cache — MEMORY_AND_DISK survives memory
-              // pressure but NOT executor loss; a lost block would silently
-              // recompute upstream plans whose range boundaries re-sample
-              // (wrong fetch_seq), the exact trap the cache pins against.
-              // Only local mode makes block loss impossible. On a lossy
-              // cluster run pipelineHop = "checkpoint" (reliable-checkpoint
-              // hop — same 1-deep overlap, lineage truncated at durable
-              // files, parity-tested against both other modes) or
-              // commitPipelining = false (the fully synchronous durable
-              // branch below — at most one commit wall per round of extra
-              // latency).
-              frontier = hop(out.frontierNext)
+            // ---- hand off state for round+1 IN MEMORY, overlapping commit
+            // N: hopped frames plus as-of reads anchored on SETTLED
+            // manifests (≤ round-1). Chains re-anchor on parquet every round,
+            // so no handed-off plan reaches past one hop. Skipped after this
+            // call's last round — nothing would read it (a later call
+            // resumes from the catalog).
+            if (round + 1 < startRound + maxRounds) {
+              def handOff(df: DataFrame): DataFrame = {
+                val h = hop(df); live += h; frames += h; h
+              }
+              frontier = handOff(out.frontierNext)
               // newKeys is hopped too: seenExact_{N+1} embeds it, and ITS
               // plan embeds seenExact_N — an un-truncated chain recurses one
               // full round-plan per round (the linear cousin of the
-              // exponential frontier blowup above)
+              // exponential frontier blowup [[hop]] prevents)
               seenExact = catalog.load(spark, "url_seen_exact", Some(round - 1)).get
-                .unionByName(hop(out.newKeys))
-              urlSeenPrev = Some(hop(sketchNext))
-              if (cfg.robotsFetchInLoop)
-                robotsRules = out.robotsFetched match {
-                  case Some(rn) =>
-                    catalog.load(spark, "robots_rules", Some(round - 1)).get
-                      .unionByName(hop(rn))
-                  case None => catalog.load(spark, "robots_rules", Some(round - 1)).get
-                }
-              // host graph: settled delta chain (≤ round-1) + this round's
-              // hopped delta — identical to what sync mode reads back after
-              // its settle (deltas ≤ round)
-              out.hostEdgesDelta.foreach { d =>
-                hostEdges = Some(catalog.load(spark, "host_edges", Some(round - 1))
-                  .map(_.unionByName(hop(d))).getOrElse(hop(d)))
+                .unionByName(handOff(out.newKeys))
+              urlSeenPrev = Some(handOff(sketchNext))
+              if (cfg.robotsFetchInLoop) {
+                val settled = catalog.load(spark, "robots_rules", Some(round - 1)).get
+                robotsRules = out.robotsFetched.map(rn => settled.unionByName(handOff(rn)))
+                  .getOrElse(settled)
               }
-            } else {
-              // ---- durable handoff (synchronous mode): settle the commit
-              // just queued, then anchor EVERY cross-round frame on the
-              // committed parquet — a durable boundary each round, free of
-              // the cached-lineage caveat above (the commit already wrote
-              // these tables; the loads are lazy readers).
-              settle()
-              frontier = catalog.load(spark, "frontier").get
-              seenExact = catalog.load(spark, "url_seen_exact").get
-              urlSeenPrev = catalog.load(spark, "url_seen")
-              if (cfg.robotsFetchInLoop)
-                robotsRules = catalog.load(spark, "robots_rules").get
-              if (cfg.rankPriority) hostEdges = catalog.load(spark, "host_edges")
+              // host graph: settled delta chain (≤ round-1) + this round's
+              // hopped delta — the deltas ≤ round that a resume reads back
+              out.hostEdgesDelta.foreach { d =>
+                val h = handOff(d)
+                hostEdges = Some(catalog.load(spark, "host_edges", Some(round - 1))
+                  .map(_.unionByName(h)).getOrElse(h))
+              }
             }
             base += out.fetchedCount
             if (timing) System.err.println(
@@ -665,8 +628,9 @@ object Crawl {
             "primary exception propagates")
         case _ =>
       })
-      // release every cache the loop still pins — settled rounds' retired
-      // frames AND any half-built round's, whichever statement threw
+      // release every frame the loop still pins — settled rounds' retired
+      // caches and hopped copies AND any half-built round's, whichever
+      // statement threw
       release(live.toSeq)
     }
   }

@@ -71,7 +71,7 @@ object CrawlRound {
       persisted: Seq[DataFrame],
       // rows in `logged` (== the round's `fetched` metric), known on the
       // driver the moment run() returns: the rank's counts pass collects
-      // per-partition counts anyway. Lets the pipelined loop advance the
+      // per-partition counts anyway. Lets the loop advance the
       // fetch_seq base for round N+1 while round N's commit (where the
       // fetched Observation fires) is still in flight.
       fetchedCount: Long)

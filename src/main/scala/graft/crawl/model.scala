@@ -35,7 +35,19 @@ final case class Scheduled(
     scheduled_offset_ms: Long)
 
 /** Crawl configuration — the "politeness budget" under which ordering parity
-  * is defined (FIXTURES.md §F2). All knobs deterministic. */
+  * is defined (FIXTURES.md §F2). All knobs deterministic.
+  *
+  * No knob picks how round N's state reaches round N+1: there is one loop
+  * shape. Commit N (table writes + manifest) runs under round N+1's
+  * compute — depth exactly 1, commits strictly ordered, so a crash loses
+  * at most the one in-flight round and committed bytes equal those of a
+  * crawl resumed after every round. The cross-round frames hop through
+  * `Crawl.hop`, which truncates their lineage with a reliable checkpoint
+  * when the session has a checkpoint dir and a local checkpoint otherwise.
+  * Deployment: on a cluster, set `spark.checkpoint.dir` to shared storage
+  * (the catalog's fault domain), so the hop survives executor loss; a lost
+  * local-checkpoint block fails the round loudly, and recovery is resume
+  * from the last manifest. */
 final case class CrawlConfig(
     userAgent: String = "crawlerspark",
     maxDepth: Int = 6,
@@ -81,9 +93,9 @@ final case class CrawlConfig(
     // and survive the round budget first; the total order is preserved
     // (canon_url still ends the struct). The signal LAGS one round by
     // construction — round N ranks over links discovered through round N−1,
-    // identically in sync and pipelined modes (parity-tested). Committed
-    // fetch_log/frontier schemas are unchanged: rank_bucket lives only in
-    // the in-round frames.
+    // identically when the crawl resumes after every round (parity-tested).
+    // Committed fetch_log/frontier schemas are unchanged: rank_bucket lives
+    // only in the in-round frames.
     rankPriority: Boolean = false,
     rankIters: Int = 3,
     rankBuckets: Int = 4,
@@ -123,36 +135,6 @@ final case class CrawlConfig(
     // <loc>s that are not pages, so they simply miss the corpus join; the
     // flag is off by default (the golden fixtures pin seed-list-only runs).
     seedFromSitemaps: Boolean = false,
-    // Overlap round N's commit (table writes + manifest) with round N+1's
-    // compute: the commit is a fixed per-round cost (parquet writes, mostly
-    // I/O-bound — measured at ~half the round wall at 16 cores) that does
-    // not shrink with cores, so hiding it under the next round's compute is
-    // the single biggest Amdahl cut in the loop. Depth is exactly 1 and
-    // commit N must settle before commit N+1 starts (manifests are ordered,
-    // and the append-delta chain of N+1 anchors on N's manifest), so crash
-    // durability is unchanged: at most the one in-flight round is lost,
-    // same as the synchronous loop. Committed bytes are identical either
-    // way — the determinism/resume contract is mode-independent.
-    commitPipelining: Boolean = true,
-    // How pipelined mode's cross-round frames survive the round boundary:
-    //   "cache"      — flat LogicalRDD hop over the pinned cache (zero extra
-    //     I/O). Lineage bottoms out in executor blocks: MEMORY_AND_DISK
-    //     survives memory pressure but NOT executor loss, so this tier is a
-    //     LOCAL-MODE / reliable-store assumption (block loss would silently
-    //     recompute with re-sampled range boundaries — wrong fetch_seq).
-    //   "checkpoint" — reliable Dataset.checkpoint(): the handed-off frames
-    //     (frontier, new seen keys, sketch rows, in-loop robots delta) are
-    //     written to `checkpointDir` and re-read from there; lineage is
-    //     TRUNCATED at durable files, so executor loss recomputes nothing.
-    //     This is the cluster-durable pipelined tier: it keeps the 1-deep
-    //     commit overlap while restoring sync mode's durability, at the cost
-    //     of one extra write+read of the (narrow) cross-round frames.
-    pipelineHop: String = "cache", // "cache" | "checkpoint"
-    // Reliable-checkpoint root for pipelineHop = "checkpoint". On a cluster
-    // this MUST be shared storage (HDFS/S3 — same fault domain as the
-    // catalog); empty = a fresh local temp dir (sandbox/tests). Ignored by
-    // the cache tier.
-    checkpointDir: String = "",
     // Bound on EVERY wait for an in-flight commit: the loop's barrier
     // before the next commit, and the failure path's finally-block quiesce.
     // A commit that does not settle in time fails the loop (naming its

@@ -428,6 +428,11 @@ object Dedup {
    * (new×old and new×new; never old×old). ≡ the full pipeline over
    * old ∪ new restricted to pairs touching a new doc (spec-pinned,
    * bucketCap included — see [[incrementalCandidatePairs]]).
+   *
+   * Precondition, not checked: the `idCol` values of `oldDocs` and
+   * `newDocs` are disjoint. Verification joins shingles from old ∪ new by
+   * id, so an id on both sides yields duplicated or wrong pairs. The
+   * ingest caller assigns ids and owns this guarantee.
    */
   def incrementalNearDupPairs(
       oldDocs: DataFrame,

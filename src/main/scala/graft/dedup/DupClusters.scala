@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ranks
+
 /**
  * Duplicate-CLUSTER resolution: the step a real dedup pipeline runs after
  * the pair finders (minhash/simhash/embedding LSH emit near-dup PAIRS; the
@@ -79,28 +81,21 @@ object DupClusters {
     // Lineage MUST be truncated every iteration, not merely cached: each
     // step references the previous edge frame ~12× (sym unions + min joins),
     // so a persist-only loop hands the analyzer an O(12^k)-node logical
-    // tree — the driver dies planning long before any task runs. Reliable
-    // checkpoint when the session has a checkpoint dir (the cluster
-    // deployment — survives executor loss, same contract as the crawl's
-    // pipelineHop="checkpoint"); localCheckpoint otherwise (local/test).
-    // LAZY in both tiers: the checksum action right after is the first job
-    // and doubles as the forcing action — eager would submit a dedicated
-    // count() job per iteration just to force it, adding one driver barrier
-    // per round (the core-count-independent Amdahl term this loop pays;
-    // measured 1→4 efficiency moved with it). localCheckpoint materializes
-    // entirely inside that first job (truncation reuses its cached blocks);
-    // reliable checkpoint still runs Spark's separate write job afterwards —
-    // lazy saves the extra barrier, not the write.
-    val sc = pairs.sparkSession.sparkContext
-    def truncate(df: DataFrame): DataFrame =
-      if (sc.getCheckpointDir.isDefined) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-
-    val init = truncate(pairs
+    // tree — the driver dies planning long before any task runs.
+    // Ranks.truncate picks the tier (reliable checkpoint under a session
+    // checkpoint dir, localCheckpoint otherwise — the crawl hop's rule).
+    // LAZY: the checksum action right after is the first job and doubles as
+    // the forcing action — eager would submit a dedicated count() job per
+    // iteration just to force it, adding one driver barrier per round (the
+    // core-count-independent Amdahl term this loop pays; measured 1→4
+    // efficiency moved with it). localCheckpoint materializes entirely
+    // inside that first job; reliable checkpoint still runs Spark's separate
+    // write job afterwards — lazy saves the extra barrier, not the write.
+    val init = Ranks.truncate(pairs
       .select(greatest(col(aCol), col(bCol)).as(Hi),
         least(col(aCol), col(bCol)).as(Lo))
       .where(col(Hi) =!= col(Lo))
-      .distinct())
+      .distinct(), eager = false)
 
     // (count, order-independent hash-xor) — equality certifies an identical
     // edge SET because every step already emits distinct oriented edges
@@ -116,9 +111,9 @@ object DupClusters {
     var it = 0
     while (!converged && it < maxIters) {
       it += 1
-      val next = truncate(smallStar(largeStar(edges)))
+      val next = Ranks.truncate(smallStar(largeStar(edges)), eager = false)
       val nextSum = checksum(next)
-      edges.unpersist() // release the previous hop's blocks
+      Ranks.release(edges) // the previous iteration's checkpoint blocks
       edges = next
       converged = nextSum == cksum
       cksum = nextSum
@@ -130,7 +125,7 @@ object DupClusters {
       .distinct()
       .persist()
     labels.count()
-    edges.unpersist()
+    Ranks.release(edges)
     labels
   }
 

@@ -34,7 +34,9 @@ final case class CurateConfig(
       * top-[[oovVocabSize]] unigrams. Runs after the row-local gates and
       * decontamination (they shrink the token stream it scans) and before
       * dedup (so gibberish can't become a cluster representative). None =
-      * off — the q54 oracle covers the gate-less composition. */
+      * off — the q54 oracle covers the gate-less composition. When on, a
+      * doc with no tokens (null text, for one) has no OOV rate and is
+      * DROPPED whatever the threshold; with the gate off it passes. */
     maxOovPermille: Option[Int] = None,
     oovVocabSize: Int = 4096)
 
@@ -163,7 +165,9 @@ object CuratePipeline {
 
     // opt-in OOV gate: two passes over the PINNED filtered frame (vocab
     // build = TakeOrdered + broadcast; per-doc tally = one aggregate), then
-    // a semi-join keep — all consumers read the pin, never re-annotate
+    // a semi-join keep — all consumers read the pin, never re-annotate.
+    // Token-less docs yield no stats row, so the semi-join drops them
+    // (documented on CurateConfig.maxOovPermille)
     val vocabGated = cfg.maxOovPermille.fold(filtered) { thr =>
       val keep = TextAnalysis.rareTokenStats(
           filtered, col("doc_id"), col("text"), cfg.oovVocabSize)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /**
@@ -29,6 +30,31 @@ import org.apache.spark.sql.functions._
  * partition works independently.
  */
 object Ranks {
+
+  /** Cuts `df`'s lineage, the rule every iterative loop here shares (the
+    * crawl's cross-round hop, eager; DupClusters' per-iteration edge set,
+    * lazy): a reliable `checkpoint` when the session has a checkpoint dir —
+    * a cluster deployment sets `spark.checkpoint.dir` to shared storage, so
+    * the frame survives executor loss — else a `localCheckpoint`, whose
+    * lost block fails the job loudly rather than silently recomputing a
+    * plan whose inputs are gone. Release the result with [[release]]. */
+  def truncate(df: DataFrame, eager: Boolean): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
+    else df.localCheckpoint(eager)
+
+  /** Unpersists `df` and, when its plan is a bare `LogicalRDD` (a
+    * [[truncate]]d frame), the RDD behind it: `Dataset.unpersist` drops
+    * cache-manager entries only, so alone it leaves a local checkpoint's
+    * blocks pinned for the life of the session. A reliable checkpoint's
+    * files stay (Spark deletes them only under
+    * `spark.cleaner.referenceTracking.cleanCheckpoints`). */
+  def release(df: DataFrame): Unit = {
+    df.unpersist()
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+  }
 
   /** Append `seqCol` = 0-based global rank by `order` (must be a total
     * order — end it with a unique key). Runs the sorted input twice (counts
@@ -61,9 +87,9 @@ object Ranks {
   /** [[globalSeqCached]] plus the TOTAL row count — the counts pass already
     * collects per-partition counts to the driver for the prefix sum, so the
     * total is free. The crawl loop uses it to advance `fetch_seq` base
-    * across rounds without waiting on commit-time Observations (the
-    * pipelined loop hands state to round N+1 while round N's commit — where
-    * the observations fire — is still in flight). */
+    * across rounds without waiting on commit-time Observations (the loop
+    * hands state to round N+1 while round N's commit — where the
+    * observations fire — is still in flight). */
   def globalSeqCachedWithCount(
       df: DataFrame,
       seqCol: String,

@@ -28,12 +28,16 @@ import graft.text.TextAnalysis
  */
 object SeqPack {
 
+  /** Returns (manifest, pin): the manifest reads the token offsets through
+    * `pin`, the cache [[Ranks.globalCumsumPinned]] took. Consume the
+    * manifest, then unpersist `pin` (unpersisting the manifest itself
+    * releases nothing — it is a different plan). */
   def packManifest(
       docs: DataFrame,
       seqLen: Int,
       idCol: String = "doc_id",
       textCol: String = "text",
-      numPartitions: Int = 32): DataFrame = {
+      numPartitions: Int = 32): (DataFrame, DataFrame) = {
     require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
     val toks = docs
       .select(col(idCol), TextAnalysis.wsTokenCount(col(textCol)).as("n_toks_doc"))
@@ -43,7 +47,7 @@ object SeqPack {
     val L = lit(seqLen.toLong)
     val first = expr(s"tok_off div ${seqLen}L")
     val last = expr(s"(tok_off + n_toks_doc - 1) div ${seqLen}L")
-    withOff
+    val manifest = withOff
       .withColumn("chunk_id", explode(sequence(first, last)))
       .select(
         col("chunk_id"),
@@ -51,5 +55,6 @@ object SeqPack {
         greatest(col("chunk_id") * L - col("tok_off"), lit(0L)).as("doc_from"),
         (least((col("chunk_id") + 1L) * L, col("tok_off") + col("n_toks_doc"))
           - greatest(col("chunk_id") * L, col("tok_off"))).as("n_toks"))
+    (manifest, withOff)
   }
 }

@@ -336,13 +336,14 @@ object Similarity {
   /** struct(dist, cell) of the nearest centroid — `least` over the k
     * (dist, cell) structs is the lexicographic argmin with ties to the
     * lowest cell id; entirely row-local (no shuffle, no join, codegen'd).
+    * Null when `qv` is null or not `dim` long (no distance is defined).
     * Declarative twin of [[nearestCellKernel]] — fine for small k, but the
     * expression tree grows as k×dim and falls out of codegen for the
     * corpus-scaled k a real IVF build uses (cells ≈ nVecs/256 ⇒ thousands). */
-  private def nearestCell(qv: Column, centroids: Array[Array[Long]]): Column =
-    least(centroids.zipWithIndex.map { case (c, j) =>
+  private def nearestCell(qv: Column, centroids: Array[Array[Long]], dim: Int): Column =
+    when(size(qv) === dim, least(centroids.zipWithIndex.map { case (c, j) =>
       struct(intSqDist(qv, c).as("dist"), lit(j).cast("int").as("cell"))
-    }: _*)
+    }: _*))
 
   /** Argmin result row of the kernel path (field names match the
     * declarative struct so both paths project identically). */
@@ -365,23 +366,25 @@ object Similarity {
     case other => other.toArray
   }
 
-  private def nearestCellKernel(qv: Column, centroids: Array[Array[Long]]): Column = {
+  private def nearestCellKernel(qv: Column, centroids: Array[Array[Long]], dim: Int): Column = {
     val cents = centroids // stable closure capture
     val f = udf((v: Seq[Long]) => {
-      val a = unwrapLongs(v)
-      var bc = 0
-      var bd = Long.MaxValue
-      var j = 0
-      while (j < cents.length) {
-        val cj = cents(j)
-        val n = math.min(cj.length, a.length)
-        var s = 0L
-        var i = 0
-        while (i < n) { val d = a(i) - cj(i); s += d * d; i += 1 }
-        if (s < bd) { bd = s; bc = j }
-        j += 1
+      if (v == null || v.length != dim) null // as the declarative twin
+      else {
+        val a = unwrapLongs(v)
+        var bc = 0
+        var bd = Long.MaxValue
+        var j = 0
+        while (j < cents.length) {
+          val cj = cents(j)
+          var s = 0L
+          var i = 0
+          while (i < dim) { val d = a(i) - cj(i); s += d * d; i += 1 }
+          if (s < bd) { bd = s; bc = j }
+          j += 1
+        }
+        CellDist(bd, bc)
       }
-      CellDist(bd, bc)
     })
     f(qv)
   }
@@ -408,7 +411,9 @@ object Similarity {
    * DuckDB oracle (unrolled CTEs; q61).
    *
    * Returns (centroids, assignment) with assignment = (idCol, cell:int,
-   * dist:long) under the final centroids.
+   * dist:long) under the final centroids. Vectors must be non-null and
+   * `dim` long: any other row gets a null cell and dist, and neither seeds
+   * nor moves a centroid.
    */
   def kmeansFit(
       corpus: DataFrame,
@@ -427,7 +432,7 @@ object Similarity {
     }
     val qvCol = if (preQuantized) col(vecCol) else quantize(col(vecCol))
     def near(c: Array[Array[Long]]): Column =
-      if (kernel) nearestCellKernel(col("qv"), c) else nearestCell(col("qv"), c)
+      if (kernel) nearestCellKernel(col("qv"), c, dim) else nearestCell(col("qv"), c, dim)
     val q = corpus.select(col(idCol), qvCol.as("qv"))
     // the iteration collects force q (iters+1) times: pin the quantized
     // scan for the loop, release before returning — the final assignment
@@ -436,13 +441,14 @@ object Similarity {
     q.persist()
     try {
       var cents: Array[Array[Long]] =
-        q.orderBy(col(idCol)).limit(k).collect()
+        q.where(size(col("qv")) === dim).orderBy(col(idCol)).limit(k).collect()
           .map(_.getSeq[Long](1).toArray)
       val vecsum = udaf(new VecSumAgg(dim),
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
       var it = 0
       while (it < iters) {
         val sums = q.select(near(cents).getField("cell").as("cell"), col("qv"))
+          .where(col("cell").isNotNull)
           .groupBy(col("cell")).agg(vecsum(col("qv")).as("sn"))
           .collect()
           .map(r => r.getInt(0) -> r.getSeq[Long](1).toArray).toMap

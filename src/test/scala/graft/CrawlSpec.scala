@@ -17,9 +17,9 @@ class CrawlSpec extends AnyFunSuite {
     ratePerSec = 2.0, burst = 4, numPartitions = 8,
     bloomExpectedPerPartition = 4096)
 
-  /** Build corpus+robots in memory, bootstrap a catalog, run K rounds. */
-  private def runCrawl(dir: String, nPages: Long, nSeeds: Int, rounds: Int,
-                       c: CrawlConfig = cfg): (StateCatalog, Seq[CrawlRound.RoundResult], FixtureGen.Universe) = {
+  /** Build corpus+robots in memory and bootstrap a catalog. */
+  private def bootstrapCrawl(dir: String, nPages: Long, nSeeds: Int,
+                             c: CrawlConfig): (StateCatalog, FixtureGen.Universe) = {
     import spark.implicits._
     val uni = FixtureGen.Universe(nPages)
     val pages = spark.range(nPages).map(p => uni.pageRow(p)).toDF()
@@ -28,8 +28,45 @@ class CrawlSpec extends AnyFunSuite {
       .toDF("host", "robots_body")
     val catalog = new HadoopSnapshotCatalog(dir)
     Crawl.bootstrap(spark, catalog, pages.unionByName(v2), robots, uni.seeds(nSeeds), c)
-    val results = Crawl.runRounds(spark, catalog, c, rounds)
+    (catalog, uni)
+  }
+
+  /** Bootstrap, then run K rounds in one `runRounds` call — or, with
+    * `perRound`, through the per-round reference [[roundByRound]]. */
+  private def runCrawl(dir: String, nPages: Long, nSeeds: Int, rounds: Int,
+                       c: CrawlConfig = cfg, perRound: Boolean = false)
+      : (StateCatalog, Seq[CrawlRound.RoundResult], FixtureGen.Universe) = {
+    val (catalog, uni) = bootstrapCrawl(dir, nPages, nSeeds, c)
+    val results =
+      if (perRound) roundByRound(dir, rounds, c) else Crawl.runRounds(spark, catalog, c, rounds)
     (catalog, results, uni)
+  }
+
+  /** The reference the in-memory handoff must reproduce: one
+    * `runRounds(maxRounds = 1)` call per round, each on a fresh catalog
+    * handle, so every cross-round frame is read back from committed parquet
+    * and no frame is ever hopped. Stops after a round without progress, as
+    * the loop does. */
+  private def roundByRound(dir: String, rounds: Int, c: CrawlConfig): Seq[CrawlRound.RoundResult] = {
+    val out = scala.collection.mutable.ArrayBuffer[CrawlRound.RoundResult]()
+    while (out.size < rounds && !out.lastOption.exists(r => r.fetched == 0 && r.robotsFetched == 0))
+      out ++= Crawl.runRounds(spark, new HadoopSnapshotCatalog(dir), c, 1)
+    out.toSeq
+  }
+
+  /** Runs `body` with `dir` as the session's checkpoint dir, so
+    * [[graft.operators.Ranks.truncate]] takes its reliable-checkpoint
+    * branch, and returns the number of checkpoint files written. The dir is
+    * unset afterwards (`setCheckpointDir(null)`), so later specs on the
+    * shared session keep the local branch. */
+  private def withCheckpointDir[T](dir: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    assert(sc.getCheckpointDir.isEmpty, "session already has a checkpoint dir")
+    sc.setCheckpointDir(dir)
+    val r = try body finally sc.setCheckpointDir(null)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try (r, walk.iterator().asScala.count(java.nio.file.Files.isRegularFile(_)))
+    finally walk.close() // the stream holds open directory handles
   }
 
   private def tmp(): String = Files.createTempDirectory("crawlspec").toString
@@ -51,7 +88,7 @@ class CrawlSpec extends AnyFunSuite {
 
   /** Catalog whose round-1 commit wedges UNINTERRUPTIBLY until `release` —
     * so only the poison flag (not the quiesce interrupt) can stop
-    * publication. The loop's round-1 pipelined handoff (the as-of seen-chain
+    * publication. The loop's round-1 handoff (the as-of seen-chain
     * read right after commit submission) is held until the commit thread is
     * provably inside the wedge, and with `plantFailure` then throws there. */
   private class WedgedCommitCatalog(inner: StateCatalog, plantFailure: Boolean)
@@ -108,7 +145,7 @@ class CrawlSpec extends AnyFunSuite {
       .toDF("host", "robots_body")
     val inner = new HadoopSnapshotCatalog(dir)
     val catalog = new WedgedCommitCatalog(inner, plantFailure)
-    val c = cfg.copy(commitQuiesceTimeoutSec = 2) // pipelined by default
+    val c = cfg.copy(commitQuiesceTimeoutSec = 2)
     Crawl.bootstrap(spark, catalog, pages, robots, uni.seeds(8), c)
     val run = Future(scala.util.Try(Crawl.runRounds(spark, catalog, c, 3)))(ExecutionContext.global)
     val thrown = try Await.result(run, 120.seconds).failed
@@ -510,63 +547,72 @@ class CrawlSpec extends AnyFunSuite {
     assertSketchesCoverSeen(catalog, cfg.numPartitions)
   }
 
-  test("pipelined commit ≡ synchronous loop ≡ checkpoint hop: tables, metrics, drain") {
-    // enough rounds that the frontier DRAINS: the pipelined loop runs one
-    // speculative round past the drain and must discard it uncommitted
-    val (catA, resA, _) = runCrawl(tmp(), 400, 6, 30) // default: pipelined, cache hop
-    val (catB, resB, _) = runCrawl(tmp(), 400, 6, 30, cfg.copy(commitPipelining = false))
-    // cluster-durable pipelined tier: reliable-checkpoint hop
-    val ckptDir = tmp()
-    val (catC, resC, _) = runCrawl(tmp(), 400, 6, 30,
-      cfg.copy(pipelineHop = "checkpoint", checkpointDir = ckptDir))
+  test("in-memory handoff ≡ per-round reference, both truncation tiers: tables, metrics, drain") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty, "session already has a checkpoint dir")
+    // enough rounds that the frontier DRAINS: the loop runs one speculative
+    // round past the drain and must discard it uncommitted
+    val (catA, resA, _) = runCrawl(tmp(), 400, 6, 30) // local-checkpoint hop
+    val (catB, resB, _) = runCrawl(tmp(), 400, 6, 30, perRound = true)
+    // cluster-durable tier: the session's checkpoint dir selects the
+    // reliable-checkpoint hop
+    val ((catC, resC, _), ckptFiles) = withCheckpointDir(tmp())(runCrawl(tmp(), 400, 6, 30))
     assert(resA.size < 30, "fixture did not drain — the discard path went unexercised")
     val sig = (rs: Seq[CrawlRound.RoundResult]) =>
       rs.map(r => (r.round, r.fetched, r.enqueued, r.robotsDenied))
     assert(sig(resA) == sig(resB))
-    assert(sig(resA) == sig(resC), "checkpoint-hop run diverged from cache-hop run")
-    // the checkpoint hop actually wrote durable frames (lineage truncation
-    // is real, not a silent fall-through to the cache tier)
-    val ckptFiles = {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(ckptDir))
-      try walk.iterator().asScala.count(java.nio.file.Files.isRegularFile(_))
-      finally walk.close() // the stream holds open directory handles
-    }
+    assert(sig(resC) == sig(resB), "reliable-checkpoint run diverged from the reference")
+    // the reliable hop actually wrote durable frames (lineage truncation is
+    // real, not a silent fall-through to the local tier)
     assert(ckptFiles > 0, "checkpoint dir is empty — no frame was durably hopped")
     // identical committed rounds: the speculative post-drain round left no trace
-    assert(catA.latestRound == catB.latestRound && catA.latestRound == catC.latestRound)
+    assert(catA.latestRound == catB.latestRound && catC.latestRound == catB.latestRound)
     val proj = Seq("fetch_seq", "canon_url", "status", "scheduled_offset_ms", "text_sha256")
     val a = Crawl.fullFetchLog(spark, catA).orderBy("fetch_seq").select(proj.map(col): _*).collect()
     val b = Crawl.fullFetchLog(spark, catB).orderBy("fetch_seq").select(proj.map(col): _*).collect()
     val c = Crawl.fullFetchLog(spark, catC).orderBy("fetch_seq").select(proj.map(col): _*).collect()
-    assert(a.length == b.length && a.sameElements(b), "pipelined and sync runs diverged")
-    assert(a.length == c.length && a.sameElements(c), "checkpoint and cache hops diverged")
+    assert(a.length == b.length && a.sameElements(b), "local-checkpoint run diverged from the reference")
+    assert(c.length == b.length && c.sameElements(b), "reliable-checkpoint run diverged from the reference")
     // commit-time metrics (Observation-fed, including total_fetched computed
-    // from the driver-side fetch_seq base handoff) agree between modes
+    // from the driver-side fetch_seq base handoff) agree with the reference
     val last = catA.latestRound.get
     assert(catA.metricsOf(last) == catB.metricsOf(last))
-    assert(catA.metricsOf(last) == catC.metricsOf(last))
+    assert(catC.metricsOf(last) == catB.metricsOf(last))
     assert(catA.metricsOf(last)("total_fetched") == resA.map(_.fetched).sum)
     // the seen set (append-delta chain) agrees too
     val seenA = catA.load(spark, "url_seen_exact").get
     val seenB = catB.load(spark, "url_seen_exact").get
     val seenC = catC.load(spark, "url_seen_exact").get
     assert(seenA.exceptAll(seenB).isEmpty && seenB.exceptAll(seenA).isEmpty)
-    assert(seenA.exceptAll(seenC).isEmpty && seenC.exceptAll(seenA).isEmpty)
+    assert(seenC.exceptAll(seenB).isEmpty && seenB.exceptAll(seenC).isEmpty)
   }
 
-  test("checkpoint hop with in-loop robots: robots-delta frame hops durably, ≡ cache hop") {
+  test("in-loop robots: the robots-delta frame hops under both tiers, ≡ per-round reference") {
     val inLoop = cfg.copy(robotsFetchInLoop = true)
+    val (catRef, resRef, _) = runCrawl(tmp(), 400, 6, 4, inLoop, perRound = true)
     val (catA, resA, _) = runCrawl(tmp(), 400, 6, 4, inLoop)
-    val (catB, resB, _) = runCrawl(tmp(), 400, 6, 4,
-      inLoop.copy(pipelineHop = "checkpoint", checkpointDir = tmp()))
-    assert(resA.map(r => (r.round, r.fetched, r.robotsFetched)) ==
-      resB.map(r => (r.round, r.fetched, r.robotsFetched)))
-    assert(resA.head.robotsFetched > 0, "in-loop robots round went unexercised")
-    val a = Crawl.fullFetchLog(spark, catA).orderBy("fetch_seq")
+    val ((catB, resB, _), ckptFiles) = withCheckpointDir(tmp())(runCrawl(tmp(), 400, 6, 4, inLoop))
+    assert(ckptFiles > 0, "checkpoint dir is empty — no frame was durably hopped")
+    assert(resRef.head.robotsFetched > 0, "in-loop robots round went unexercised")
+    def fetches(cat: StateCatalog) = Crawl.fullFetchLog(spark, cat).orderBy("fetch_seq")
       .select("fetch_seq", "canon_url", "status").collect()
-    val b = Crawl.fullFetchLog(spark, catB).orderBy("fetch_seq")
-      .select("fetch_seq", "canon_url", "status").collect()
-    assert(a.length == b.length && a.sameElements(b), "in-loop checkpoint run diverged")
+    val ref = fetches(catRef)
+    for ((name, cat, res) <- Seq(("local", catA, resA), ("reliable", catB, resB))) {
+      assert(res.map(r => (r.round, r.fetched, r.robotsFetched)) ==
+        resRef.map(r => (r.round, r.fetched, r.robotsFetched)), s"$name-checkpoint results diverged")
+      val got = fetches(cat)
+      assert(got.length == ref.length && got.sameElements(ref), s"in-loop $name-checkpoint run diverged")
+    }
+  }
+
+  test("runRounds + CrawlState.close() release every block the crawl pinned, hopped frames included") {
+    val (catalog, _) = bootstrapCrawl(tmp(), 1000, 8, cfg)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val st = Crawl.openState(spark, catalog, cfg, eager = true)
+    val results = try Crawl.runRounds(spark, catalog, cfg, 3, st) finally st.close()
+    assert(results.size == 3, "the crawl stopped before its two handoffs")
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"the crawl left ${leaked.size} persisted RDDs: $leaked")
   }
 
   test("abandoned in-flight commit never publishes its manifest (quiesce poison)") {
@@ -769,19 +815,20 @@ class CrawlSpec extends AnyFunSuite {
       "https://b.test/p1" -> 3L), s"rank-priority schedule wrong: $got")
   }
 
-  test("rankPriority e2e: host_edges chain commits; pipelined ≡ sync; order shifts vs unranked") {
+  test("rankPriority e2e: host_edges chain commits; ≡ per-round reference; order shifts vs unranked") {
     // dense enough that the Zipf-hot hosts cross the rank ≥ 1.0 tier
     // boundary after round 1's links (sparser fixtures leave every host in
     // the coldest bucket and the signal is a no-op by construction)
     val rp = cfg.copy(rankPriority = true, roundBudget = 24)
     val (catA, resA, _) = runCrawl(tmp(), 2000, 32, 6, rp)
-    val (catB, _, _) = runCrawl(tmp(), 2000, 32, 6, rp.copy(commitPipelining = false))
+    val (catB, _, _) = runCrawl(tmp(), 2000, 32, 6, rp, perRound = true)
     assert(resA.map(_.fetched).sum > 0)
     val proj = Seq("fetch_seq", "canon_url", "status", "scheduled_offset_ms", "text_sha256")
     val a = Crawl.fullFetchLog(spark, catA).orderBy("fetch_seq").select(proj.map(col): _*).collect()
     val b = Crawl.fullFetchLog(spark, catB).orderBy("fetch_seq").select(proj.map(col): _*).collect()
-    // the rank signal lags one round identically in both commit modes
-    assert(a.length == b.length && a.sameElements(b), "rank-priority pipelined and sync diverged")
+    // the rank signal lags one round identically under the handoff and
+    // when every round reads the committed host graph back
+    assert(a.length == b.length && a.sameElements(b), "rank-priority run diverged from the reference")
     // the committed host graph: non-empty append chain of cross-host edges
     val edges = catA.load(spark, "host_edges").get
     assert(edges.count() > 0, "no host_edges delta was committed")

@@ -687,6 +687,19 @@ class PipelineSpec extends AnyFunSuite {
     assert(n == 512L)
   }
 
+  test("connected components: releasing the result frees every block the call pinned") {
+    // a 64-node path takes several large-star/small-star iterations, each
+    // truncating a fresh edge frame
+    val sc = spark.sparkContext
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val before = sc.getPersistentRDDs.keySet
+    val got = DupClusters.connectedComponents(pairs)
+    assert(got.count() == 64L)
+    got.unpersist() // the caller's half of the contract
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"connectedComponents left ${leaked.size} persisted RDDs: $leaked")
+  }
+
   test("dupClusters: min-id representative, sizes, transitive closure of LSH pairs") {
     // A~B and B~C emitted, (A,C) never — the cluster step must still merge
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("id_a", "id_b")
@@ -919,6 +932,26 @@ class PipelineSpec extends AnyFunSuite {
     assert(cents(3).toSeq == Seq(0L, 1000L, 0L, 0L), s"cell 3 lost its init: ${cents(3).toSeq}")
   }
 
+  test("kmeans: null and wrong-length vectors get no cell, identically on both paths") {
+    val good: Seq[(Long, Array[Float])] = (0L until 12L).map { id =>
+      id -> Array.tabulate(4)(i => if (i == id % 3) 1f else 0.01f * id)
+    }
+    // the lowest ids, so an init that did not skip them would seed from them
+    val bad = Seq[(Long, Array[Float])](
+      -3L -> null, -2L -> Array(1f, 0f), -1L -> Array(1f, 0f, 0f, 0f, 1f))
+    val want = seqKmeans(good, k = 3, iters = 3)
+    for (kern <- Seq(true, false)) {
+      val (_, assign) = Similarity.kmeansFit(
+        embFrame(bad ++ good), k = 3, iters = 3, dim = 4, kernel = kern)
+      val rows = assign.select($"vec_id", $"cell", $"dist").collect()
+      val got = rows.filter(!_.isNullAt(1))
+        .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
+      assert(got == want, s"kernel=$kern: an invalid vector seeded or moved a centroid")
+      val noCell = rows.filter(r => r.isNullAt(1) && r.isNullAt(2)).map(_.getLong(0)).toSet
+      assert(noCell == Set(-3L, -2L, -1L), s"kernel=$kern: rows without a cell: $noCell")
+    }
+  }
+
   test("semdedup: same-cell near-dups drop (lowest id wins), distinct vectors survive") {
     val vecs = Seq[(Long, Array[Float])](
       1L -> Array(1f, 0f, 0f, 0f),
@@ -1043,18 +1076,20 @@ class PipelineSpec extends AnyFunSuite {
       (2L, 3L, 1L, 4L),
       (3L, 3L, 5L, 1L), (3L, 5L, 0L, 2L))
     for (parts <- Seq(1, 5)) {
-      val got = SeqPack.packManifest(d.repartition(parts), seqLen = 4, numPartitions = 3)
-        .select($"chunk_id", $"doc_id", $"doc_from", $"n_toks")
+      val (manifest, pin) = SeqPack.packManifest(d.repartition(parts), seqLen = 4, numPartitions = 3)
+      val got = manifest.select($"chunk_id", $"doc_id", $"doc_from", $"n_toks")
         .as[(Long, Long, Long, Long)].collect().toSet
+      pin.unpersist()
       assert(got == want, s"parts=$parts: ${got.diff(want)} / ${want.diff(got)}")
     }
     // invariants on a bigger frame: chunk sums = L except the last chunk;
     // per-doc spans tile the doc exactly
     val big = docs((1L to 100L).map(i =>
       i -> Seq.fill((i % 17 + 1).toInt)("w").mkString(" ")): _*)
-    val m = SeqPack.packManifest(big, seqLen = 32)
-      .select($"chunk_id", $"doc_id", $"doc_from", $"n_toks")
+    val (bigManifest, bigPin) = SeqPack.packManifest(big, seqLen = 32)
+    val m = bigManifest.select($"chunk_id", $"doc_id", $"doc_from", $"n_toks")
       .as[(Long, Long, Long, Long)].collect()
+    bigPin.unpersist()
     val total = (1L to 100L).map(i => i % 17 + 1).sum
     val lastChunk = (total - 1) / 32
     m.groupBy(_._1).foreach { case (c, spans) =>

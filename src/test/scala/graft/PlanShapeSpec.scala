@@ -199,13 +199,13 @@ class PlanShapeSpec extends AnyFunSuite {
   test("seq pack: no Window operator anywhere (two-phase prefix sum, not a global scan)") {
     val d = (1L to 200L).map(i => (i, Seq.fill((i % 9 + 1).toInt)("w").mkString(" ")))
       .toDF("doc_id", "text")
-    val out = graft.operators.SeqPack.packManifest(d, seqLen = 16, numPartitions = 4)
+    val (out, pin) = graft.operators.SeqPack.packManifest(d, seqLen = 16, numPartitions = 4)
     try {
       val plan = physical(out)
       assert(!plan.contains("Window"), s"packing must not plan a window: $plan")
       assert(!plan.contains("SinglePartition"),
         s"packing must not funnel through one partition: $plan")
-    } finally out.unpersist()
+    } finally pin.unpersist()
   }
 
   test("rare tokens: vocabulary joins as broadcast; per-doc tally is partial+final") {
