@@ -569,11 +569,13 @@ object DedupScalingBench {
       },
       "semdedup" -> { s =>
         // SemDeDup end-to-end: the kmeans row's trainer plus the
-        // within-cell pair scan — corpus-scaled k (same ~100-vectors/cell
-        // rule) bounds the quadratic, pairParts pins the cell layout for
-        // the self-join (the AQE coalescing blind spot, as in the RHP op).
-        // The ×mult corpus makes every vector an exact dup of its
-        // mult-1 siblings — same cell, cosine 1.0 — the worst honest case.
+        // within-cell pass — one exchange by cell, then each task walks
+        // its cells' members in id order; corpus-scaled k (same
+        // ~100-vectors/cell rule) bounds the quadratic, pairParts pins the
+        // cell layout's partition count (the AQE coalescing blind spot, as
+        // in the RHP op). The ×mult corpus makes every vector an exact dup
+        // of its mult-1 siblings — same cell, cosine 1.0 — so a later
+        // copy's scan stops at its vector's first copy.
         val kCells = math.max(16, (5000L * mult / 256L).toInt)
         Similarity.semDedup(
           embs(s).select(col("vec_id"), col("qv").as("embedding")),

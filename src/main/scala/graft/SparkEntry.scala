@@ -878,7 +878,7 @@ object SparkEntry {
       // distributed Lloyd's k-means — the IVF coarse-quantizer TRAINER
       // (q39/q44 consumed fixture centroids; this is where they come from
       // at ingest). 3 iterations from the k-lowest-id init; nearest-cell is
-      // a row-local least() over centroid literals feeding one
+      // a row-local JVM argmin over the centroid matrix feeding one
       // map-side-combinable vector-sum aggregate per iteration (k×(dim+1)
       // longs through the exchange, MLlib's broadcast-state loop shape).
       // All-integer arithmetic ⇒ the oracle replays the identical
@@ -889,8 +889,9 @@ object SparkEntry {
 
     "q62_semdedup" -> ((s, d) => {
       // SemDeDup (arXiv:2303.09540): the k-means cells bound the near-dup
-      // quadratic (cluster-local pair scan, never corpus-wide); drop any
-      // vector with cosine ≥ τ to a lower-id same-cell sibling.
+      // quadratic: one exchange by cell, then each task walks its cells'
+      // members in id order and drops any vector with cosine ≥ τ to a
+      // lower-id same-cell sibling (no pair becomes a row).
       Similarity.semDedup(t(s, d, "embeddings"), k = 8, iters = 3, threshold = 0.35)
         .orderBy(col("vec_id"))
     }),
@@ -1058,10 +1059,12 @@ object SparkEntry {
     * `af` = the final assignment under c{iters}. Floor division is spelled
     * `(s - ((s % n + n) % n)) / n` — the subtraction makes the numerator
     * exactly divisible, so the quotient is exact in any division
-    * semantics (Math.floorDiv on the Spark side). */
+    * semantics (Math.floorDiv on the Spark side). The distance is cast to
+    * BIGINT: DuckDB's `list_sum` over BIGINT returns HUGEINT, Spark's sum
+    * is a long. */
   private def sqlKmeansCtes(k: Int, iters: Int, dim: Int): String = {
     def dist(qv: String, cv: String) =
-      s"list_sum(list_transform(range(1, $dim+1), i -> ($qv[i]-$cv[i])*($qv[i]-$cv[i])))"
+      s"CAST(list_sum(list_transform(range(1, $dim+1), i -> ($qv[i]-$cv[i])*($qv[i]-$cv[i]))) AS BIGINT)"
     def assign(name: String, cents: String) =
       s"""$name AS (SELECT vec_id, qv, cell, dist FROM (
          |  SELECT vec_id, qv, cell, dist,
@@ -1743,7 +1746,7 @@ object SparkEntry {
         |SELECT lang,
         |  CASE WHEN bucket < 980 THEN 'train'
         |       WHEN bucket < 990 THEN 'valid' ELSE 'test' END AS split,
-        |  count(*) AS n, sum(n_chars) AS sum_chars
+        |  count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
         |FROM b GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
 
     "q29_embedding_neardup" ->

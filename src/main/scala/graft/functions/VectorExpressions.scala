@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.GraftBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /**
@@ -146,7 +147,87 @@ case class FloatCosine(left: Expression, right: Expression) extends FusedCosine 
     copy(left = l, right = r)
 }
 
+/**
+ * Quantize kernel (Similarity.quantize): each component `x` becomes
+ * `cast(round(double(x) * scale) as bigint)`, value for value and error for
+ * error what the per-element `transform` lambda computed, in one loop that
+ * writes a primitive long array and boxes nothing.
+ *
+ *   - `round` is Spark's HALF_UP rounding of `BigDecimal(d)` (ties away from
+ *     zero, NaN and ±Inf unchanged). The fraction of a finite double is
+ *     exact, and below 2^52 every x.5 boundary is itself a double, so
+ *     rounding the exact value equals rounding its shortest decimal form;
+ *     from 2^52 up every double is an integer.
+ *   - The cast follows the session's ANSI mode like Spark's Cast: ANSI
+ *     raises Spark's CAST_OVERFLOW error unless floor/ceil of the value lie
+ *     within [Long.MinValue, Long.MaxValue] as doubles; otherwise the JVM's
+ *     saturating double → long conversion (NaN → 0).
+ *   - A null element stays null.
+ */
+object VecQuantizeKernel {
+
+  private def roundHalfUp(d: Double): Double =
+    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
+    else {
+      val a = math.abs(d)
+      val f = math.floor(a)
+      math.copySign(if (a - f >= 0.5) f + 1.0 else f, d)
+    }
+
+  private def toLong(r: Double, ansi: Boolean): Long =
+    if (!ansi || (math.floor(r) <= Long.MaxValue.toDouble && math.ceil(r) >= Long.MinValue.toDouble)) r.toLong
+    else throw GraftBridge.castToLongOverflow(r)
+
+  def quantize(a: ArrayData, isDouble: Boolean, scale: Double, ansi: Boolean): ArrayData = {
+    val n = a.numElements()
+    val out = UnsafeArrayData.createFreshArray(n, 8)
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) out.setNullAt(i)
+      else {
+        val x = if (isDouble) a.getDouble(i) else a.getFloat(i).toDouble
+        out.setLong(i, toLong(roundHalfUp(x * scale), ansi))
+      }
+      i += 1
+    }
+    out
+  }
+}
+
+/** Fused `quantize` over an `array<float>` or `array<double>` vector. The
+  * ANSI mode is read from the session when the expression is built, as
+  * Spark's Cast reads it. */
+case class QuantizeVec(child: Expression, scale: Int, ansi: Boolean = SQLConf.get.ansiEnabled)
+    extends UnaryExpression {
+  private def isDouble: Boolean = child.dataType match {
+    case ArrayType(DoubleType, _) => true
+    case _ => false
+  }
+  override def dataType: DataType = child.dataType match {
+    case ArrayType(_, containsNull) => ArrayType(LongType, containsNull)
+    case _ => ArrayType(LongType)
+  }
+  override def prettyName: String = "quantize_vec"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<float> or array<double> input, got ${other.simpleString}")
+  }
+
+  override def nullSafeEval(a: Any): Any =
+    VecQuantizeKernel.quantize(a.asInstanceOf[ArrayData], isDouble, scale.toDouble, ansi)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a =>
+      s"graft.functions.VecQuantizeKernel.quantize($a, $isDouble, (double) $scale, $ansi)")
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
 object VectorExpressions {
+  def quantize(vec: Column, scale: Int): Column =
+    GraftBridge.column(QuantizeVec(GraftBridge.expression(vec), scale))
   def int_cosine(a: Column, b: Column): Column =
     GraftBridge.column(IntCosine(GraftBridge.expression(a), GraftBridge.expression(b)))
   def float_cosine(a: Column, b: Column): Column =

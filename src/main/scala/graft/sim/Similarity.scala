@@ -1,8 +1,9 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /**
  * Similarity search over an embedding column (`array<float>`):
@@ -14,8 +15,9 @@ import org.apache.spark.sql.functions._
  *     cluster the corpus once; a query probes only its bucket (plus
  *     multiprobe neighbors), turning top-k into a bucket-local scan.
  *
- * All vector math is built-in higher-order functions (`zip_with` +
- * `aggregate`) in double precision — codegen'd, deterministic, and exactly
+ * Per-pair and per-component vector math (cosine, quantize) runs as fused
+ * native expressions (graft.functions.VectorExpressions); the rest is
+ * built-in higher-order functions. All of it is deterministic and exactly
  * reproducible in the DuckDB oracle.
  */
 object Similarity {
@@ -24,27 +26,15 @@ object Similarity {
   private def dsum(arr: Column): Column =
     aggregate(arr, lit(0.0), (acc, x) => acc + x)
 
-  def dot(a: Column, b: Column): Column =
-    dsum(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")))
-
-  def norm(a: Column): Column =
-    sqrt(dsum(transform(a, x => x.cast("double") * x.cast("double"))))
-
   /** Cosine similarity; 0 for zero vectors. Fused NATIVE expression
-    * (graft.functions.FloatCosine): the declarative HOF tree below costs a
-    * lambda dispatch per element and an allocation per array per call, and
-    * this runs once per candidate PAIR in the dedup/ANN verifies — measured
-    * as the dominant cost of q29/q30/q42. Bit-identical by construction
+    * (graft.functions.FloatCosine): the declarative HOF tree (the spec
+    * reference in src/test) costs a lambda dispatch per element and an
+    * allocation per array per call, and this runs once per candidate PAIR
+    * in the dedup/ANN verifies — measured as the dominant cost of
+    * q29/q30/q42. Bit-identical by construction
     * (same IEEE add order, same combine; parity pinned by PipelineSpec). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.float_cosine(a, b)
-
-  /** The declarative HOF form of [[cosine]] — kept as the parity witness. */
-  def cosineDeclarative(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val nn = norm(a) * norm(b)
-    when(nn === 0.0, 0.0).otherwise(d / nn)
-  }
 
   // --- integer-quantized variants (cross-engine-exact) ----------------------
   // Float accumulation order differs between engines (DuckDB's
@@ -53,9 +43,15 @@ object Similarity {
   // order-independent and exact, and the final sqrt/mul/div are single
   // correctly-rounded IEEE ops — bit-identical everywhere.
 
-  /** vec<float> → vec<long>, component * scale, half-up. */
+  /** vec<float|double> → vec<long>: each component is
+    * `round(double(x) * scale)` (half-up, ties away from zero) cast to
+    * bigint under the session's ANSI mode; a null component stays null.
+    * One fused native expression (graft.functions.QuantizeVec) —
+    * value-for-value and error-for-error the per-element `transform`
+    * lambda it replaces, without a lambda call and two boxes per component
+    * (parity spec-pinned). */
   def quantize(vec: Column, scale: Int = 1000): Column =
-    transform(vec, x => round(x.cast("double") * scale).cast("long"))
+    graft.functions.VectorExpressions.quantize(vec, scale)
 
   /** `vecCol` already array<bigint> (the stored quantized form an ingest
     * pipeline keeps — e.g. [[kmeansFit]]'s trained centroids) → use as-is;
@@ -68,21 +64,11 @@ object Similarity {
       case _ => quantize(col(vecCol))
     }
 
-  def intDot(qa: Column, qb: Column): Column =
-    aggregate(zip_with(qa, qb, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-
   /** Cosine over pre-quantized long vectors; exact cross-engine. Fused
     * NATIVE expression — see [[cosine]]; integer sums are order-free, so
     * the fusion cannot even reorder anything observable. */
   def intCosine(qa: Column, qb: Column): Column =
     graft.functions.VectorExpressions.int_cosine(qa, qb)
-
-  /** The declarative HOF form of [[intCosine]] — kept as the parity witness. */
-  def intCosineDeclarative(qa: Column, qb: Column): Column = {
-    val d = intDot(qa, qb).cast("double")
-    val nn = sqrt(intDot(qa, qa).cast("double")) * sqrt(intDot(qb, qb).cast("double"))
-    when(nn === 0.0, 0.0).otherwise(d / nn)
-  }
 
   // --- bounded per-query top-k (the scale-path reduction) -------------------
 
@@ -327,34 +313,6 @@ object Similarity {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   }
 
-  /** Squared-L2 distance between a quantized vector column and a centroid
-    * literal — pure BIGINT arithmetic: exact, order-free, cross-engine. */
-  private def intSqDist(qv: Column, centroid: Array[Long]): Column =
-    aggregate(zip_with(qv, typedLit(centroid.toSeq), (x, c) => (x - c) * (x - c)),
-      lit(0L), (acc, x) => acc + x)
-
-  /** struct(dist, cell) of the nearest centroid — `least` over the k
-    * (dist, cell) structs is the lexicographic argmin with ties to the
-    * lowest cell id; entirely row-local (no shuffle, no join, codegen'd).
-    * Null when `qv` is null or not `dim` long (no distance is defined).
-    * Declarative twin of [[nearestCellKernel]] — fine for small k, but the
-    * expression tree grows as k×dim and falls out of codegen for the
-    * corpus-scaled k a real IVF build uses (cells ≈ nVecs/256 ⇒ thousands). */
-  private def nearestCell(qv: Column, centroids: Array[Array[Long]], dim: Int): Column =
-    when(size(qv) === dim, least(centroids.zipWithIndex.map { case (c, j) =>
-      struct(intSqDist(qv, c).as("dist"), lit(j).cast("int").as("cell"))
-    }: _*))
-
-  /** Argmin result row of the kernel path (field names match the
-    * declarative struct so both paths project identically). */
-  final case class CellDist(dist: Long, cell: Int)
-
-  /** One-pass JVM argmin over the broadcast centroid matrix — identical
-    * integer arithmetic to [[nearestCell]] (exact squared-L2, strict-<
-    * keeps the lowest cell on ties), so the two paths are bit-identical by
-    * construction (parity spec-pinned). k×dim stays DATA (one task-local
-    * array), not an expression tree, so corpus-scaled k (thousands of
-    * cells) runs as a tight loop instead of a codegen-overflow fallback. */
   /** Seq[Long] → primitive long[] without per-element boxing where the
     * runtime hands us an ofLong wrapper (Spark's array<bigint>
     * deserialization); one copy otherwise. The argmin loop then reads
@@ -366,10 +324,21 @@ object Similarity {
     case other => other.toArray
   }
 
+  /** Argmin result row of [[nearestCellKernel]]. */
+  final case class CellDist(dist: Long, cell: Int)
+
+  /** struct(dist, cell) of the nearest centroid: one-pass JVM argmin over
+    * the centroid matrix — exact BIGINT squared-L2, strict-< keeps the
+    * lowest cell on ties; entirely row-local (no shuffle, no join). Null
+    * when `qv` is null or not `dim` long (no distance is defined). k×dim
+    * stays DATA (one task-local array), not an expression tree, so
+    * corpus-scaled k (thousands of cells) runs as a tight loop instead of
+    * a codegen-overflow fallback; the declarative `least`-over-structs form
+    * is the spec reference in src/test. */
   private def nearestCellKernel(qv: Column, centroids: Array[Array[Long]], dim: Int): Column = {
     val cents = centroids // stable closure capture
     val f = udf((v: Seq[Long]) => {
-      if (v == null || v.length != dim) null // as the declarative twin
+      if (v == null || v.length != dim) null
       else {
         val a = unwrapLongs(v)
         var bc = 0
@@ -389,55 +358,14 @@ object Similarity {
     f(qv)
   }
 
-  /**
-   * Distributed Lloyd's k-means over integer-QUANTIZED vectors — the
-   * trainer half of the IVF index ([[ivfAssign]]/[[ivfTopK]] consume the
-   * centroids this produces; until now they took fixture centroids as
-   * input, which dodged the "where does the coarse quantizer come from at
-   * ingest" question). Init = the k lowest-id vectors (deterministic).
-   * Each iteration is ONE corpus scan: the nearest-cell argmin is a
-   * row-local `least` over centroid-literal distances feeding the
-   * map-side-combinable [[VecSumAgg]], so the exchange carries k×(dim+1)
-   * longs total and the k updated centroids return to the driver — the
-   * same k-rows-of-broadcast-state loop Spark MLlib's KMeans runs, NOT a
-   * per-row collect. At 100 TB one trains on a sampled slice anyway
-   * (pass `corpus.sample(...)`); the full-corpus pass here is the
-   * worst case and it is still scan+tiny-agg shaped.
-   *
-   * Centroid update = exact floored integer mean (`Math.floorDiv`); empty
-   * cells keep their previous centroid. Distances are exact BIGINT
-   * sums-of-squares, so every iteration — and the final assignment — is
-   * bit-reproducible regardless of partitioning/merge order and has a
-   * DuckDB oracle (unrolled CTEs; q61).
-   *
-   * Returns (centroids, assignment) with assignment = (idCol, cell:int,
-   * dist:long) under the final centroids. Vectors must be non-null and
-   * `dim` long: any other row gets a null cell and dist, and neither seeds
-   * nor moves a centroid.
-   */
-  def kmeansFit(
-      corpus: DataFrame,
-      k: Int,
-      iters: Int,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      dim: Int = 64,
-      kernel: Boolean = true): (Array[Array[Long]], DataFrame) = {
-    // accept either raw float vectors (quantized here) or an already-
-    // quantized array<bigint> column (the stored form an ingest pipeline
-    // keeps) — the arithmetic downstream is identical
-    val preQuantized = corpus.schema(vecCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, _) => true
-      case _ => false
-    }
-    val qvCol = if (preQuantized) col(vecCol) else quantize(col(vecCol))
-    def near(c: Array[Array[Long]]): Column =
-      if (kernel) nearestCellKernel(col("qv"), c, dim) else nearestCell(col("qv"), c, dim)
-    val q = corpus.select(col(idCol), qvCol.as("qv"))
-    // the iteration collects force q (iters+1) times: pin the quantized
-    // scan for the loop, release before returning — the final assignment
-    // recomputes it lazily (cache hygiene per the r4 advice; no
-    // session-lifetime pins escape this function).
+  /** (idCol, qv): the corpus with its vectors in quantized form. */
+  private def quantizedRows(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol), quantizedCol(corpus, vecCol).as("qv"))
+
+  /** Lloyd's iterations over (idCol, qv) → the trained centroids. `q` is
+    * pinned for the init and the `iters` collects and released before
+    * returning, so no cache outlives the call. */
+  private def lloyd(q: DataFrame, k: Int, iters: Int, idCol: String, dim: Int): Array[Array[Long]] = {
     q.persist()
     try {
       var cents: Array[Array[Long]] =
@@ -447,7 +375,7 @@ object Similarity {
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
       var it = 0
       while (it < iters) {
-        val sums = q.select(near(cents).getField("cell").as("cell"), col("qv"))
+        val sums = q.select(nearestCellKernel(col("qv"), cents, dim).getField("cell").as("cell"), col("qv"))
           .where(col("cell").isNotNull)
           .groupBy(col("cell")).agg(vecsum(col("qv")).as("sn"))
           .collect()
@@ -461,10 +389,49 @@ object Similarity {
         }
         it += 1
       }
-      val assign = q.select(col(idCol), near(cents).as("n"))
-        .select(col(idCol), col("n.cell").as("cell"), col("n.dist").as("dist"))
-      (cents, assign)
+      cents
     } finally q.unpersist()
+  }
+
+  /**
+   * Distributed Lloyd's k-means over integer-QUANTIZED vectors — the
+   * trainer half of the IVF index ([[ivfAssign]]/[[ivfTopK]] consume the
+   * centroids this produces). Init = the k lowest-id vectors
+   * (deterministic). Each iteration is ONE corpus scan: the row-local
+   * [[nearestCellKernel]] argmin feeds the map-side-combinable
+   * [[VecSumAgg]], so the exchange carries k×(dim+1) longs total and the k
+   * updated centroids return to the driver — the same
+   * k-rows-of-broadcast-state loop Spark MLlib's KMeans runs, NOT a
+   * per-row collect. At 100 TB one trains on a sampled slice anyway (pass
+   * `corpus.sample(...)`); the full-corpus pass here is the worst case and
+   * it is still scan+tiny-agg shaped. `vecCol` may be raw float vectors
+   * (quantized here) or the stored quantized array<bigint> form.
+   *
+   * Centroid update = exact floored integer mean (`Math.floorDiv`); empty
+   * cells keep their previous centroid. Distances are exact BIGINT
+   * sums-of-squares, so every iteration — and the final assignment — is
+   * bit-reproducible regardless of partitioning/merge order and has a
+   * DuckDB oracle (unrolled CTEs; q61).
+   *
+   * Returns (centroids, assignment) with assignment = (idCol, cell:int,
+   * dist:long) under the final centroids, a lazy frame over `corpus`.
+   * Vectors must be non-null and `dim` long: any other row gets a null
+   * cell and dist, and neither seeds nor moves a centroid. A vector with a
+   * null component fails the call (the argmin's `Seq[Long]` input rejects
+   * it with NOT_NULL_ASSERT_VIOLATION).
+   */
+  def kmeansFit(
+      corpus: DataFrame,
+      k: Int,
+      iters: Int,
+      idCol: String = "vec_id",
+      vecCol: String = "embedding",
+      dim: Int = 64): (Array[Array[Long]], DataFrame) = {
+    val q = quantizedRows(corpus, idCol, vecCol)
+    val cents = lloyd(q, k, iters, idCol, dim)
+    val assign = q.select(col(idCol), nearestCellKernel(col("qv"), cents, dim).as("n"))
+      .select(col(idCol), col("n.cell").as("cell"), col("n.dist").as("dist"))
+    (cents, assign)
   }
 
   /** Trained centroids → the (idCol, vecCol) frame [[ivfAssign]]/[[ivfTopK]]
@@ -481,15 +448,27 @@ object Similarity {
   /**
    * SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup =
    * k-means-cluster the embedding space, then drop near-duplicates WITHIN
-   * each cluster. The within-cluster pair scan is the whole point: the
-   * quadratic is bounded by the cluster population (corpus/k expected),
-   * never the corpus — k scales with corpus size at the design point
-   * (SemDeDup used 11k clusters for LAION-440M), and the cell id is the
-   * partition key, so each task scans one cell's pairs locally. Keep rule:
-   * drop x iff some same-cell y with y.id < x.id has intCosine(x,y) ≥
-   * `threshold` — deterministic and partitioning-independent (no
-   * tie-order dependence), with a DuckDB oracle (q62). Returns the KEPT
-   * rows (idCol, cell).
+   * each cluster, so the quadratic is bounded by the cluster population
+   * (corpus/k expected), never the corpus — k scales with corpus size at
+   * the design point (SemDeDup used 11k clusters for LAION-440M).
+   *
+   * Keep rule: drop x iff some same-cell y with y.id < x.id has
+   * intCosine(x, y) ≥ `threshold` — deterministic and
+   * partitioning-independent, with a DuckDB oracle (q62). Returns the KEPT
+   * rows (idCol, cell); rows with a null or not-`dim`-long vector have no
+   * cell and are kept with a null `cell`, rows with a null id are dropped.
+   * Preconditions: ids are unique, and no vector has a null component
+   * (as for [[kmeansFit]]).
+   *
+   * Plan: [[kmeansFit]]'s training loop, then one final assignment that
+   * carries the quantized vector along, ONE exchange keyed on the cell
+   * (`pairParts` > 0 sets its partition count explicitly: an explicit
+   * count is exempt from AQE's input-size coalescing, which cannot see
+   * the per-cell quadratic work and would collapse it onto few tasks;
+   * 0 leaves it to the session), and a task-local pass: within each
+   * partition, sorted by (cell, id), each cell's members are walked in
+   * ascending id order and x is compared with the earlier members until
+   * the first one at cosine ≥ `threshold`. No pair ever becomes a row.
    */
   def semDedup(
       corpus: DataFrame,
@@ -500,24 +479,54 @@ object Similarity {
       vecCol: String = "embedding",
       dim: Int = 64,
       pairParts: Int = 0): DataFrame = {
-    val (_, assign) = kmeansFit(corpus, k, iters, idCol, vecCol, dim)
-    val q = corpus.select(col(idCol), quantizedCol(corpus, vecCol).as("qv"))
-    val joined = assign.select(col(idCol), col("cell")).join(q, Seq(idCol))
-    // pairParts > 0: pin the cell-bucket layout BEFORE the self-join — the
-    // join's input shuffle is small, so AQE's input-size coalescing would
-    // collapse it while the within-cell output explodes quadratically (the
-    // same blind spot the RHP bench op documents); an explicit user
-    // repartition is exempt and is the ingest layout a design-point run
-    // persists anyway. Default 0 keeps toy-scale plans shuffle-minimal.
-    val e = if (pairParts > 0) joined.repartition(pairParts, col("cell")) else joined
-    val a = e.select(col("cell"), col(idCol).as("id_a"), col("qv").as("qa"))
-    val b = e.select(col("cell"), col(idCol).as("id_b"), col("qv").as("qb"))
-    val dropped = a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(intCosine(col("qa"), col("qb")) >= threshold)
-      .select(col("id_b").as(idCol)).distinct()
-    e.select(col(idCol), col("cell"))
-      .join(dropped, Seq(idCol), "left_anti")
+    val q = quantizedRows(corpus, idCol, vecCol)
+    val cents = lloyd(q, k, iters, idCol, dim)
+    val assigned = q.where(col(idCol).isNotNull)
+      .select(col(idCol), nearestCellKernel(col("qv"), cents, dim).getField("cell").as("cell"), col("qv"))
+    val byCell =
+      if (pairParts > 0) assigned.repartition(pairParts, col("cell")) else assigned.repartition(col("cell"))
+    val kept = StructType(Seq(assigned.schema(idCol), StructField("cell", IntegerType, nullable = true)))
+    byCell.sortWithinPartitions(col("cell"), col(idCol))
+      .mapPartitions((rows: Iterator[Row]) => cellScan(rows, threshold))(Encoders.row(kept))
+  }
+
+  /** [[semDedup]]'s task-local pass over (id, cell, qv) rows sorted by
+    * (cell, id) → the kept (id, cell) rows. A row with a cell has a
+    * `dim`-long vector without null components (the argmin that gave it
+    * the cell rejects any other). The earlier members of the current cell
+    * are held as primitive vectors with their `sqrt` norms;
+    * the cosine is [[graft.functions.VecCosineKernel.intCos]]'s: the same
+    * integer sums and the same IEEE ops `d / (sqrt(sa) * sqrt(sb))`, 0.0 on
+    * a zero norm, compared as Spark compares doubles (NaN above every
+    * number). */
+  private def cellScan(rows: Iterator[Row], threshold: Double): Iterator[Row] = {
+    val vecs = scala.collection.mutable.ArrayBuffer[Array[Long]]()
+    val norms = scala.collection.mutable.ArrayBuffer[Double]()
+    var cell = 0
+    def similar(x: Array[Long], nx: Double, j: Int): Boolean = {
+      val y = vecs(j)
+      var d = 0L
+      var i = 0
+      while (i < x.length) { d += x(i) * y(i); i += 1 }
+      val nn = nx * norms(j)
+      val cos = if (nn == 0.0) 0.0 else d.toDouble / nn
+      cos == threshold || java.lang.Double.compare(cos, threshold) > 0
+    }
+    rows.flatMap { r =>
+      if (r.isNullAt(1)) Iterator.single(Row(r.get(0), null))
+      else {
+        val c = r.getInt(1)
+        if (vecs.isEmpty || c != cell) { vecs.clear(); norms.clear(); cell = c }
+        val x = unwrapLongs(r.getSeq[Long](2))
+        var sx = 0L
+        var i = 0
+        while (i < x.length) { sx += x(i) * x(i); i += 1 }
+        val nx = math.sqrt(sx.toDouble)
+        val dup = vecs.indices.exists(j => similar(x, nx, j))
+        vecs += x; norms += nx
+        if (dup) Iterator.empty else Iterator.single(Row(r.get(0), c))
+      }
+    }
   }
 
   /**

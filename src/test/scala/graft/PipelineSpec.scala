@@ -168,9 +168,9 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("qb", Similarity.quantize(col("vb")))
     val out = pairs.select(
       Similarity.cosine(col("va"), col("vb")).as("f_native"),
-      Similarity.cosineDeclarative(col("va"), col("vb")).as("f_decl"),
+      SimilarityReference.cosineDeclarative(col("va"), col("vb")).as("f_decl"),
       Similarity.intCosine(col("qa"), col("qb")).as("i_native"),
-      Similarity.intCosineDeclarative(col("qa"), col("qb")).as("i_decl")).collect()
+      SimilarityReference.intCosineDeclarative(col("qa"), col("qb")).as("i_decl")).collect()
     assert(out.nonEmpty)
     var checkedNull = false; var checkedZero = false
     out.foreach { r =>
@@ -883,6 +883,14 @@ class PipelineSpec extends AnyFunSuite {
   private def embFrame(vecs: Seq[(Long, Array[Float])]) =
     vecs.toDF("vec_id", "embedding")
 
+  /** (corpus, k, iters, dim) → kmeansFit's result, for the kernel argmin
+    * and the declarative reference. */
+  private val kmeansPaths
+      : Seq[(String, (org.apache.spark.sql.DataFrame, Int, Int, Int) => (Array[Array[Long]], org.apache.spark.sql.DataFrame))] =
+    Seq(
+      "kernel" -> ((df, k, it, dim) => Similarity.kmeansFit(df, k, it, dim = dim)),
+      "declarative" -> ((df, k, it, dim) => SimilarityReference.kmeansFit(df, k, it, dim = dim)))
+
   test("kmeans: distributed ≡ sequential reference; invariant across partitionings") {
     // 3 planted clusters + a mild spread so iterations actually move centroids
     val bases = Vector(
@@ -898,12 +906,11 @@ class PipelineSpec extends AnyFunSuite {
     val want = seqKmeans(vecs, k = 3, iters = 4)
     // kernel (JVM argmin loop) ≡ declarative (least-over-structs) ≡ the
     // sequential reference, at every partitioning
-    for (parts <- Seq(1, 7); kern <- Seq(true, false)) {
-      val (_, assign) = Similarity.kmeansFit(
-        embFrame(vecs).repartition(parts), k = 3, iters = 4, dim = 4, kernel = kern)
+    for (parts <- Seq(1, 7); (path, fit) <- kmeansPaths) {
+      val (_, assign) = fit(embFrame(vecs).repartition(parts), 3, 4, 4)
       val got = assign.select($"vec_id", $"cell", $"dist")
         .as[(Long, Int, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(got == want, s"parts=$parts kernel=$kern: ${got.toSeq.diff(want.toSeq).take(3)}")
+      assert(got == want, s"parts=$parts $path: ${got.toSeq.diff(want.toSeq).take(3)}")
     }
     // a pre-quantized array<bigint> input is accepted as-is (the stored form)
     val preQ = embFrame(vecs).select($"vec_id",
@@ -940,15 +947,14 @@ class PipelineSpec extends AnyFunSuite {
     val bad = Seq[(Long, Array[Float])](
       -3L -> null, -2L -> Array(1f, 0f), -1L -> Array(1f, 0f, 0f, 0f, 1f))
     val want = seqKmeans(good, k = 3, iters = 3)
-    for (kern <- Seq(true, false)) {
-      val (_, assign) = Similarity.kmeansFit(
-        embFrame(bad ++ good), k = 3, iters = 3, dim = 4, kernel = kern)
+    for ((path, fit) <- kmeansPaths) {
+      val (_, assign) = fit(embFrame(bad ++ good), 3, 3, 4)
       val rows = assign.select($"vec_id", $"cell", $"dist").collect()
       val got = rows.filter(!_.isNullAt(1))
         .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
-      assert(got == want, s"kernel=$kern: an invalid vector seeded or moved a centroid")
+      assert(got == want, s"$path: an invalid vector seeded or moved a centroid")
       val noCell = rows.filter(r => r.isNullAt(1) && r.isNullAt(2)).map(_.getLong(0)).toSet
-      assert(noCell == Set(-3L, -2L, -1L), s"kernel=$kern: rows without a cell: $noCell")
+      assert(noCell == Set(-3L, -2L, -1L), s"$path: rows without a cell: $noCell")
     }
   }
 
@@ -969,6 +975,103 @@ class PipelineSpec extends AnyFunSuite {
         threshold = 0.9999, dim = 4, pairParts = 3)
       .select($"vec_id").as[Long].collect().toSet
     assert(keptP == kept, s"pairParts diverged: $keptP")
+  }
+
+  test("semdedup: cell-local pass ≡ self-join reference (τ ties, zero/null/short vectors, layouts)") {
+    def v(xs: Float*): Array[Float] = xs.toArray
+    val vecs = Seq[(Long, Array[Float])](
+      0L -> v(0, 0, 0, -50),          // init centroid far from every other vector: a one-member cell
+      1L -> v(0.3f, 0.4f, 0, 0),
+      2L -> v(0, 0, 1, 0),
+      3L -> v(0.4f, 0.3f, 0, 0),      // cosine to 1 is exactly 0.96: 240000 / (500 · 500)
+      4L -> v(0, 0, 1, 0),            // exact duplicate of 2
+      5L -> v(0.3f, 0.4f, 0, 0),      // exact duplicate of 1
+      6L -> v(0, 0, 0, 0),            // zero vectors: cosine 0.0 to everything
+      7L -> v(0, 0, 0, 0),
+      8L -> v(0, 0, 0.9f, 0.2f),
+      9L -> v(-0.3f, -0.4f, 0, 0),    // cosine −1 to 1
+      10L -> v(0, 0, 0.5f, 0.5f),
+      11L -> null, 12L -> v(1, 0), 13L -> v(1, 0, 0, 0, 1)) // no cell
+    val cellOf = Similarity.kmeansFit(embFrame(vecs), k = 3, iters = 2, dim = 4)._2
+      .select($"vec_id", $"cell").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(cellOf(1L).isDefined && cellOf(1L) == cellOf(3L), s"the τ pair must share a cell: $cellOf")
+    assert(cellOf(6L).isDefined && cellOf(6L) == cellOf(7L), s"the zero vectors must share a cell: $cellOf")
+    assert(cellOf.count(_._2 == cellOf(0L)) == 1, s"vector 0 must be alone in its cell: $cellOf")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Option[Any])] =
+      df.select($"vec_id", $"cell").collect().map(r => r.getLong(0) -> Option(r.get(1))).toSet
+    for (tau <- Seq(0.96, 0.0)) {
+      val want = rows(SimilarityReference.semDedup(embFrame(vecs), k = 3, iters = 2, threshold = tau, dim = 4))
+      val kept = want.map(_._1)
+      assert(Set(0L, 1L, 11L, 12L, 13L).subsetOf(kept), s"τ=$tau: reference kept $want")
+      assert(want.filter(r => Set(11L, 12L, 13L)(r._1)).forall(_._2.isEmpty), s"τ=$tau: $want")
+      if (tau == 0.96) assert(!kept(3L) && !kept(4L) && !kept(5L) && kept(6L) && kept(7L), s"τ=$tau: $want")
+      else assert(!kept(7L), s"τ=0: the second zero vector must drop: $want")
+      for (parts <- Seq(1, 7); pairParts <- Seq(0, 3)) {
+        val got = rows(Similarity.semDedup(embFrame(vecs).repartition(parts), k = 3, iters = 2,
+          threshold = tau, dim = 4, pairParts = pairParts))
+        assert(got == want, s"τ=$tau parts=$parts pairParts=$pairParts: kernel $got, reference $want")
+      }
+    }
+  }
+
+  test("quantize: fused expression ≡ round-and-cast lambda (float and double, ANSI on/off, both eval paths)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def frame(elem: DataType, vecs: Seq[Seq[Any]]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(vecs.map(Row(_)), 2),
+      StructType(Seq(StructField("v", ArrayType(elem, containsNull = true)))))
+    def withConf[T](kvs: (String, String)*)(body: => T): T = {
+      val old = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kvs.foreach { case (k, x) => spark.conf.set(k, x) }
+      try body finally old.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    def rootArith(t: Throwable): Option[ArithmeticException] = t match {
+      case null => None
+      case a: ArithmeticException => Some(a)
+      case o => rootArith(o.getCause)
+    }
+    /** Each side's collected rows, or the message of the arithmetic error it raised. */
+    def outcome(df: org.apache.spark.sql.DataFrame): Either[String, Seq[Option[Seq[Any]]]] =
+      scala.util.Try(df.collect().toSeq.map(r => Option(r.getSeq[Any](0)).map(_.toSeq))) match {
+        case scala.util.Success(rs) => Right(rs)
+        case scala.util.Failure(e) => Left(rootArith(e).map(_.getMessage).getOrElse(throw e))
+      }
+    val rnd = new scala.util.Random(7)
+    val sweep = Seq.fill(40)(Seq.fill(64) {
+      val mag = math.pow(10, rnd.nextInt(16) - 6)
+      if (rnd.nextBoolean()) rnd.nextGaussian() * mag else (rnd.nextInt(2001) - 1000 + 0.5) / 1000.0
+    })
+    val floats = frame(FloatType, Seq(
+      Seq(0.5f, 1.5f, 2.5f, -0.5f, -1.5f, -2.5f, 0.49999997f, -0.49999997f, 0.0025f, -0.0025f,
+        0.0f, -0.0f, 123.456f, -987.654f, 1e-8f, Float.MinPositiveValue, 3.0e12f, -3.0e12f),
+      Seq(0.25f, null, -0.75f),
+      null) ++ sweep.map(_.map(_.toFloat)))
+    val doubles = frame(DoubleType, Seq(
+      Seq(0.5, 2.5, -2.5, 0.0025, -0.0025, 0.49999999999999994, -0.49999999999999994,
+        4503599627370495.5, -4503599627370495.5, 9007199254740993.0, 1e-300, -0.0),
+      Seq(null, 1.0005),
+      null) ++ sweep)
+    val special: Seq[(DataType, Any)] =
+      Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, 1e17f).map(x => (FloatType: DataType) -> x) ++
+      Seq(Double.NaN, 9.223372036854775807e18, 9.3e18, -9.223372036854775808e18, -9.3e18)
+        .map(x => (DoubleType: DataType) -> x)
+    for (ansi <- Seq("true", "false"); mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN"))
+      withConf("spark.sql.ansi.enabled" -> ansi, "spark.sql.codegen.factoryMode" -> mode) {
+        for ((name, df) <- Seq("float" -> floats, "double" -> doubles); scale <- Seq(1, 1000)) {
+          val want = outcome(df.select(SimilarityReference.quantize(col("v"), scale)))
+          val got = outcome(df.select(Similarity.quantize(col("v"), scale)))
+          assert(want.isRight, s"$name scale=$scale ansi=$ansi: $want")
+          assert(got == want, s"$name scale=$scale ansi=$ansi mode=$mode: ${got.toString.take(300)}")
+        }
+        for ((elem, x) <- special; scale <- Seq(1, 1000)) {
+          val df = frame(elem, Seq(Seq(x)))
+          val want = outcome(df.select(SimilarityReference.quantize(col("v"), scale)))
+          val got = outcome(df.select(Similarity.quantize(col("v"), scale)))
+          assert(got == want, s"$x scale=$scale ansi=$ansi mode=$mode: fused $got, lambda $want")
+          if (ansi == "true" && (x == 9.3e18 || (x == 1e17f && scale == 1000)))
+            assert(want.isLeft, s"$x scale=$scale: no overflow error")
+        }
+      }
   }
 
   test("curate: opt-in OOV gate drops the gibberish doc; off by default it survives") {
