@@ -515,7 +515,7 @@ object DedupScalingBench {
       "minhash_lsh" -> (s => Dedup.minhashNearDupPairs(docs(s), k = 32, bands = 8,
         minJ = 0.5, hasher = DedupHasher.production, kernel = true)),
       "simhash_pigeonhole" -> (s => Dedup.simhashNearDupPairs(docs(s), maxDist = 3,
-        hasher = DedupHasher.production, kernel = true)),
+        hasher = DedupHasher.production)),
       "dup_clusters" -> { s =>
         // CC cluster-resolution scaling, isolated from the pair finders
         // (their rows are above), over a DEDUP-SHAPED pair graph: clusters
@@ -550,8 +550,7 @@ object DedupScalingBench {
         Dedup.incrementalNearDupPairs(
           all.filter(col("doc_id") >= 10000000L),
           all.filter(col("doc_id") < 10000000L),
-          k = 32, bands = 8, minJ = 0.5,
-          hasher = DedupHasher.production, kernel = true)
+          k = 32, bands = 8, minJ = 0.5, hasher = DedupHasher.production)
       },
       "kmeans" -> { s =>
         // IVF-trainer scaling: k scales with the corpus on a constant-

@@ -410,10 +410,10 @@ object SparkEntry {
     }),
 
     "q28_simhash" -> ((s, d) => {
-      // kernel = true: the one-pass JVM sketch build — bit-identical to the
+      // sketches from the one-pass JVM kernel — bit-identical to the
       // declarative explode+agg form the oracle mirrors (PipelineSpec
       // asserts parity for the crossEngine hasher used here)
-      Dedup.simhashNearDupPairs(docsWithDups(s, d), maxDist = 3, kernel = true)
+      Dedup.simhashNearDupPairs(docsWithDups(s, d), maxDist = 3)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -488,9 +488,9 @@ object SparkEntry {
     "q35_winnowing" -> ((s, d) => {
       // JVM kernel (monotonic-deque window min, md5 from the char buffer):
       // the declarative staged form is linear but pays ~50 ms/doc in
-      // interpreted transform/slice trees — this is the one family where a
-      // deterministic UDF beats higher-order functions. Kernel ≡ declarative
-      // form is asserted by PipelineSpec; the DuckDB oracle mirrors both.
+      // interpreted transform/slice trees. Kernel ≡ declarative reference
+      // (TextReference, null text → null fingerprints) is asserted by
+      // PipelineSpec; the DuckDB oracle mirrors both.
       t(s, d, "documents")
         .select(col("doc_id"), size(TextAnalysis.winnow_udf(col("text"))).as("n_fps"))
         .orderBy(col("doc_id"))
@@ -942,8 +942,7 @@ object SparkEntry {
       // which is exactly the operator's equivalence contract.
       val base = t(s, d, "documents").select(col("doc_id"), col("text"))
       val fresh = base.select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      Dedup.incrementalNearDupPairs(base, fresh, k = 32, bands = 8, minJ = 0.5,
-          kernel = true)
+      Dedup.incrementalNearDupPairs(base, fresh, k = 32, bands = 8, minJ = 0.5)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -1543,9 +1542,11 @@ object SparkEntry {
 
     "q35_winnowing" ->
       s"""WITH b AS (SELECT doc_id, ${sqlNorm("text")} AS nt FROM documents),
-         |g AS (SELECT doc_id, list_transform(range(1, greatest(length(nt) - 7, 1) + 1),
-         |  i -> ${sqlH64("substr(nt, i, 8)")}) AS grams FROM b),
-         |w AS (SELECT doc_id, CASE WHEN len(grams) <= 16 THEN [list_min(grams)]
+         |g AS (SELECT doc_id, CASE WHEN nt IS NULL THEN NULL
+         |  ELSE list_transform(range(1, greatest(length(nt) - 7, 1) + 1),
+         |    i -> ${sqlH64("substr(nt, i, 8)")}) END AS grams FROM b),
+         |w AS (SELECT doc_id, CASE WHEN grams IS NULL THEN NULL
+         |  WHEN len(grams) <= 16 THEN [list_min(grams)]
          |  ELSE list_distinct(list_transform(range(0, len(grams) - 15),
          |    j -> list_min(list_slice(grams, j + 1, j + 16)))) END AS fps FROM g)
          |SELECT doc_id, CAST(len(fps) AS INTEGER) AS n_fps FROM w ORDER BY doc_id""".stripMargin,

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 import graft.html.Html
@@ -102,18 +102,5 @@ object CrawlUdfs {
     // strip "scheme://host[:port]" → first '/' after "://"
     val afterScheme = regexp_replace(canonUrl, "^[a-z][a-z0-9+.-]*://[^/]*", "")
     when(afterScheme === "", "/").otherwise(afterScheme)
-  }
-
-  def registerAll(spark: SparkSession): Unit = {
-    spark.udf.register("extract_links", extractLinksUdf)
-    spark.udf.register("extract_text", extractTextUdf)
-    spark.udf.register("extract_anchors", extractAnchorsUdf)
-    spark.udf.register("robots_parse", robotsParseUdf)
-    spark.udf.register("robots_allows", robotsAllowsUdf)
-    spark.udf.register("robots_crawl_delay_ms", robotsCrawlDelayUdf)
-    spark.udf.register("robots_sitemaps", robotsSitemapsUdf)
-    spark.udf.register("sitemap_locs", sitemapLocsUdf)
-    spark.udf.register("resolve_url", resolveUdf)
-    UrlExpressions.register(spark)
   }
 }

@@ -73,12 +73,4 @@ object UrlExpressions {
   def canonicalize_url(c: Column): Column = col(CanonicalizeUrl(expr(c)))
   def host_rev(c: Column): Column = col(HostRev(expr(c)))
   def url_host(c: Column): Column = col(UrlHost(expr(c)))
-
-  /** Register the SQL surface (`SELECT canonicalize_url(url) ...`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("canonicalize_url", es => CanonicalizeUrl(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("host_rev", es => HostRev(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("url_host", es => UrlHost(es.head), "scala_udf")
-  }
 }

@@ -96,25 +96,6 @@ object Html {
     sb.toString
   }
 
-  /** Collapse runs of Unicode whitespace to one ASCII space and trim. */
-  def collapseWhitespace(s: String): String = {
-    val sb = new java.lang.StringBuilder(s.length)
-    var inWs = true // leading ws is dropped
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (Character.isWhitespace(c) || c == '\u00a0') {
-        if (!inWs) sb.append(' ')
-        inWs = true
-      } else { sb.append(c); inWs = false }
-      i += 1
-    }
-    // drop single trailing space
-    val n = sb.length
-    if (n > 0 && sb.charAt(n - 1) == ' ') sb.setLength(n - 1)
-    sb.toString
-  }
-
   // --- §F3 step 1: block removal, exactly the leftmost-non-overlapping
   // semantics of (?is)<script\b[^>]*>.*?</script>|<style…|<!--.*?--> with
   // each match replaced by one space. Zero-copy when nothing matches.
@@ -171,7 +152,7 @@ object Html {
 
   /** §F3 steps 2-4 fused: tags → one (collapsed) space, entities decoded,
     * whitespace runs collapsed — one pass, one output buffer. Identical to
-    * AnyTag.replaceAll(" ") → decodeEntities → collapseWhitespace: a tag
+    * AnyTag.replaceAll(" ") → decodeEntities → a whitespace collapse: a tag
     * replacement and a decoded &nbsp; both become the single space the
     * collapse pass would have produced, and an entity interrupted by a tag
     * boundary stays literal in both formulations (the tag's space breaks

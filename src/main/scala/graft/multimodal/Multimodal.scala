@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /**
@@ -101,12 +101,4 @@ object Multimodal {
       }
     }
   }
-
-  /** Resize stub: deterministic downsample of the byte stream by `factor`
-    * (every factor-th byte) — the shape of an image resize kernel without
-    * the codec. Column-level, codegen-friendly via slice arithmetic. */
-  def resizeStub(payload: Column, factor: Int): Column =
-    filter(transform(sequence(lit(1), octet_length(payload)),
-      i => when(pmod(i - 1, lit(factor)) === 0, substring(payload, i, lit(1)))),
-      x => x.isNotNull)
 }

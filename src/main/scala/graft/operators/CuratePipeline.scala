@@ -27,6 +27,11 @@ final case class CurateConfig(
     minJaccard: Double = 0.5,
     splits: Seq[(String, Int)] = Seq(("train", 980), ("valid", 990), ("test", 1000)),
     splitSeed: Long = 0L,
+    /** `false` swaps the one-pass annotate kernels and the minhash
+      * signature kernel for their declarative twins (identical values,
+      * spec-pinned; only slower). No query or bench of this repository sets
+      * it; it stays only because perfbench's restated curate stages
+      * (`CurateBench.stages`) compile against it. */
     kernels: Boolean = true,
     /** Opt-in corpus-vocabulary OOV gate (the q65 operator): drop docs
       * whose out-of-vocabulary token rate exceeds this permille, with the

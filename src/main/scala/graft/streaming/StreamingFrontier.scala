@@ -1,16 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types._
 
 /**
  * Structured-Streaming variant of the frontier (SURVEY.md op 52, post-MVP
  * completeness): the batch engine treats the queue as snapshot tables; this
  * module treats newly-discovered links as an unbounded stream —
  *
- *   readStream(frontier delta dir) → watermark(discovery_ts)
+ *   [[StreamingFrontier.StreamLink]] stream → watermark(discovery_ts)
  *     → dropDuplicatesWithinWatermark(canon_url)          [streaming dedup]
  *     → window(discovery_ts, roundLen) × host aggregation [tumbling rounds]
  *     → flatMapGroupsWithState by host                    [budget state]
@@ -32,17 +31,6 @@ object StreamingFrontier {
       discovery_ts: java.sql.Timestamp)
 
   final case class HostBudgetState(emitted: Long)
-
-  val linkSchema: StructType = StructType(Seq(
-    StructField("canon_url", StringType, nullable = false),
-    StructField("host", StringType, nullable = false),
-    StructField("depth", IntegerType, nullable = false),
-    StructField("discovery_ts", TimestampType, nullable = false)))
-
-  /** Unbounded discovery stream from a delta directory (each crawl round —
-    * or an external producer — appends parquet files of new links). */
-  def discoveries(spark: SparkSession, deltaDir: String): DataFrame =
-    spark.readStream.schema(linkSchema).parquet(deltaDir)
 
   /** Streaming URL-seen dedup: first occurrence of each canon_url within
     * the watermark horizon wins; state expires with the watermark so the

@@ -7,13 +7,20 @@ import org.apache.spark.sql.functions._
  * Text-analysis operators for a training-data pipeline over a `documents`
  * corpus: language-ID, quality scoring, token counting, fingerprinting.
  *
- * Design rule: everything here is built from codegen'd built-in column
- * functions (`replace`/`length`/`regexp_*`) — no UDFs — so the hot path
- * stays inside whole-stage codegen AND each metric has an exactly
- * equivalent DuckDB SQL form for the driver's oracle compare. Integer
- * counting uses the replace-trick (`(len(s) - len(replace(s, t, ''))) /
- * len(t)`), which has identical semantics (non-overlapping, left-to-right)
- * in every engine.
+ * Design rule: kernels in `src/main`, declarative references in
+ * `src/test`. Where a per-document metric is cheaper as one JVM pass than
+ * as a tree of built-in column functions (marker counts, quality
+ * primitives, BPE token count, winnowing, repetition), the pass ships as a
+ * `*Kernel` wrapped in a deterministic UDF, and its declarative twin — the
+ * form the DuckDB oracle mirrors — lives in the test tree
+ * (`TextReference`). A kernel ≡ reference spec pins each pair, null text
+ * included (null text → null). The twins still kept here (`langId`,
+ * `qualityScore`, `repetitionPrims`) are the ones
+ * [[graft.operators.CurateConfig]]`.kernels = false` reaches. Everything
+ * else is built from codegen'd built-in column functions, so it stays
+ * inside whole-stage codegen. Integer counting uses the replace-trick
+ * (`(len(s) - len(replace(s, t, ''))) / len(t)`), which has identical
+ * semantics (non-overlapping, left-to-right) in every engine.
  *
  * Scale: all operators are embarrassingly parallel per-row projections —
  * no shuffle, no state — so they pipeline into whatever scan feeds them
@@ -122,37 +129,16 @@ object TextAnalysis {
   /** Stopword list shared by quality metrics (and their SQL oracle). */
   val qualityStopwords: Seq[String] = Seq("the", "and", "of", "to", "a", "in", "is")
 
-  /** Quality features per document. Every ratio is a single IEEE division
-    * of integer-derived values, so the DuckDB oracle that mirrors the same
-    * arithmetic is bit-identical — no round() fuzz needed. */
-  def qualityColumns(text: Column): Seq[Column] = {
-    val nChars = length(text).cast("long")
-    val nWords = wordCount(text)
-    val punct = charClassCount(text, """.,;:!?""")
-    val digits = charClassCount(text, "0-9")
-    val upper = charClassCount(text, "A-Z")
-    val stop = qualityStopwords
-      .map(w => countOcc(padded(text), s" $w ")).reduce(_ + _)
-    val safeChars = greatest(nChars, lit(1L)).cast("double")
-    val safeWords = greatest(nWords, lit(1L)).cast("double")
-    Seq(
-      nChars.as("n_chars"),
-      nWords.as("n_words"),
-      (punct.cast("double") / safeChars).as("punct_ratio"),
-      (digits.cast("double") / safeChars).as("digit_ratio"),
-      (upper.cast("double") / safeChars).as("upper_ratio"),
-      (stop.cast("double") / safeWords).as("stopword_ratio"),
-      (nChars.cast("double") / safeWords).as("avg_word_len"))
-  }
-
   /** One-pass JVM mirror of q22's INTEGER primitives —
     * (n_chars, n_words, punct, digits, upper, stop) — over one document:
-    * the declarative form pays three regexp_replace copies of the raw text
-    * (char classes), two normalizations (word count, used twice) and seven
-    * replace copies of the padded text (stopwords, also used twice). Every
+    * the declarative reference (`TextReference.qualityColumns`) pays three
+    * regexp_replace copies of the raw text (char classes), two
+    * normalizations (word count, used twice) and seven replace copies of
+    * the padded text (stopwords, also used twice). Every
     * downstream ratio stays a DECLARATIVE single IEEE division of these
     * integers ([[qualityColumnsFromPrims]]), so oracle arithmetic is
-    * untouched. ASCII-safe corpus assumption as [[normTextJvm]]. */
+    * untouched. ASCII-safe corpus assumption as [[normTextJvm]]. Null text
+    * → null. */
   def qualityPrimsKernel(text: String): Array[Long] = {
     if (text == null) return null
     var punct = 0L; var digits = 0L; var upper = 0L
@@ -180,8 +166,10 @@ object TextAnalysis {
   val quality_prims_udf: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf((s: String) => qualityPrimsKernel(s))
 
-  /** [[qualityColumns]] rebuilt from a materialized [[qualityPrimsKernel]]
-    * array column — identical names, identical single-IEEE-op arithmetic. */
+  /** q22's quality features from a materialized [[qualityPrimsKernel]]
+    * array column: every ratio is a single IEEE division of integer-derived
+    * values, so the DuckDB oracle that mirrors the same arithmetic is
+    * bit-identical — no round() fuzz needed. */
   def qualityColumnsFromPrims(p: Column): Seq[Column] = {
     val nChars = element_at(p, 1)
     val nWords = element_at(p, 2)
@@ -290,10 +278,8 @@ object TextAnalysis {
    * exact), summed as integers (order-free), floored mean — a double mean
    * would hash-differ by summation order. ONE aggregate over the corpus.
    */
-  def sourceQualityStats(
-      df: DataFrame, srcCol: Column, textCol: Column, kernels: Boolean = true): DataFrame = {
-    val q = if (kernels) qualityScoreFromPrims(quality_prims_udf(textCol))
-            else qualityScore(textCol)
+  def sourceQualityStats(df: DataFrame, srcCol: Column, textCol: Column): DataFrame = {
+    val q = qualityScoreFromPrims(quality_prims_udf(textCol))
     df.select(srcCol.as("source"), floor(q * 1000).as("qpm"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("qpm")).as("qpm_sum"))
@@ -304,9 +290,8 @@ object TextAnalysis {
     * gate shape: the surviving source list is tiny (≤ #sources) and
     * broadcast, so the corpus side never shuffles. */
   def filterLowQualitySources(
-      df: DataFrame, srcCol: Column, textCol: Column,
-      minAvgPermille: Long, kernels: Boolean = true): DataFrame = {
-    val keep = sourceQualityStats(df, srcCol, textCol, kernels)
+      df: DataFrame, srcCol: Column, textCol: Column, minAvgPermille: Long): DataFrame = {
+    val keep = sourceQualityStats(df, srcCol, textCol)
       .filter(col("avg_quality_permille") >= minAvgPermille)
       .select(col("source").as("__keep_src"))
     df.join(broadcast(keep), srcCol === col("__keep_src"), "left_semi")
@@ -319,12 +304,9 @@ object TextAnalysis {
 
   /** BPE-ish pre-tokenizer count: letter runs, single digits, single
     * non-alnum glyphs — the GPT-2-style pre-split cardinality, a cheap
-    * proxy for "how many tokens will the tokenizer emit". */
-  def bpeTokenCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]"), lit(0))).cast("long")
-
-  /** One-pass JVM mirror of [[bpeTokenCount]]. The alternation
-    * `[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]` decomposes exactly into
+    * proxy for "how many tokens will the tokenizer emit": the match count
+    * of the alternation `[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]`, which decomposes
+    * exactly into
     * (maximal ASCII-letter runs) + (every other non-whitespace code
     * point), counted in a single scan with zero allocation —
     * `regexp_extract_all` materializes every match into an array just to
@@ -332,8 +314,9 @@ object TextAnalysis {
     * r4→r5 q23 bench anomaly: ~1 s of C2 warm-up landing inside one
     * query's timed window). Iterates CODE POINTS, not chars: Java regex
     * matches `[^…]` once per code point, so a surrogate-pair glyph is ONE
-    * token. `\s` is Java's [ \t\n\x0B\f\r] — the semantics the
-    * declarative twin has today. Parity is spec-pinned (PipelineSpec). */
+    * token. `\s` is Java's [ \t\n\x0B\f\r] — the semantics of the
+    * declarative reference (`TextReference.bpeTokenCount`, the form the
+    * q23 oracle mirrors). Parity is spec-pinned (PipelineSpec). */
   def bpeTokenCountKernel(text: String): java.lang.Long = {
     if (text == null) return null
     var i = 0
@@ -400,42 +383,6 @@ object TextAnalysis {
   /** Content fingerprint: md5 of the normalized text — the exact-dedup key. */
   def fingerprintMd5(text: Column): Column = md5(normText(text))
 
-  /** Char k-gram rolling hashes of the normalized text — stage 1 of
-    * winnowing. Project this ONCE into a column, then feed the attribute to
-    * [[winnowFromGrams]]: inlining it would re-expand the O(n·k) hash pass
-    * per window element (O(n²·k) per row — observed as a hang at 500-char
-    * docs). Same staging rule as [[langScoreFromPadded]]. */
-  def charGramHashes(text: Column, k: Int = 8): Column = {
-    val n = normText(text)
-    transform(
-      sequence(lit(1), greatest(length(n) - (k - 1), lit(1))),
-      i => graft.functions.Hash64.h64(substring(n, i, lit(k))))
-  }
-
-  /** Winnowing (Schleimer et al., SIGMOD'03) stage 2: min hash of each
-    * sliding window of `w` grams, deduped+sorted. `grams` must be a
-    * materialized column attribute (see [[charGramHashes]]). */
-  def winnowFromGrams(grams: Column, w: Int = 16): Column = {
-    val windows = when(size(grams) <= w, array(array_min(grams))).otherwise(
-      array_distinct(transform(
-        sequence(lit(0), size(grams) - w),
-        j => array_min(slice(grams, j + 1, lit(w))))))
-    sort_array(windows)
-  }
-
-  /** Single-expression convenience form — ONLY for short texts/tests (the
-    * unstaged tree is quadratic; see [[charGramHashes]]). */
-  def winnowingFingerprints(text: Column, k: Int = 8, w: Int = 16): Column =
-    winnowFromGrams(charGramHashes(text, k), w)
-
-  /** JVM winnowing kernel — semantically identical to
-    * `winnowFromGrams(charGramHashes(text))` but ~50x cheaper: one pass
-    * over the chars, a monotonic deque for the sliding-window min (O(n)
-    * amortized instead of O(n·w) slice/array_min trees), and md5 hashed
-    * straight from the char buffer. This is the one operator family where
-    * a deterministic UDF beats built-in higher-order functions — the
-    * interpreted `transform`/`slice` chain costs ~50 ms/doc. Parity with
-    * the declarative form (and the DuckDB oracle) is asserted by spec. */
   /** EXACT [[normText]] mirror for JVM kernel paths: lower, \s+ → ' ', trim
     * (corpus is ASCII-safe; both engines' lower() agree on the full BMP
     * anyway for our fixtures). Parity with the column form is asserted by
@@ -443,8 +390,18 @@ object TextAnalysis {
   def normTextJvm(text: String): String =
     text.toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ").trim
 
+  /** Winnowing (Schleimer et al., SIGMOD'03) JVM kernel: md5-derived char
+    * k-gram hashes of the normalized text, then the deduped, sorted min
+    * hash of each sliding window of `w` grams (one window — the min of all
+    * grams — when there are at most `w`). One pass over the chars, a
+    * monotonic deque for the sliding-window min (O(n) amortized instead of
+    * O(n·w) slice/array_min trees) and md5 hashed straight from the char
+    * buffer: ~50x cheaper than the declarative higher-order form
+    * (`TextReference.winnowingFingerprints`, which the q35 oracle
+    * mirrors), whose interpreted `transform`/`slice` chain costs ~50
+    * ms/doc. Null text → null fingerprints. Parity is spec-pinned. */
   def winnowKernel(text: String, k: Int = 8, w: Int = 16): Array[Long] = {
-    if (text == null) return Array.empty
+    if (text == null) return null
     val nt = normTextJvm(text)
     val nGrams = math.max(nt.length - (k - 1), 1)
     val grams = new Array[Long](nGrams)

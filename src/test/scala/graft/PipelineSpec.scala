@@ -39,10 +39,10 @@ class PipelineSpec extends AnyFunSuite {
       2L -> "1234 5678 90!!!! ???? 00",
       3L -> "")
     val out = d.select(Seq($"doc_id", TextAnalysis.qualityScore($"text").as("q"))
-        ++ TextAnalysis.qualityColumns($"text"): _*)
+        ++ TextReference.qualityColumns($"text"): _*)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(out(1L) > out(2L), s"clean ${out(1L)} should beat junk ${out(2L)}")
-    val ratios = d.select(TextAnalysis.qualityColumns($"text"): _*).collect()
+    val ratios = d.select(TextReference.qualityColumns($"text"): _*).collect()
     ratios.foreach { r =>
       (2 until 7).foreach { i =>
         val v = r.getDouble(i)
@@ -54,7 +54,7 @@ class PipelineSpec extends AnyFunSuite {
   test("token counts: ws and bpe-ish pre-tokenizer") {
     val d = docs(1L -> "hello world, it's 42 degrees!", 2L -> "", 3L -> "one")
     val out = d.select($"doc_id", TextAnalysis.wsTokenCount($"text"),
-      TextAnalysis.bpeTokenCount($"text")).collect()
+      TextReference.bpeTokenCount($"text")).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(out(1L)._1 == 5)
     // hello | world | , | it | ' | s | 4 | 2 | degrees | ! = 10
@@ -66,7 +66,7 @@ class PipelineSpec extends AnyFunSuite {
   test("winnowing: identical text → identical fingerprints; edit shares most") {
     val base = "the quick brown fox jumps over the lazy dog again and again for testing"
     val d = docs(1L -> base, 2L -> base, 3L -> base.replace("lazy", "hazy"))
-    val fps = d.select($"doc_id", TextAnalysis.winnowingFingerprints($"text").as("f"))
+    val fps = d.select($"doc_id", TextReference.winnowingFingerprints($"text").as("f"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
     assert(fps(1L) == fps(2L))
     val overlap = fps(1L).intersect(fps(3L)).size.toDouble / fps(1L).size
@@ -143,10 +143,6 @@ class PipelineSpec extends AnyFunSuite {
     val ann = Similarity.lshAnnTopK(vecs, vecs.filter($"vec_id" < 3), k = 4, nBits = 4)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     assert(ann.forall(p => p._2 >= 0 && p._2 < 30 && p._1 != p._2))
-    val dups = Dedup.embeddingNearDupPairs(
-      vecs.withColumn("label", lit(0)), "label", minCos = 0.999)
-    // sin-generated vectors: i and i+? rarely collide; just exercise the path
-    assert(dups.columns.toSeq == Seq("id_a", "id_b", "cos"))
   }
 
   test("fused cosine expressions ≡ declarative HOF forms, bit-exact (incl. degenerate shapes)") {
@@ -200,14 +196,15 @@ class PipelineSpec extends AnyFunSuite {
       "a a a a",                       // overlapping-pad case: " a " at shared spaces
       "der  Hund   und\tdie Katze und das ist",
       "THE quick AND lazy OF dog TO the IN in the",
-      "le la et les des le la " * 10)
+      "le la et les des le la " * 10,
+      null)
     val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val langs = TextAnalysis.langMarkers.map(_._1)
     val declarative = d
       .select(col("doc_id"), TextAnalysis.padded($"text").as("pt"))
       .select(col("doc_id") +: langs.map(l =>
         TextAnalysis.langScoreFromPadded(col("pt"), l).as(s"s_$l")): _*)
-      .collect().map(r => r.getLong(0) -> (1 to langs.size).map(r.getLong)).toMap
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     val markers = TextAnalysis.langMarkers
       .flatMap { case (_, ws) => ws.map(w => s" $w ") }.toArray
     val mc = TextAnalysis.markerCountsUdf(markers)
@@ -217,7 +214,7 @@ class PipelineSpec extends AnyFunSuite {
         (0 until nPerLang).map(j => element_at(col("mc"), i * nPerLang + j + 1))
           .reduce(_ + _).as(s"s_$l")
       }: _*)
-      .collect().map(r => r.getLong(0) -> (1 to langs.size).map(r.getLong)).toMap
+      .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     texts.indices.foreach { i =>
       assert(kernel(i.toLong) == declarative(i.toLong),
         s"kernel/declarative marker-count divergence on doc $i")
@@ -231,9 +228,10 @@ class PipelineSpec extends AnyFunSuite {
       "The quick brown fox; jumps over 42 LAZY dogs!? a a the of",
       "1234 5678 90!!!! ???? 00",
       "einz zwei drei " * 40,
-      "a A. a, a; a: a! a?")
+      "a A. a, a; a: a! a?",
+      null)
     val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val declarative = d.select(col("doc_id") +: TextAnalysis.qualityColumns($"text")
+    val declarative = d.select(col("doc_id") +: TextReference.qualityColumns($"text")
         :+ TextAnalysis.qualityScore($"text").as("quality_score"): _*)
       .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
     val kernel = d.select(col("doc_id"), TextAnalysis.quality_prims_udf($"text").as("qp"))
@@ -259,7 +257,7 @@ class PipelineSpec extends AnyFunSuite {
       "  leading and trailing   ",
       null)
     val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    val declarative = d.select(col("doc_id"), TextAnalysis.bpeTokenCount($"text").as("n"))
+    val declarative = d.select(col("doc_id"), TextReference.bpeTokenCount($"text").as("n"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
     val kernel = d.select(col("doc_id"), TextAnalysis.bpeTokenCountUdf($"text").as("n"))
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
@@ -274,7 +272,7 @@ class PipelineSpec extends AnyFunSuite {
       (i.toLong, words.mkString(" ") + s" — n°$i! (${i * 37 % 1000})")
     }
     val both = docs(gen: _*).select(
-      TextAnalysis.bpeTokenCount($"text").as("a"),
+      TextReference.bpeTokenCount($"text").as("a"),
       TextAnalysis.bpeTokenCountUdf($"text").as("b"))
     assert(both.filter(!(col("a") <=> col("b"))).count() == 0L)
   }
@@ -285,18 +283,25 @@ class PipelineSpec extends AnyFunSuite {
       "short",
       "exactly23charsofstring!",
       "The quick brown fox JUMPS over the lazy dog; " * 6,
-      (0 until 400).map(i => s"w${(i * 37) % 101}").mkString(" "))
+      (0 until 400).map(i => s"w${(i * 37) % 101}").mkString(" "),
+      null)
     val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val declarative = d
-      .select($"doc_id", TextAnalysis.charGramHashes($"text").as("g"))
-      .select($"doc_id", TextAnalysis.winnowFromGrams($"g").as("fps"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
+      .select($"doc_id", TextReference.charGramHashes($"text").as("g"))
+      .select($"doc_id", TextReference.winnowFromGrams($"g").as("fps"))
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toSeq)).toMap
     val kernel = d.select($"doc_id", TextAnalysis.winnow_udf($"text").as("fps"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
+      .collect().map(r => r.getLong(0) -> Option(r.getSeq[Long](1)).map(_.toSeq)).toMap
     texts.indices.foreach { i =>
       assert(kernel(i.toLong) == declarative(i.toLong),
         s"kernel/declarative divergence on doc $i")
     }
+    // null text → null fingerprints, so q35's n_fps is null like the
+    // oracle's len(NULL)
+    assert(kernel(5L).isEmpty)
+    val nFps = d.filter($"doc_id" === 5L)
+      .select(size(TextAnalysis.winnow_udf($"text"))).head()
+    assert(nFps.isNullAt(0), s"q35 n_fps on null text: $nFps")
   }
 
   test("simhash kernel ≡ declarative explode+agg build, both hasher families") {
@@ -309,7 +314,7 @@ class PipelineSpec extends AnyFunSuite {
       (0 until 300).map(i => s"tok${(i * 53) % 127}").mkString(" "))
     val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     for (h <- Seq(dedup.DedupHasher.crossEngine, dedup.DedupHasher.production)) {
-      val declarative = Dedup.simhash64(d, hasher = h)
+      val declarative = DedupReference.simhash64(d, hasher = h)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val kernel = Dedup.simhash64Kernel(d, hasher = h)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -350,7 +355,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(declarative == Seq(0L, 2L), "declarative must drop the null-text row only")
     assert(kernel == declarative, "kernel must emit exactly the declarative row set")
     // simhash pins the same rule through its inner explode — assert it too
-    val sd = Dedup.simhash64(d).collect().map(_.getLong(0)).sorted.toSeq
+    val sd = DedupReference.simhash64(d).collect().map(_.getLong(0)).sorted.toSeq
     val sk = Dedup.simhash64Kernel(d).collect().map(_.getLong(0)).sorted.toSeq
     assert(sd == Seq(0L, 2L) && sk == sd)
   }
@@ -1117,12 +1122,9 @@ class PipelineSpec extends AnyFunSuite {
       "fixture must exercise an old×old pair the incremental run skips")
     assert(touch.exists { case (a, b) => a >= 11L && b >= 11L }, "need a new×new pair")
     assert(touch.exists { case (a, b) => a < 11L && b >= 11L }, "need a new×old pair")
-    for (kern <- Seq(false, true)) {
-      val inc = Dedup.incrementalNearDupPairs(old, fresh, k = 32, bands = 8,
-          minJ = 0.5, kernel = kern)
-        .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-      assert(inc == touch, s"kernel=$kern: ${inc.diff(touch)} / ${touch.diff(inc)}")
-    }
+    val inc = Dedup.incrementalNearDupPairs(old, fresh, k = 32, bands = 8, minJ = 0.5)
+      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
+    assert(inc == touch, s"${inc.diff(touch)} / ${touch.diff(inc)}")
     // bucketCap counts the UNION's population in both pipelines: with cap=2
     // the junk bucket (3 members) drops from BOTH, the 2-member buckets stay
     val sigsAll = Dedup.minhashSignatures(all, 32)
@@ -1228,14 +1230,11 @@ class PipelineSpec extends AnyFunSuite {
     assert(stats("good")._2 > stats("farm")._2,
       s"good source must out-score the farm: $stats")
     val thr = (stats("good")._2 + stats("farm")._2) / 2
-    for (kern <- Seq(true, false)) {
-      val kept = TextAnalysis.filterLowQualitySources(
-          d, $"source", $"text", minAvgPermille = thr, kernels = kern)
-        .select($"doc_id").as[Long].collect().toSet
-      // doc 5 is individually fine but its SOURCE fails the gate — the
-      // whole-domain semantics this operator exists for
-      assert(kept == Set(1L, 2L), s"kernels=$kern: kept $kept")
-    }
+    val kept = TextAnalysis.filterLowQualitySources(d, $"source", $"text", minAvgPermille = thr)
+      .select($"doc_id").as[Long].collect().toSet
+    // doc 5 is individually fine but its SOURCE fails the gate — the
+    // whole-domain semantics this operator exists for
+    assert(kept == Set(1L, 2L), s"kept $kept")
   }
 
   test("rare tokens: corpus-derived vocab, deterministic tie cut, floored permille") {
