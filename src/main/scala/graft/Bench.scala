@@ -166,18 +166,18 @@ object Bench {
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     spark.catalog.clearCache()
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = SparkEntry.registry.map { query =>
       val t0 = System.nanoTime()
       // noop sink: evaluates every output column (count() would prune the
       // projection and time only the scan)
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: ${e.getMessage}") }
+      try { query.build(spark, sfDir).write.format("noop").mode("overwrite").save() }
+      catch { case e: Throwable => System.err.println(s"[bench] ${query.name} failed: ${e.getMessage}") }
       val sec = (System.nanoTime() - t0) / 1e9
       // outside the timed window: queries share no caches by design, and a
       // pinned output (q16's globalSeqPinned) must not accumulate across
       // queries — each measurement starts cache-clean
       spark.catalog.clearCache()
-      name -> sec
+      query.name -> sec
     }
 
     val (fetched, discovered, crawlSec) = crawlBench(spark, crawlPagesFor(sfDir), rounds = 3, parts = cpus)

@@ -85,7 +85,6 @@ object CrawlRound {
       dedupedBloomDefinite: Long,
       dedupedExact: Long,
       textMismatches: Long,
-      frontierLeft: Long,
       robotsFetched: Long = 0L)
 
   private val FrontierCols: Seq[String] =
@@ -574,7 +573,6 @@ object CrawlRound {
       dedupedBloomDefinite = nDiscovered - nMight, // bloom said "definitely new"
       dedupedExact = nMight - nVerifiedNew, // truly seen (bloom positives that held)
       textMismatches = nMismatch,
-      frontierLeft = -1L,
       robotsFetched = out.robotsFetchedCount)
   }
 }

@@ -110,24 +110,13 @@ final class HadoopSnapshotCatalog(rootDir: String) extends StateCatalog {
 
   override def load(spark: SparkSession, table: String, atRound: Option[Int]): Option[DataFrame] = {
     val upTo = atRound.orElse(latestRound).getOrElse(return None)
-    // walk back to the newest manifest ≤ upTo that mentions the table
-    var r = upTo
-    while (r >= 0) {
-      if (Files.exists(manifestPath(r))) {
-        val m = readManifest(r)
-        m.get(s"table.$table") match {
-          case Some(rel) => return Some(spark.read.parquet(
-            rel.split(',').map(r => root.resolve(r).toString).toIndexedSeq: _*))
-          case None => // table not rewritten this round — keep walking back
-        }
-      }
-      r -= 1
-    }
-    None
+    relsOf(table, upTo).map(rel =>
+      spark.read.parquet(rel.split(',').map(r => root.resolve(r).toString).toIndexedSeq: _*))
   }
 
-  /** Relpath chain for `table` as of the newest manifest ≤ `upTo`
-    * (comma-separated when the table has append deltas). */
+  /** Relpath chain for `table` as of the newest manifest ≤ `upTo` that
+    * mentions it (comma-separated when the table has append deltas); a
+    * manifest that did not rewrite the table is walked past. */
   private def relsOf(table: String, upTo: Int): Option[String] = {
     var r = upTo
     while (r >= 0) {

@@ -21,32 +21,23 @@ final case class ParsedPage(text: String, links: Array[String])
 
 object CrawlUdfs {
 
-  /** (html bytes, base url) → resolved absolute outlink array (op 11). */
-  val extractLinksUdf = udf((html: Array[Byte], base: String) =>
-    Html.extractLinks(html, base))
-
-  /** html bytes → visible text per the frozen FIXTURES.md §F3 spec (op 12). */
-  val extractTextUdf = udf((html: Array[Byte]) => Html.extractText(html))
-
   /** (html bytes, base url) → array of (href, anchor_text) structs — the
     * web-graph description signal (Html.extractAnchors). */
   val extractAnchorsUdf = udf((html: Array[Byte], base: String) =>
     Html.extractAnchors(html, base))
 
-  /** Fused ops 11+12 for the crawl parse path: ONE UTF-8 decode of the page
-    * bytes feeds both extractions (the separate UDFs decode ~20 KB twice per
-    * page — measured parse bandwidth). Same frozen semantics, same nulls:
-    * null html → null struct (the caller guards on status anyway). */
+  /** Fused ops 11+12 for the crawl parse path (outlinks per
+    * [[Html.extractLinks]], visible text per the frozen FIXTURES.md §F3
+    * spec of [[Html.extractText]]): ONE UTF-8 decode of the page bytes
+    * feeds both extractions (separate extractions decode ~20 KB twice per
+    * page — measured parse bandwidth). Null html → null struct (the caller
+    * guards on status anyway). */
   val parsePageUdf = udf((html: Array[Byte], base: String) =>
     if (html == null) null
     else {
       val (text, links) = Html.extractAll(html, base)
       ParsedPage(text, links)
     })
-
-  /** robots.txt body → flat rule list (op 13). */
-  val robotsParseUdf = udf((body: String) =>
-    Robots.parse(body).map(r => (r.agent, r.allow, r.path)))
 
   /** (rules, ua, url path) → allowed? (op 14, RFC 9309 longest-match). */
   val robotsAllowsUdf = udf((rules: Seq[(String, Boolean, String)], ua: String, path: String) =>
@@ -55,26 +46,19 @@ object CrawlUdfs {
       else rules.map(t => RobotRule(t._1, t._2, t._3)).toArray,
       ua, path))
 
-  /** (robots body, ua) → Crawl-delay in ms, null when undeclared (op 13
-    * extension; group-selection semantics mirror robots_allows). */
-  val robotsCrawlDelayUdf = udf((body: String, ua: String) =>
-    Robots.crawlDelayMs(body, ua))
-
-  /** (robots body, ua) → struct(rules, crawl_delay_ms, sitemaps) in ONE
-    * body scan — the crawl's robots-acquisition paths need several facets
-    * of the same body, and the single-facet UDFs above each re-run the
-    * line scanner per call (3 scans per row at bootstrap, 2 in-loop).
-    * Facet semantics are [[Robots.scan]]'s, identical to robots_parse /
-    * robots_crawl_delay_ms / robots_sitemaps by construction (they are
-    * views over the same scan). */
+  /** (robots body, ua) → struct(`_1` rules, `_2` crawl_delay_ms, `_3`
+    * sitemaps) in ONE body scan (op 13 and its Crawl-delay / Sitemap
+    * extensions). Facet semantics are [[Robots.scan]]'s, identical to
+    * [[Robots.parse]] / [[Robots.crawlDelayMs]] / [[Robots.sitemaps]] by
+    * construction (they are views over the same scan): the rule list is
+    * flat and ua-independent, the delay is in ms and null when undeclared
+    * (group selection as in robots_allows), and the sitemaps ignore groups
+    * and drop non-http URLs. */
   val robotsParseUaUdf = udf((body: String, ua: String) => {
     val p = Robots.scan(body)
     (p.rules.map(r => (r.agent, r.allow, r.path)).toSeq,
       Robots.delayFor(p.delays, ua), p.sitemaps.toSeq)
   })
-
-  /** robots body → `Sitemap:` URLs (group-independent per sitemaps.org). */
-  val robotsSitemapsUdf = udf((body: String) => Robots.sitemaps(body))
 
   /** sitemap XML bytes → `<loc>` URLs (op 2 extension: sitemap seeding). */
   val sitemapLocsUdf = udf((xml: Array[Byte]) => Html.extractSitemapLocs(xml))
@@ -82,18 +66,12 @@ object CrawlUdfs {
   /** (base, href) → absolute url or null (RFC 3986 §5.2 resolution). */
   val resolveUdf = udf((base: String, ref: String) => UrlCanon.resolve(base, ref))
 
-  def extract_links(html: Column, base: Column): Column = extractLinksUdf(html, base)
-  def extract_text(html: Column): Column = extractTextUdf(html)
   def extract_anchors(html: Column, base: Column): Column = extractAnchorsUdf(html, base)
   def parse_page(html: Column, base: Column): Column = parsePageUdf(html, base)
-  def robots_parse(body: Column): Column = robotsParseUdf(body)
   def robots_allows(rules: Column, ua: Column, path: Column): Column =
     robotsAllowsUdf(rules, ua, path)
-  def robots_crawl_delay_ms(body: Column, ua: Column): Column =
-    robotsCrawlDelayUdf(body, ua)
   def robots_parse_ua(body: Column, ua: Column): Column =
     robotsParseUaUdf(body, ua)
-  def robots_sitemaps(body: Column): Column = robotsSitemapsUdf(body)
   def sitemap_locs(xml: Column): Column = sitemapLocsUdf(xml)
 
   /** Path+query part of a canonical URL — cheap native ops, no UDF. */

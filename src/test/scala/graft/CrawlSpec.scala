@@ -800,7 +800,8 @@ class CrawlSpec extends AnyFunSuite {
       (u, u, h, h.split('.').reverse.mkString("."), 0, 0, null: String)
     }.toDF("canon_url", "raw_url", "host", "host_rev", "depth", "discovery_round", "src_url")
     val robots = Seq(("zzz.test", "User-agent: *\nAllow: /")).toDF("host", "robots_body")
-      .withColumn("rules", graft.functions.CrawlUdfs.robots_parse(col("robots_body")))
+      .withColumn("rules", graft.functions.CrawlUdfs
+        .robots_parse_ua(col("robots_body"), lit(cfg.userAgent)).getField("_1"))
       .select("host", "rules")
     val c = cfg.copy(rankPriority = true, roundBudget = 4, numPartitions = 4)
     val out = CrawlRound.run(frontier, Seq.empty[String].toDF("canon_url"),

@@ -234,11 +234,11 @@ class HtmlRobotsSpec extends AnyFunSuite {
     assert(Robots.crawlDelayMs(two, "b").isEmpty)
   }
 
-  test("robots_parse_ua UDF ≡ robots_parse + robots_crawl_delay_ms + robots_sitemaps") {
-    // the combined one-scan UDF feeds the crawl's acquisition paths; the
-    // single-facet UDFs back the oracle queries — pin the struct-field
-    // plumbing (array-of-rule tuples, nullable delay, sitemap array) to
-    // the facet triple
+  test("robots_parse_ua UDF ≡ Robots.parse + crawlDelayMs + sitemaps") {
+    // the one-scan UDF feeds the crawl's acquisition paths and the robots
+    // oracle queries (q20 rules, q48 delay, q49 sitemaps) — pin its
+    // struct-field plumbing (array-of-rule tuples, nullable delay, sitemap
+    // array) to the Scala facet triple
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
@@ -246,21 +246,21 @@ class HtmlRobotsSpec extends AnyFunSuite {
       "User-agent: crawlerspark\nCrawl-delay: 2.5\nDisallow: /x\n\nUser-agent: *\nCrawl-delay: 9\nAllow: /x/ok",
       "User-agent: *\nDisallow: /private\nSitemap: https://x.com/s.xml\nSitemap: /relative/no",
       "Disallow: /implicit-star\nCrawl-delay: soon\nsitemap: http://y.com/a.xml",
-      "", null: String).toDF("robots_body")
-    val ua = lit("crawlerspark")
-    val got = bodies
-      .withColumn("p", graft.functions.CrawlUdfs.robots_parse_ua(col("robots_body"), ua))
-      .withColumn("rules0", graft.functions.CrawlUdfs.robots_parse(col("robots_body")))
-      .withColumn("delay0",
-        graft.functions.CrawlUdfs.robots_crawl_delay_ms(col("robots_body"), ua))
-      .withColumn("maps0", graft.functions.CrawlUdfs.robots_sitemaps(col("robots_body")))
-      .select(col("p._1").as("rules"), col("p._2").as("delay"), col("p._3").as("maps"),
-        col("rules0"), col("delay0"), col("maps0"))
+      "", null: String)
+    val ua = "crawlerspark"
+    val got = bodies.toDF("robots_body")
+      .withColumn("p", graft.functions.CrawlUdfs.robots_parse_ua(col("robots_body"), lit(ua)))
+      .select(col("robots_body"), col("p._1").as("rules"), col("p._2").as("delay"),
+        col("p._3").as("maps"))
       .collect()
+    assert(got.length == bodies.length)
     got.foreach { r =>
-      assert(r.getSeq[Any](0) == r.getSeq[Any](3), s"rules facet diverged: $r")
-      assert(r.get(1) == r.get(4), s"delay facet diverged: $r")
-      assert(r.getSeq[Any](2) == r.getSeq[Any](5), s"sitemaps facet diverged: $r")
+      val body = r.getString(0)
+      val rules = r.getSeq[org.apache.spark.sql.Row](1)
+        .map(x => RobotRule(x.getString(0), x.getBoolean(1), x.getString(2)))
+      assert(rules == Robots.parse(body).toSeq, s"rules facet diverged: $r")
+      assert(Option(r.get(2)) == Robots.crawlDelayMs(body, ua), s"delay facet diverged: $r")
+      assert(r.getSeq[String](3) == Robots.sitemaps(body).toSeq, s"sitemaps facet diverged: $r")
     }
   }
 
