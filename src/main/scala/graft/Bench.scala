@@ -174,7 +174,7 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] ${query.name} failed: ${e.getMessage}") }
       val sec = (System.nanoTime() - t0) / 1e9
       // outside the timed window: queries share no caches by design, and a
-      // pinned output (q16's globalSeqPinned) must not accumulate across
+      // pinned output (q16's globalCumsumPinned) must not accumulate across
       // queries — each measurement starts cache-clean
       spark.catalog.clearCache()
       query.name -> sec

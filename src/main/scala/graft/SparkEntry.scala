@@ -149,32 +149,36 @@ object SparkEntry {
   private val sqlD2: String =
     "SELECT doc_id, text FROM documents UNION ALL SELECT doc_id + 1000000, text FROM documents"
   /** Unrolled Lloyd's-k-means CTE chain mirroring Similarity.kmeansFit
-    * bit-for-bit: init c0 = the k lowest-vec_id quantized vectors;
-    * iteration t = assignment a{t} (argmin of exact BIGINT squared-L2,
-    * ties to the lowest cell) then per-dim floored-integer-mean update
-    * c{t+1} (empty cells keep their centroid via the LEFT JOIN coalesce);
-    * `af` = the final assignment under c{iters}. Floor division is spelled
-    * `(s - ((s % n + n) % n)) / n` — the subtraction makes the numerator
-    * exactly divisible, so the quotient is exact in any division
-    * semantics (Math.floorDiv on the Spark side). The distance is cast to
-    * BIGINT: DuckDB's `list_sum` over BIGINT returns HUGEINT, Spark's sum
-    * is a long. */
+    * bit-for-bit: `valid` = the quantized vectors kmeansFit accepts
+    * (non-null, `dim` long, no null component; `list_count` counts the
+    * non-null ones); init c0 = the k lowest-vec_id valid vectors; iteration t = assignment a{t} of the valid
+    * vectors (argmin of exact BIGINT squared-L2, ties to the lowest cell)
+    * then per-dim floored-integer-mean update c{t+1} (empty cells keep
+    * their centroid via the LEFT JOIN coalesce); `af` = the final
+    * assignment under c{iters} plus every invalid row with a NULL cell and
+    * dist. Floor division is spelled `(s - ((s % n + n) % n)) / n` — the
+    * subtraction makes the numerator exactly divisible, so the quotient is
+    * exact in any division semantics (Math.floorDiv on the Spark side).
+    * The distance is cast to BIGINT: DuckDB's `list_sum` over BIGINT
+    * returns HUGEINT, Spark's sum is a long. */
   private def sqlKmeansCtes(k: Int, iters: Int, dim: Int): String = {
     def dist(qv: String, cv: String) =
       s"CAST(list_sum(list_transform(range(1, $dim+1), i -> ($qv[i]-$cv[i])*($qv[i]-$cv[i]))) AS BIGINT)"
-    def assign(name: String, cents: String) =
-      s"""$name AS (SELECT vec_id, qv, cell, dist FROM (
+    def assign(cents: String) =
+      s"""SELECT vec_id, qv, cell, dist FROM (
          |  SELECT vec_id, qv, cell, dist,
          |         row_number() OVER (PARTITION BY vec_id ORDER BY dist, cell) AS rn
-         |  FROM (SELECT e.vec_id, e.qv, c.cell, ${dist("e.qv", "c.cv")} AS dist
-         |        FROM e CROSS JOIN $cents c)) WHERE rn = 1)""".stripMargin
+         |  FROM (SELECT v.vec_id, v.qv, c.cell, ${dist("v.qv", "c.cv")} AS dist
+         |        FROM valid v CROSS JOIN $cents c)) WHERE rn = 1""".stripMargin
     val sb = new StringBuilder
-    sb ++= s"e AS (SELECT vec_id, ${sqlQv("embedding")} AS qv FROM embeddings),\n"
+    sb ++= s"e AS (SELECT vec_id, qv, coalesce(len(qv) = $dim AND list_count(qv) = $dim, false) AS ok\n" +
+      s"      FROM (SELECT vec_id, ${sqlQv("embedding")} AS qv FROM embeddings)),\n"
+    sb ++= "valid AS (SELECT vec_id, qv FROM e WHERE ok),\n"
     sb ++= s"dims AS (SELECT unnest(range(1, $dim+1)) AS i),\n"
     sb ++= s"c0 AS (SELECT (row_number() OVER (ORDER BY vec_id)) - 1 AS cell, qv AS cv\n" +
-      s"       FROM (SELECT vec_id, qv FROM e ORDER BY vec_id LIMIT $k)),\n"
+      s"       FROM (SELECT vec_id, qv FROM valid ORDER BY vec_id LIMIT $k)),\n"
     for (t <- 0 until iters) {
-      sb ++= assign(s"a$t", s"c$t") + ",\n"
+      sb ++= s"a$t AS (${assign(s"c$t")}),\n"
       sb ++= s"s$t AS (SELECT cell, i, sum(qv[i]) AS s, count(*) AS n FROM a$t CROSS JOIN dims GROUP BY cell, i),\n"
       sb ++= s"""c${t + 1} AS (SELECT cell, list(v ORDER BY i) AS cv FROM (
                 |  SELECT p.cell, d.i,
@@ -184,7 +188,8 @@ object SparkEntry {
                 |  LEFT JOIN s$t s ON s.cell = p.cell AND s.i = d.i) GROUP BY cell),
                 |""".stripMargin
     }
-    sb ++= assign("af", s"c$iters")
+    sb ++= s"""af AS (${assign(s"c$iters")}
+              |  UNION ALL SELECT vec_id, qv, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT) FROM e WHERE NOT ok)""".stripMargin
     sb.toString
   }
 
@@ -431,14 +436,15 @@ object SparkEntry {
       """SELECT l_orderkey, l_linenumber,
         | row_number() OVER (ORDER BY l_orderkey, l_linenumber) - 1 AS seq
         |FROM lineitem ORDER BY seq""".stripMargin) { (s, d) =>
-      // globalSeqPinned: the ranked OUTPUT is cached and forced, so the
-      // frame stays correct no matter how many times the harness consumes
-      // it (the sort intermediate — whose re-sampled range boundaries made
-      // re-consumption silently wrong — is released inside). The small
+      // globalCumsumPinned with a weight of 1: the ranked OUTPUT is cached
+      // and forced, so the frame stays correct no matter how many times the
+      // harness consumes it (the sort intermediate — whose re-sampled range
+      // boundaries made re-consumption silently wrong — is released
+      // inside). The small
       // output cache (3 narrow columns) lives for the session by design.
-      Ranks.globalSeqPinned(
+      Ranks.globalCumsumPinned(
         t(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber")),
-        "seq", Seq(col("l_orderkey").asc, col("l_linenumber").asc), 8)
+        "seq", None, Seq(col("l_orderkey").asc, col("l_linenumber").asc), 8)
         .orderBy(col("seq"))
     },
 
@@ -757,16 +763,8 @@ object SparkEntry {
          | FROM sc)
          |SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id, cos
          |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin) { (s, d) =>
-      val e = quantizedEmb(s, d)
-      val q = e.filter(col("vec_id") < 20).select(col("vec_id").as("query_id"), col("qv").as("qq"))
-      val c = e.select(col("vec_id").as("neighbor_id"), col("qv").as("qc"))
-      val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-      c.join(broadcast(q))
-        .filter(col("neighbor_id") =!= col("query_id"))
-        .withColumn("cos", Similarity.intCosine(col("qq"), col("qc")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
-        .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+      val e = t(s, d, "embeddings")
+      Similarity.bruteForceTopK(e, e.filter(col("vec_id") < 20), k = 5)
         .orderBy(col("query_id"), col("rank"))
     },
 
@@ -790,7 +788,7 @@ object SparkEntry {
          |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
     }) { (s, d) =>
       val e = t(s, d, "embeddings")
-      Similarity.lshAnnTopKExact(e, e.filter(col("vec_id") < 20), k = 5, nBits = 6, maxDim = 64)
+      Similarity.lshAnnTopK(e, e.filter(col("vec_id") < 20), k = 5, nBits = 6, maxDim = 64)
         .orderBy(col("query_id"), col("rank"))
     },
 

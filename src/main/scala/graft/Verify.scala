@@ -23,7 +23,7 @@ object Verify {
         System.err.println(s"[verify] ${query.name} failed: ${e.getMessage}")
       }
       // queries share no caches by design; dropping whatever a query pinned
-      // (e.g. q16's globalSeqPinned output) keeps repeated-query sessions
+      // (e.g. q16's globalCumsumPinned output) keeps repeated-query sessions
       // from accumulating session-lifetime caches
       spark.catalog.clearCache()
     }

@@ -427,7 +427,7 @@ object Crawl {
           val seenSketches = urlSeenPrev.getOrElse(spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schemas.urlSeen))
           // run() is plan construction PLUS the rank materialization (the
-          // sort cache + counts collect inside globalSeqCached force
+          // sort cache + totals collect inside globalCumsumCached force
           // fetch+parse) — it overlaps the previous round's in-flight commit.
           // rankPriority: distinct + pin the accumulated edge set (the K
           // unrolled LinkRank iterations scan it 2K+1 times), rank it, and

@@ -420,8 +420,8 @@ object CrawlRound {
       when(col("text").isNotNull, sha2(col("text"), 256)).as("text_sha256"),
       col("text_match"), prio.as("priority"), col("outlinks"))
     parseCache.persist()
-    val (rankedSeq, rankSorted, nRanked) = Ranks.globalSeqCachedWithCount(
-      parseCache.drop("outlinks"), "seq0", priorityOrder, cfg.numPartitions)
+    val (rankedSeq, rankSorted, nRanked) = Ranks.globalCumsumCached(
+      parseCache.drop("outlinks"), "seq0", None, priorityOrder, cfg.numPartitions)
     val logged = rankedSeq
       .withColumn("fetch_seq", col("seq0") + lit(fetchSeqBase)).drop("seq0")
     logged.persist()

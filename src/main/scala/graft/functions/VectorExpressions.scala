@@ -10,23 +10,21 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
 /**
- * Fused cosine kernels the generated code calls (top-level object ⇒ static
- * forwarders ⇒ plain static call in codegen).
+ * The sim layer's one score: the cosine of two quantized `array<long>`
+ * vectors (Similarity.intCosine), as a static kernel the generated code
+ * calls (top-level object ⇒ static forwarders ⇒ plain static call in
+ * codegen).
  *
- * Why native: the declarative form is THREE higher-order-function trees per
- * pair — `aggregate(zip_with(a,b,*))` for the dot plus one
- * `aggregate(transform(...))` per norm — and HOFs evaluate a lambda per
- * element and allocate the zipped/transformed array per call; the candidate
- * verify of the embedding dedup/ANN family evaluates this once per
- * candidate PAIR, making it the measured hot spot of q29/q30/q42. One fused
- * loop reads each array once, allocates nothing, and runs inside
- * whole-stage codegen.
+ * Why native: the declarative form (the spec reference in src/test) is
+ * THREE higher-order-function trees per pair — `aggregate(zip_with(a,b,*))`
+ * for the dot plus one per norm — and HOFs evaluate a lambda per element
+ * and allocate the zipped array per call; every candidate verify and top-k
+ * of the sim layer evaluates this once per PAIR. One fused loop reads each
+ * array once, allocates nothing, and runs inside whole-stage codegen.
  *
  * Exactness contract (the oracle gate): bit-identical to the declarative
- * form it replaces. Per-accumulator addition order is the array order the
- * left-fold `aggregate` uses; integer sums are order-free anyway and the
- * double sums replay the same IEEE add sequence; the combine is the same
- * single ops — `d / (sqrt(na) * sqrt(nb))`, zero-norm ⇒ 0.0. Null/length
+ * form. The integer sums are order-free; the combine is the same single
+ * IEEE ops — `d / (sqrt(na) * sqrt(nb))`, zero-norm ⇒ 0.0. Null/length
  * semantics replicate the HOF tree exactly: `zip_with` pads the shorter
  * side with null, which poisons the dot but NOT the norms, so unequal
  * lengths yield null UNLESS a zero norm short-circuits the `when` to 0.0;
@@ -34,7 +32,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
  */
 object VecCosineKernel {
 
-  /** Cosine over quantized long vectors (Similarity.intCosine). */
   def intCos(a: ArrayData, b: ArrayData): java.lang.Double = {
     val n = a.numElements()
     if (n == b.numElements()) {
@@ -61,61 +58,28 @@ object VecCosineKernel {
       else null
     }
   }
-
-  /** Cosine over float/double vectors in double precision
-    * (Similarity.cosine): each product is computed on widened doubles and
-    * accumulated left-to-right, exactly like the `aggregate` left fold. */
-  def floatCos(a: ArrayData, b: ArrayData): java.lang.Double = {
-    val n = a.numElements()
-    if (n == b.numElements()) {
-      var sa = 0.0; var sb = 0.0; var d = 0.0
-      var i = 0
-      while (i < n) {
-        if (a.isNullAt(i) || b.isNullAt(i)) return null
-        val x = a.getFloat(i).toDouble; val y = b.getFloat(i).toDouble
-        sa += x * x; sb += y * y; d += x * y
-        i += 1
-      }
-      val nn = math.sqrt(sa) * math.sqrt(sb)
-      if (nn == 0.0) java.lang.Double.valueOf(0.0)
-      else java.lang.Double.valueOf(d / nn)
-    } else {
-      var sa = 0.0; var i = 0
-      while (i < n) { if (a.isNullAt(i)) return null; val x = a.getFloat(i).toDouble; sa += x * x; i += 1 }
-      var sb = 0.0; i = 0
-      val m = b.numElements()
-      while (i < m) { if (b.isNullAt(i)) return null; val y = b.getFloat(i).toDouble; sb += y * y; i += 1 }
-      if (math.sqrt(sa) * math.sqrt(sb) == 0.0) java.lang.Double.valueOf(0.0)
-      else null
-    }
-  }
 }
 
-/** Base for the two fused-cosine expressions: nullable double out, kernel
-  * dispatch by name (the kernel may return null even on non-null inputs —
-  * degenerate length/element cases above). */
-abstract class FusedCosine extends BinaryExpression {
-  protected def kernel: String // "intCos" | "floatCos"
-  protected def requiredElementType: DataType
+/** Fused `intCosine` over quantized `array<long>` vectors: nullable double
+  * out (the kernel may return null even on non-null inputs — the degenerate
+  * length/element cases above). */
+case class IntCosine(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
+  override def prettyName: String = "int_cosine"
 
   // strict: the kernel reads element slots by physical type — a silently
   // misread array would be a wrong ANSWER, not an error, so reject any
   // other element type at analysis time
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(l, _), ArrayType(r, _))
-        if l == requiredElementType && r == requiredElementType =>
-      TypeCheckResult.TypeCheckSuccess
+    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
     case _ => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<$requiredElementType> inputs, " +
+      s"$prettyName requires two array<bigint> inputs, " +
         s"got ${left.dataType.simpleString} and ${right.dataType.simpleString}")
   }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val r =
-      if (kernel == "intCos") VecCosineKernel.intCos(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-      else VecCosineKernel.floatCos(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    val r = VecCosineKernel.intCos(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     if (r == null) null else r.doubleValue()
   }
 
@@ -123,26 +87,11 @@ abstract class FusedCosine extends BinaryExpression {
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val r = ctx.freshName("cos")
       s"""
-         |java.lang.Double $r = graft.functions.VecCosineKernel.$kernel($a, $b);
+         |java.lang.Double $r = graft.functions.VecCosineKernel.intCos($a, $b);
          |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }
        """.stripMargin
     })
-}
 
-/** Fused `intCosine` over quantized `array<long>` vectors. */
-case class IntCosine(left: Expression, right: Expression) extends FusedCosine {
-  override protected def kernel: String = "intCos"
-  override protected def requiredElementType: DataType = LongType
-  override def prettyName: String = "int_cosine"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** Fused double-precision cosine over `array<float>` vectors. */
-case class FloatCosine(left: Expression, right: Expression) extends FusedCosine {
-  override protected def kernel: String = "floatCos"
-  override protected def requiredElementType: DataType = FloatType
-  override def prettyName: String = "float_cosine"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -230,6 +179,4 @@ object VectorExpressions {
     GraftBridge.column(QuantizeVec(GraftBridge.expression(vec), scale))
   def int_cosine(a: Column, b: Column): Column =
     GraftBridge.column(IntCosine(GraftBridge.expression(a), GraftBridge.expression(b)))
-  def float_cosine(a: Column, b: Column): Column =
-    GraftBridge.column(FloatCosine(GraftBridge.expression(a), GraftBridge.expression(b)))
 }

@@ -5,7 +5,9 @@ import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /**
- * Scalable global sequence numbering (SURVEY.md op 41).
+ * Scalable global sequence numbering (SURVEY.md op 41) and its weighted
+ * form, the global running sum: a sequence number is the running sum of a
+ * weight of 1.
  *
  * `row_number().over(Window.orderBy(...))` funnels the whole relation through
  * ONE partition — fine at test scale, fatal at 10^10 rows. This is the
@@ -13,9 +15,9 @@ import org.apache.spark.sql.functions._
  *
  *   1. range-repartition + local sort on the order key (one shuffle — the
  *      same one any global sort pays);
- *   2. per-partition counts (tiny agg, ≤P longs through the driver) →
- *      prefix-sum offsets, broadcast;
- *   3. one `mapPartitions` adds offset + local 0-based index.
+ *   2. per-partition weight totals (tiny agg, ≤P longs through the driver)
+ *      → prefix-sum offsets, broadcast;
+ *   3. one `mapPartitions` carries offset + the local running sum.
  *
  * Step 3 stays a Dataset transform (NOT `.rdd` — round 1 measured a full
  * plan re-compile plus driver re-planning on the RDD hop): a single typed
@@ -56,110 +58,51 @@ object Ranks {
     }
   }
 
-  /** Append `seqCol` = 0-based global rank by `order` (must be a total
-    * order — end it with a unique key). Runs the sorted input twice (counts
-    * pass + output pass).
+  /** Append `cumCol` = the EXCLUSIVE global running sum of `weightCol`
+    * (long) in `order`, or with `weightCol = None` a weight of 1 per row:
+    * the 0-based global rank. `order` must be a total order — end it with a
+    * unique key. Equals `sum(w) OVER (ORDER BY order ROWS BETWEEN UNBOUNDED
+    * PRECEDING AND 1 PRECEDING)` (0 for the first row) exactly. Returns
+    * (out, sorted, total): the result, the sorted intermediate it reads,
+    * and the sum of every weight (the row count for a rank) — the totals
+    * pass already collects the per-partition totals to the driver for the
+    * prefix sum, so the total is free. The crawl loop uses it to advance
+    * `fetch_seq` base across rounds without waiting on commit-time
+    * Observations (round N's commit, where those fire, is still in flight
+    * when round N+1 starts). Runs the sorted input twice (totals pass +
+    * output pass).
     *
-    * The sorted intermediate is ALWAYS persisted and returned as the second
-    * frame: RangePartitioner seeds its boundary sampling from the physical
-    * RDD id, which is fresh per query execution — two independent
-    * executions of the same repartitionByRange get (slightly) DIFFERENT
-    * boundaries, so offsets computed by pass 1 would mis-align with pass
-    * 2's partitions (measured: ~87% wrong ranks at 60k rows). Caching pins
-    * one materialization that both passes read — it is a CORRECTNESS
-    * requirement, not an option. The ranked frame is only stable while the
-    * sorted intermediate stays pinned, so the pin is the CALLER's to manage,
-    * explicitly: consume (or persist) the ranked frame, then unpersist the
-    * returned sorted frame. (An earlier self-cleaning variant unpersisted
-    * via a QueryExecutionListener after the first consuming query — which
-    * made a second consumption silently recompute with re-sampled range
-    * boundaries and return wrong ranks. A silent-wrong failure mode is worse
-    * than an explicit contract; the variant was removed.) */
-  def globalSeqCached(
+    * The sorted intermediate is ALWAYS persisted and returned: the
+    * RangePartitioner seeds its boundary sampling from the physical RDD id,
+    * which is fresh per query execution — two independent executions of
+    * the same repartitionByRange get (slightly) DIFFERENT boundaries, so
+    * offsets computed by pass 1 would mis-align with pass 2's partitions
+    * (measured: ~87% wrong ranks at 60k rows). Caching pins one
+    * materialization that both passes read — it is a CORRECTNESS
+    * requirement, not an option. The result is only stable while the
+    * sorted intermediate stays pinned, so the pin is the CALLER's to
+    * manage, explicitly: consume (or persist) the result, then unpersist
+    * the sorted frame — or call [[globalCumsumPinned]], which does both.
+    * (An earlier self-cleaning variant unpersisted via a
+    * QueryExecutionListener after the first consuming query — which made a
+    * second consumption silently recompute with re-sampled range
+    * boundaries and return wrong ranks. A silent-wrong failure mode is
+    * worse than an explicit contract; the variant was removed.) */
+  def globalCumsumCached(
       df: DataFrame,
-      seqCol: String,
-      order: Seq[Column],
-      numPartitions: Int): (DataFrame, DataFrame) = {
-    val (out, sorted, _) = globalSeqCachedWithCount(df, seqCol, order, numPartitions)
-    (out, sorted)
-  }
-
-  /** [[globalSeqCached]] plus the TOTAL row count — the counts pass already
-    * collects per-partition counts to the driver for the prefix sum, so the
-    * total is free. The crawl loop uses it to advance `fetch_seq` base
-    * across rounds without waiting on commit-time Observations (the loop
-    * hands state to round N+1 while round N's commit — where the
-    * observations fire — is still in flight). */
-  def globalSeqCachedWithCount(
-      df: DataFrame,
-      seqCol: String,
+      cumCol: String,
+      weightCol: Option[String],
       order: Seq[Column],
       numPartitions: Int): (DataFrame, DataFrame, Long) = {
     val spark = df.sparkSession
     val sorted = df.repartitionByRange(numPartitions, order: _*)
       .sortWithinPartitions(order: _*)
       .persist()
-    val counts = sorted.groupBy(spark_partition_id().as("__pid")).agg(count(lit(1)).as("__cnt"))
+    val wIdx = weightCol.fold(-1)(sorted.schema.fieldIndex) // -1: weight 1
+    val totals = sorted.groupBy(spark_partition_id().as("__pid"))
+      .agg(weightCol.fold(count(lit(1)))(w => sum(col(w))).as("__total"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until numPartitions).scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L))
-    val bOffsets = spark.sparkContext.broadcast(offsets.toArray)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
-        seqCol, org.apache.spark.sql.types.LongType, nullable = false))
-    implicit val enc: org.apache.spark.sql.Encoder[Row] =
-      org.apache.spark.sql.Encoders.row(outSchema)
-    val out = sorted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var i = bOffsets.value(pid)
-      it.map { row =>
-        val r = Row.fromSeq(row.toSeq :+ i)
-        i += 1
-        r
-      }
-    }
-    (out, sorted, counts.values.sum)
-  }
-
-  /** Re-consumable ranked frame: pins the RANKED OUTPUT itself, forces it,
-    * and releases the sort intermediate — the result is then stable across
-    * any number of consumptions (no listener, no consume-once trap). The
-    * output cache is the caller's to unpersist when done; callers that
-    * consume exactly once and want zero residual cache should use
-    * [[globalSeqCached]] and manage both frames themselves (the crawl loop
-    * does). */
-  def globalSeqPinned(
-      df: DataFrame, seqCol: String, order: Seq[Column], numPartitions: Int): DataFrame = {
-    val (out, sorted) = globalSeqCached(df, seqCol, order, numPartitions)
-    val pinned = out.persist()
-    pinned.count() // force while the sort cache is still valid
-    sorted.unpersist()
-    pinned
-  }
-
-  /** Append `cumCol` = EXCLUSIVE global running sum of `weightCol` (long)
-    * in `order` — the weighted generalization of [[globalSeqPinned]], same
-    * two-phase shape: per-partition weight totals (≤P longs to the driver)
-    * → prefix offsets broadcast → one partition-local pass carries the
-    * running sum. No single-partition window anywhere; equals
-    * `sum(w) OVER (ORDER BY order ROWS UNBOUNDED PRECEDING AND 1
-    * PRECEDING)` exactly (order must be total). Same cache contract as
-    * globalSeqPinned: output pinned + forced, sort intermediate released;
-    * the caller unpersists the result when done. */
-  def globalCumsumPinned(
-      df: DataFrame,
-      weightCol: String,
-      cumCol: String,
-      order: Seq[Column],
-      numPartitions: Int): DataFrame = {
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(numPartitions, order: _*)
-      .sortWithinPartitions(order: _*)
-      .persist()
-    val wIdx = sorted.schema.fieldIndex(weightCol)
-    val sums = sorted.groupBy(spark_partition_id().as("__pid"))
-      .agg(sum(col(weightCol)).as("__sum"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets = (0 until numPartitions).scanLeft(0L)((acc, p) => acc + sums.getOrElse(p, 0L))
+    val offsets = (0 until numPartitions).scanLeft(0L)((acc, p) => acc + totals.getOrElse(p, 0L))
     val bOffsets = spark.sparkContext.broadcast(offsets.toArray)
     val outSchema = org.apache.spark.sql.types.StructType(
       sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
@@ -171,10 +114,27 @@ object Ranks {
       var acc = bOffsets.value(pid)
       it.map { row =>
         val r = Row.fromSeq(row.toSeq :+ acc)
-        acc += row.getLong(wIdx)
+        acc += (if (wIdx < 0) 1L else row.getLong(wIdx))
         r
       }
     }
+    (out, sorted, totals.values.sum)
+  }
+
+  /** Re-consumable [[globalCumsumCached]]: pins the OUTPUT itself, forces
+    * it, and releases the sort intermediate — the result is then stable
+    * across any number of consumptions (no listener, no consume-once
+    * trap). The output cache is the caller's to unpersist when done;
+    * callers that consume exactly once and want zero residual cache use
+    * [[globalCumsumCached]] and manage both frames themselves (the crawl
+    * loop does). */
+  def globalCumsumPinned(
+      df: DataFrame,
+      cumCol: String,
+      weightCol: Option[String],
+      order: Seq[Column],
+      numPartitions: Int): DataFrame = {
+    val (out, sorted, _) = globalCumsumCached(df, cumCol, weightCol, order, numPartitions)
     val pinned = out.persist()
     pinned.count() // force while the sort cache is still valid
     sorted.unpersist()

@@ -43,7 +43,7 @@ object SeqPack {
       .select(col(idCol), TextAnalysis.wsTokenCount(col(textCol)).as("n_toks_doc"))
       .filter(col("n_toks_doc") > 0L)
     val withOff = Ranks.globalCumsumPinned(
-      toks, "n_toks_doc", "tok_off", Seq(col(idCol)), numPartitions)
+      toks, "tok_off", Some("n_toks_doc"), Seq(col(idCol)), numPartitions)
     val L = lit(seqLen.toLong)
     val first = expr(s"tok_off div ${seqLen}L")
     val last = expr(s"(tok_off + n_toks_doc - 1) div ${seqLen}L")

@@ -6,42 +6,28 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /**
- * Similarity search over an embedding column (`array<float>`):
+ * Similarity search over an embedding column (`array<float>`, or its
+ * stored quantized `array<bigint>` form):
  *
  *   - brute-force cosine top-k — the exact baseline: broadcast the (small)
  *     query set against the corpus, per-partition partial top-k, global
  *     merge. One scan of the big side, no n² shuffle.
- *   - LSH-bucketed ANN — the scale path: random-hyperplane signatures
- *     cluster the corpus once; a query probes only its bucket (plus
- *     multiprobe neighbors), turning top-k into a bucket-local scan.
+ *   - LSH-bucketed ANN — random-hyperplane signatures over the quantized
+ *     vectors; a query probes only its bucket plus the 1-bit-flip
+ *     neighbors, turning top-k into a bucket-local scan.
+ *   - IVF — k-means-trained cells as the coarse quantizer, a query probes
+ *     its nearest cells; SemDeDup bounds the near-dup quadratic by cell.
  *
- * Per-pair and per-component vector math (cosine, quantize) runs as fused
- * native expressions (graft.functions.VectorExpressions); the rest is
- * built-in higher-order functions. All of it is deterministic and exactly
- * reproducible in the DuckDB oracle.
+ * One score ranks and verifies everything here: [[intCosine]], the cosine
+ * of [[quantize]]d vectors. Float accumulation order differs between
+ * engines (DuckDB's list_cosine_similarity runs in float32), while integer
+ * dot/norm sums are order-independent and exact and the final
+ * sqrt/mul/div are single correctly-rounded IEEE ops — so every result of
+ * this layer is bit-identical in the DuckDB oracle. The per-pair and
+ * per-component math (cosine, quantize) runs as fused native expressions
+ * (graft.functions.VectorExpressions); the rest is built-in functions.
  */
 object Similarity {
-
-  /** Σ over the array, sequential left-to-right in double precision. */
-  private def dsum(arr: Column): Column =
-    aggregate(arr, lit(0.0), (acc, x) => acc + x)
-
-  /** Cosine similarity; 0 for zero vectors. Fused NATIVE expression
-    * (graft.functions.FloatCosine): the declarative HOF tree (the spec
-    * reference in src/test) costs a lambda dispatch per element and an
-    * allocation per array per call, and this runs once per candidate PAIR
-    * in the dedup/ANN verifies — measured as the dominant cost of
-    * q29/q30/q42. Bit-identical by construction
-    * (same IEEE add order, same combine; parity pinned by PipelineSpec). */
-  def cosine(a: Column, b: Column): Column =
-    graft.functions.VectorExpressions.float_cosine(a, b)
-
-  // --- integer-quantized variants (cross-engine-exact) ----------------------
-  // Float accumulation order differs between engines (DuckDB's
-  // list_cosine_similarity runs in float32), so oracle-compared similarity
-  // queries quantize components to integers first: integer dot/norm sums are
-  // order-independent and exact, and the final sqrt/mul/div are single
-  // correctly-rounded IEEE ops — bit-identical everywhere.
 
   /** vec<float|double> → vec<long>: each component is
     * `round(double(x) * scale)` (half-up, ties away from zero) cast to
@@ -64,9 +50,13 @@ object Similarity {
       case _ => quantize(col(vecCol))
     }
 
-  /** Cosine over pre-quantized long vectors; exact cross-engine. Fused
-    * NATIVE expression — see [[cosine]]; integer sums are order-free, so
-    * the fusion cannot even reorder anything observable. */
+  /** Cosine over pre-quantized long vectors; 0 for zero vectors, null for
+    * a null component or unequal lengths; exact cross-engine. One fused
+    * NATIVE expression (graft.functions.IntCosine): the declarative HOF
+    * tree (the spec reference in src/test) costs a lambda dispatch per
+    * element and an allocation per array per call, and this runs once per
+    * candidate PAIR. Integer sums are order-free, so the fusion cannot
+    * reorder anything observable (parity pinned by PipelineSpec). */
   def intCosine(qa: Column, qb: Column): Column =
     graft.functions.VectorExpressions.int_cosine(qa, qb)
 
@@ -140,11 +130,13 @@ object Similarity {
   }
 
   /**
-   * Exact top-k neighbors for each query vector, by cosine (desc), vec_id
-   * tiebreak. `queries` must be small enough to broadcast (it is, by
-   * definition of a query batch); corpus is scanned once, reduced through
-   * the bounded [[VecTopKAgg]] — no per-query full-window materialization
-   * anywhere in the plan.
+   * Exact top-k neighbors for each query vector by [[intCosine]] (desc),
+   * neighbor_id tiebreak — the exact baseline the ANN paths' recall is
+   * measured against, and q30's operator. `queries` must be small enough to
+   * broadcast (it is, by definition of a query batch); corpus is scanned
+   * once, reduced through the bounded [[VecTopKAgg]] — no per-query
+   * full-window materialization anywhere in the plan. `vecCol` may be raw
+   * float vectors (quantized here) or the stored quantized form.
    */
   def bruteForceTopK(
       corpus: DataFrame,
@@ -152,47 +144,11 @@ object Similarity {
       k: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+    val q = queries.select(col(idCol).as("query_id"), quantizedCol(queries, vecCol).as("qv"))
+    val c = corpus.select(col(idCol).as("neighbor_id"), quantizedCol(corpus, vecCol).as("cv"))
     val scored = c.join(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("qv"), col("cv")), 6))
-    topKPerQuery(scored, k)
-  }
-
-  /** Random-hyperplane (SimHash-for-vectors) bucket id with `nBits` planes.
-    * Plane j's components are deterministic ±1 (Rademacher via xxhash64 of
-    * (j, dim index)), so sign(r_j·v) needs only adds — no stored planes. */
-  def rhpBucket(vec: Column, nBits: Int): Column = {
-    val bits = (0 until nBits).map { j =>
-      val signedSum = dsum(zip_with(vec, sequence(lit(0), size(vec) - 1),
-        (x, i) => when(xxhash64(lit(j), i).bitwiseAND(1L) === 1L, x.cast("double"))
-          .otherwise(-x.cast("double"))))
-      when(signedSum > 0.0, lit(1L << j)).otherwise(lit(0L))
-    }
-    bits.reduce(_.bitwiseOR(_))
-  }
-
-  /**
-   * ANN top-k: corpus is bucketed by `nBits` random hyperplanes; each query
-   * scans only its own bucket. Recall < 1 by construction (measured by the
-   * spec against bruteForceTopK); at scale the bucket assignment is computed
-   * once at ingest and stored, making a query a partition-pruned scan.
-   */
-  def lshAnnTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      nBits: Int = 8,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-      rhpBucket(col(vecCol), nBits).as("bucket"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      rhpBucket(col(vecCol), nBits).as("bucket"))
-    val scored = c.join(broadcast(q), Seq("bucket"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", round(cosine(col("qv"), col("cv")), 6))
+      .withColumn("cos", intCosine(col("qv"), col("cv")))
     topKPerQuery(scored, k)
   }
 
@@ -327,18 +283,28 @@ object Similarity {
   /** Argmin result row of [[nearestCellKernel]]. */
   final case class CellDist(dist: Long, cell: Int)
 
+  /** The k-means family's one validity rule: a quantized vector takes part
+    * iff it is non-null, `dim` long and has no null component — exactly
+    * the vectors [[intCosine]] scores, so its self-cosine being non-null is
+    * the null-component test (native, nothing boxed). An invalid vector
+    * gets no cell and no dist, and never seeds or moves a centroid. */
+  private def validVec(qv: Column, dim: Int): Column =
+    size(qv) === dim && intCosine(qv, qv).isNotNull
+
   /** struct(dist, cell) of the nearest centroid: one-pass JVM argmin over
     * the centroid matrix — exact BIGINT squared-L2, strict-< keeps the
     * lowest cell on ties; entirely row-local (no shuffle, no join). Null
-    * when `qv` is null or not `dim` long (no distance is defined). k×dim
-    * stays DATA (one task-local array), not an expression tree, so
-    * corpus-scaled k (thousands of cells) runs as a tight loop instead of
-    * a codegen-overflow fallback; the declarative `least`-over-structs form
+    * for a vector [[validVec]] rejects; the rule runs before the UDF
+    * converts its input, whose `Seq[Long]` form would reject a null
+    * component with NOT_NULL_ASSERT_VIOLATION. k×dim stays DATA (one
+    * task-local array), not an expression tree, so corpus-scaled k
+    * (thousands of cells) runs as a tight loop instead of a
+    * codegen-overflow fallback; the declarative `least`-over-structs form
     * is the spec reference in src/test. */
   private def nearestCellKernel(qv: Column, centroids: Array[Array[Long]], dim: Int): Column = {
     val cents = centroids // stable closure capture
     val f = udf((v: Seq[Long]) => {
-      if (v == null || v.length != dim) null
+      if (v == null) null
       else {
         val a = unwrapLongs(v)
         var bc = 0
@@ -355,7 +321,7 @@ object Similarity {
         CellDist(bd, bc)
       }
     })
-    f(qv)
+    f(when(validVec(qv, dim), qv))
   }
 
   /** (idCol, qv): the corpus with its vectors in quantized form. */
@@ -369,7 +335,7 @@ object Similarity {
     q.persist()
     try {
       var cents: Array[Array[Long]] =
-        q.where(size(col("qv")) === dim).orderBy(col(idCol)).limit(k).collect()
+        q.where(validVec(col("qv"), dim)).orderBy(col(idCol)).limit(k).collect()
           .map(_.getSeq[Long](1).toArray)
       val vecsum = udaf(new VecSumAgg(dim),
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
@@ -415,10 +381,9 @@ object Similarity {
    *
    * Returns (centroids, assignment) with assignment = (idCol, cell:int,
    * dist:long) under the final centroids, a lazy frame over `corpus`.
-   * Vectors must be non-null and `dim` long: any other row gets a null
-   * cell and dist, and neither seeds nor moves a centroid. A vector with a
-   * null component fails the call (the argmin's `Seq[Long]` input rejects
-   * it with NOT_NULL_ASSERT_VIOLATION).
+   * A vector that is null, not `dim` long or has a null component gets a
+   * null cell and dist, and neither seeds nor moves a centroid (the
+   * [[validVec]] rule; the q61 oracle applies the same one).
    */
   def kmeansFit(
       corpus: DataFrame,
@@ -455,10 +420,9 @@ object Similarity {
    * Keep rule: drop x iff some same-cell y with y.id < x.id has
    * intCosine(x, y) ≥ `threshold` — deterministic and
    * partitioning-independent, with a DuckDB oracle (q62). Returns the KEPT
-   * rows (idCol, cell); rows with a null or not-`dim`-long vector have no
-   * cell and are kept with a null `cell`, rows with a null id are dropped.
-   * Preconditions: ids are unique, and no vector has a null component
-   * (as for [[kmeansFit]]).
+   * rows (idCol, cell); rows whose vector [[kmeansFit]] gives no cell
+   * (null, not `dim` long, or with a null component) are kept with a null
+   * `cell`, rows with a null id are dropped. Precondition: ids are unique.
    *
    * Plan: [[kmeansFit]]'s training loop, then one final assignment that
    * carries the quantized vector along, ONE exchange keyed on the cell
@@ -492,9 +456,9 @@ object Similarity {
 
   /** [[semDedup]]'s task-local pass over (id, cell, qv) rows sorted by
     * (cell, id) → the kept (id, cell) rows. A row with a cell has a
-    * `dim`-long vector without null components (the argmin that gave it
-    * the cell rejects any other). The earlier members of the current cell
-    * are held as primitive vectors with their `sqrt` norms;
+    * `dim`-long vector without null components ([[validVec]]). The
+    * earlier members of the current cell are held as primitive vectors
+    * with their `sqrt` norms;
     * the cosine is [[graft.functions.VecCosineKernel.intCos]]'s: the same
     * integer sums and the same IEEE ops `d / (sqrt(sa) * sqrt(sb))`, 0.0 on
     * a zero norm, compared as Spark compares doubles (NaN above every
@@ -539,7 +503,7 @@ object Similarity {
    * spec; at scale the bucket id is computed once at ingest and stored, so
    * a query is a partition-pruned scan of nBits+1 posting lists.
    */
-  def lshAnnTopKExact(
+  def lshAnnTopK(
       corpus: DataFrame,
       queries: DataFrame,
       k: Int,

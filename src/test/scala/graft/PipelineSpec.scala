@@ -135,14 +135,34 @@ class PipelineSpec extends AnyFunSuite {
       val v = (0 until 16).map(j => math.sin(i * 17 + j * 3).toFloat).toArray
       (i.toLong, v, i % 3)
     }.toDF("vec_id", "embedding", "label")
-    val brute = Similarity.bruteForceTopK(vecs, vecs.filter($"vec_id" < 3), k = 4)
-      .select("query_id", "rank", "neighbor_id").as[(Long, Int, Long)].collect().toSet
-    assert(brute.size == 12)
-    // LSH ANN returns a subset ranking but every (q, neighbor) it returns at
-    // rank r must have cos ≤ brute rank-r cos — weaker: results ⊆ corpus ids
-    val ann = Similarity.lshAnnTopK(vecs, vecs.filter($"vec_id" < 3), k = 4, nBits = 4)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-    assert(ann.forall(p => p._2 >= 0 && p._2 < 30 && p._1 != p._2))
+    val queries = vecs.filter($"vec_id" < 10)
+    def top(df: org.apache.spark.sql.DataFrame): Array[(Long, Int, Long, Double)] =
+      df.select("query_id", "rank", "neighbor_id", "cos").as[(Long, Int, Long, Double)].collect()
+    val brute = top(Similarity.bruteForceTopK(vecs, queries, k = 4))
+    assert(brute.length == 40)
+    // the float ranking the quantized score stands in for: double-precision
+    // cosine of the raw vectors through the same bounded top-k
+    val floatScored = vecs.select($"vec_id".as("neighbor_id"), $"embedding".as("cv"))
+      .join(broadcast(queries.select($"vec_id".as("query_id"), $"embedding".as("qv"))))
+      .filter($"neighbor_id" =!= $"query_id")
+      .withColumn("cos", SimilarityReference.cosineDeclarative($"qv", $"cv"))
+    val float = top(Similarity.topKPerQuery(floatScored, 4))
+    // measured: the same neighbors at the same ranks for all 10 queries,
+    // scores at most 1.09e-4 apart
+    assert(brute.map(r => (r._1, r._2, r._3)).toSet == float.map(r => (r._1, r._2, r._3)).toSet,
+      s"rankings differ: ${brute.toSeq.diff(float.toSeq).take(3)}")
+    val floatCos = float.map(r => (r._1, r._3) -> r._4).toMap
+    val maxDiff = brute.map { case (q, _, n, c) => math.abs(c - floatCos((q, n))) }.max
+    assert(maxDiff < 2e-4, s"quantized and float cosines differ by up to $maxDiff")
+    // LSH ANN ranks by the same score over a subset of the pairs, so its
+    // rank-r cosine never beats the exact rank-r cosine
+    val exactAt = brute.map(r => (r._1, r._2) -> r._4).toMap
+    val ann = top(Similarity.lshAnnTopK(vecs, queries, k = 4, nBits = 4, maxDim = 16))
+    assert(ann.nonEmpty)
+    ann.foreach { case (q, r, n, c) =>
+      assert(n >= 0 && n < 30 && n != q, s"($q, $n)")
+      assert(c <= exactAt((q, r)), s"ANN ($q, rank $r) cos $c beats the exact ${exactAt((q, r))}")
+    }
   }
 
   test("fused cosine expressions ≡ declarative HOF forms, bit-exact (incl. degenerate shapes)") {
@@ -163,16 +183,13 @@ class PipelineSpec extends AnyFunSuite {
       .withColumn("qa", Similarity.quantize(col("va")))
       .withColumn("qb", Similarity.quantize(col("vb")))
     val out = pairs.select(
-      Similarity.cosine(col("va"), col("vb")).as("f_native"),
-      SimilarityReference.cosineDeclarative(col("va"), col("vb")).as("f_decl"),
       Similarity.intCosine(col("qa"), col("qb")).as("i_native"),
       SimilarityReference.intCosineDeclarative(col("qa"), col("qb")).as("i_decl")).collect()
     assert(out.nonEmpty)
     var checkedNull = false; var checkedZero = false
     out.foreach { r =>
       def v(i: Int): Option[Double] = if (r.isNullAt(i)) None else Some(r.getDouble(i))
-      assert(v(0) == v(1), s"float cosine diverged: ${v(0)} vs ${v(1)}") // exact, incl. nullness
-      assert(v(2) == v(3), s"int cosine diverged: ${v(2)} vs ${v(3)}")
+      assert(v(0) == v(1), s"int cosine diverged: ${v(0)} vs ${v(1)}") // exact, incl. nullness
       if (v(0).isEmpty) checkedNull = true
       if (v(0).contains(0.0)) checkedZero = true
     }
@@ -408,12 +425,8 @@ class PipelineSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
     val centroids = vecs.filter($"vec_id" < 8)
     val queries = vecs.filter($"vec_id" >= 8 && $"vec_id" < 18)
-    // exact baseline with the SAME integer scoring (so nProbe=8 must equal it)
-    val q = queries.select($"vec_id".as("query_id"), Similarity.quantize($"embedding").as("qq"))
-    val c = vecs.select($"vec_id".as("neighbor_id"), Similarity.quantize($"embedding").as("qc"))
-    val exact = Similarity.topKPerQuery(
-      c.join(broadcast(q)).filter($"neighbor_id" =!= $"query_id")
-        .withColumn("cos", Similarity.intCosine($"qq", $"qc")), 5)
+    // the exact baseline scores with the SAME integer cosine (so nProbe=8 must equal it)
+    val exact = Similarity.bruteForceTopK(vecs, queries, k = 5)
       .select("query_id", "rank", "neighbor_id").as[(Long, Int, Long)].collect().toSet
     val full = Similarity.ivfTopK(vecs, centroids, queries, k = 5, nProbe = 8)
       .select("query_id", "rank", "neighbor_id").as[(Long, Int, Long)].collect().toSet
@@ -435,11 +448,7 @@ class PipelineSpec extends AnyFunSuite {
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
     val queries = vecs.filter($"vec_id" >= 8 && $"vec_id" < 18)
-    val q = queries.select($"vec_id".as("query_id"), Similarity.quantize($"embedding").as("qq"))
-    val c = vecs.select($"vec_id".as("neighbor_id"), Similarity.quantize($"embedding").as("qc"))
-    val truth = Similarity.topKPerQuery(
-        c.join(broadcast(q)).filter($"neighbor_id" =!= $"query_id")
-          .withColumn("cos", Similarity.intCosine($"qq", $"qc")), 5)
+    val truth = Similarity.bruteForceTopK(vecs, queries, k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     def recall(centroids: org.apache.spark.sql.DataFrame): Double = {
@@ -468,7 +477,7 @@ class PipelineSpec extends AnyFunSuite {
     val brute = Similarity.bruteForceTopK(vecs, queries, k = 5)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val ann = Similarity.lshAnnTopKExact(vecs, queries, k = 5, nBits = 6, maxDim = 16)
+    val ann = Similarity.lshAnnTopK(vecs, queries, k = 5, nBits = 6, maxDim = 16)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val recalls = brute.map { case (q, truth) =>
@@ -888,6 +897,10 @@ class PipelineSpec extends AnyFunSuite {
   private def embFrame(vecs: Seq[(Long, Array[Float])]) =
     vecs.toDF("vec_id", "embedding")
 
+  /** [[embFrame]] plus rows whose vectors may carry null components. */
+  private def embFrame(vecs: Seq[(Long, Array[Float])], withNulls: Seq[(Long, Seq[Option[Float]])]) =
+    vecs.toDF("vec_id", "embedding").unionByName(withNulls.toDF("vec_id", "embedding"))
+
   /** (corpus, k, iters, dim) → kmeansFit's result, for the kernel argmin
     * and the declarative reference. */
   private val kmeansPaths
@@ -951,15 +964,16 @@ class PipelineSpec extends AnyFunSuite {
     // the lowest ids, so an init that did not skip them would seed from them
     val bad = Seq[(Long, Array[Float])](
       -3L -> null, -2L -> Array(1f, 0f), -1L -> Array(1f, 0f, 0f, 0f, 1f))
+    val nullComponent = Seq(-4L -> Seq(Some(1f), None, Some(0f), Some(0f)))
     val want = seqKmeans(good, k = 3, iters = 3)
     for ((path, fit) <- kmeansPaths) {
-      val (_, assign) = fit(embFrame(bad ++ good), 3, 3, 4)
+      val (_, assign) = fit(embFrame(bad ++ good, nullComponent), 3, 3, 4)
       val rows = assign.select($"vec_id", $"cell", $"dist").collect()
       val got = rows.filter(!_.isNullAt(1))
         .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
       assert(got == want, s"$path: an invalid vector seeded or moved a centroid")
       val noCell = rows.filter(r => r.isNullAt(1) && r.isNullAt(2)).map(_.getLong(0)).toSet
-      assert(noCell == Set(-3L, -2L, -1L), s"$path: rows without a cell: $noCell")
+      assert(noCell == Set(-4L, -3L, -2L, -1L), s"$path: rows without a cell: $noCell")
     }
   }
 
@@ -997,7 +1011,9 @@ class PipelineSpec extends AnyFunSuite {
       9L -> v(-0.3f, -0.4f, 0, 0),    // cosine −1 to 1
       10L -> v(0, 0, 0.5f, 0.5f),
       11L -> null, 12L -> v(1, 0), 13L -> v(1, 0, 0, 0, 1)) // no cell
-    val cellOf = Similarity.kmeansFit(embFrame(vecs), k = 3, iters = 2, dim = 4)._2
+    val nullComponent = Seq(14L -> Seq(Some(0.3f), None, Some(0f), Some(0f))) // no cell
+    def frame = embFrame(vecs, nullComponent)
+    val cellOf = Similarity.kmeansFit(frame, k = 3, iters = 2, dim = 4)._2
       .select($"vec_id", $"cell").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
     assert(cellOf(1L).isDefined && cellOf(1L) == cellOf(3L), s"the τ pair must share a cell: $cellOf")
     assert(cellOf(6L).isDefined && cellOf(6L) == cellOf(7L), s"the zero vectors must share a cell: $cellOf")
@@ -1005,14 +1021,14 @@ class PipelineSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Option[Any])] =
       df.select($"vec_id", $"cell").collect().map(r => r.getLong(0) -> Option(r.get(1))).toSet
     for (tau <- Seq(0.96, 0.0)) {
-      val want = rows(SimilarityReference.semDedup(embFrame(vecs), k = 3, iters = 2, threshold = tau, dim = 4))
+      val want = rows(SimilarityReference.semDedup(frame, k = 3, iters = 2, threshold = tau, dim = 4))
       val kept = want.map(_._1)
-      assert(Set(0L, 1L, 11L, 12L, 13L).subsetOf(kept), s"τ=$tau: reference kept $want")
-      assert(want.filter(r => Set(11L, 12L, 13L)(r._1)).forall(_._2.isEmpty), s"τ=$tau: $want")
+      assert(Set(0L, 1L, 11L, 12L, 13L, 14L).subsetOf(kept), s"τ=$tau: reference kept $want")
+      assert(want.filter(r => Set(11L, 12L, 13L, 14L)(r._1)).forall(_._2.isEmpty), s"τ=$tau: $want")
       if (tau == 0.96) assert(!kept(3L) && !kept(4L) && !kept(5L) && kept(6L) && kept(7L), s"τ=$tau: $want")
       else assert(!kept(7L), s"τ=0: the second zero vector must drop: $want")
       for (parts <- Seq(1, 7); pairParts <- Seq(0, 3)) {
-        val got = rows(Similarity.semDedup(embFrame(vecs).repartition(parts), k = 3, iters = 2,
+        val got = rows(Similarity.semDedup(frame.repartition(parts), k = 3, iters = 2,
           threshold = tau, dim = 4, pairParts = pairParts))
         assert(got == want, s"τ=$tau parts=$parts pairParts=$pairParts: kernel $got, reference $want")
       }

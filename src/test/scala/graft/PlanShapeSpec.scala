@@ -112,8 +112,8 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("globalSeq distributes: no single-partition window exchange") {
     val df = spark.range(1000).select(col("id"), pmod(col("id"), lit(97)).as("k"))
-    val (ranked, sorted) = graft.operators.Ranks.globalSeqCached(
-      df, "seq", Seq(col("k").asc, col("id").asc), 8)
+    val (ranked, sorted, _) = graft.operators.Ranks.globalCumsumCached(
+      df, "seq", None, Seq(col("k").asc, col("id").asc), 8)
     try {
       // the plan must not contain a SinglePartition window (check before
       // consumption so the assertion sees the compute plan, not a cache scan)

@@ -7,7 +7,9 @@ import graft.sim.Similarity
 
 /** Declarative reference forms of the sim layer's fused kernels, written
   * with built-in higher-order functions, joins and `least` only. The specs
-  * compare each kernel in `Similarity` with its form here. */
+  * compare each kernel in `Similarity` with its form here, and rank by
+  * [[cosineDeclarative]] to measure how far the quantized score moves a
+  * float ranking. */
 object SimilarityReference {
 
   /** Σ over the array, sequential left-to-right in double precision. */
@@ -20,7 +22,9 @@ object SimilarityReference {
   def norm(a: Column): Column =
     sqrt(dsum(transform(a, x => x.cast("double") * x.cast("double"))))
 
-  /** [[Similarity.cosine]]. */
+  /** Double-precision cosine of raw float vectors, accumulated left to
+    * right; 0 for zero vectors. `src/main` scores only with
+    * [[Similarity.intCosine]]; this is the float score it stands in for. */
   def cosineDeclarative(a: Column, b: Column): Column = {
     val d = dot(a, b)
     val nn = norm(a) * norm(b)
@@ -47,11 +51,15 @@ object SimilarityReference {
     aggregate(zip_with(qv, typedLit(centroid.toSeq), (x, c) => (x - c) * (x - c)),
       lit(0L), (acc, x) => acc + x)
 
+  /** kmeansFit's validity rule: non-null, `dim` long, no null component. */
+  private def valid(qv: Column, dim: Int): Column =
+    size(qv) === dim && !exists(qv, _.isNull)
+
   /** struct(dist, cell) of the nearest centroid: `least` over the k
-    * (dist, cell) structs, ties to the lowest cell; null when `qv` is null
-    * or not `dim` long. The expression tree grows as k×dim. */
+    * (dist, cell) structs, ties to the lowest cell; null when `qv` is not
+    * [[valid]]. The expression tree grows as k×dim. */
   def nearestCell(qv: Column, centroids: Array[Array[Long]], dim: Int): Column =
-    when(size(qv) === dim, least(centroids.zipWithIndex.map { case (c, j) =>
+    when(valid(qv, dim), least(centroids.zipWithIndex.map { case (c, j) =>
       struct(intSqDist(qv, c).as("dist"), lit(j).cast("int").as("cell"))
     }: _*))
 
@@ -66,7 +74,7 @@ object SimilarityReference {
       dim: Int = 64): (Array[Array[Long]], DataFrame) = {
     val q = corpus.select(col(idCol), quantize(col(vecCol)).as("qv"))
     var cents: Array[Array[Long]] =
-      q.where(size(col("qv")) === dim).orderBy(col(idCol)).limit(k).collect()
+      q.where(valid(col("qv"), dim)).orderBy(col(idCol)).limit(k).collect()
         .map(_.getSeq[Long](1).toArray)
     val vecsum = udaf(new Similarity.VecSumAgg(dim),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]())
