@@ -152,29 +152,6 @@ object Crawl {
       .select("partition_id", "kind", "sketch", "n_items")
   }
 
-  /** Run rounds `from..until` (inclusive), committing each. Returns per-round
-    * results. Stops early when the frontier drains.
-    *
-    * Serial-floor discipline (the measured crawl-throughput bound was the
-    * per-round job count, not compute):
-    *   - `pages_canon` is loaded ONCE, repartitioned by `canon_url` (the
-    *     fetch-join key, Spark-native hashing so Catalyst recognizes it)
-    *     and cached — every round's fetch join then leaves the corpus side
-    *     exchange-free instead of re-shuffling the full corpus per round.
-    *     On a real cluster this is an Iceberg bucketed-table read; in cache
-    *     form it is the same SPJ contract. `robots_rules` likewise.
-    *   - commit N runs on a background thread under round N+1's compute;
-    *     round N+1 reads round N's state through one in-memory handoff
-    *     ([[hop]]), never through the catalog.
-    *   - the URL-seen sketch never visits the driver: each round probes
-    *     the previous round's handed-off `url_seen` frame map-side
-    *     ([[CrawlRound.probeSeen]]), so no round starts with a catalog read
-    *     or a collect just to deliver it.
-    *   - metrics are Observations riding the commit writes (see
-    *     [[CrawlRound.RoundOutput]]) — zero dedicated metric jobs.
-    *   - no up-front `isEmpty` probe: an empty frontier yields fetched == 0
-    *     through the same dataflow and stops the loop.
-    */
   /** Long-lived per-crawl state: the corpus cached WITH the fetch-join
     * partitioning (HashPartitioning(canon_url, P) — Catalyst-recognized, so
     * every round's fetch join leaves the corpus side exchange-free) and the
@@ -224,6 +201,7 @@ object Crawl {
     CrawlState(pagesCanon, robotsStatic, robotsSource)
   }
 
+  /** [[runRounds]] over a [[CrawlState]] it opens and closes itself. */
   def runRounds(
       spark: SparkSession,
       catalog: StateCatalog,
@@ -233,9 +211,9 @@ object Crawl {
     try runRounds(spark, catalog, cfg, maxRounds, st) finally st.close()
   }
 
-  /** Frame-lifetime rule of the loop: round N's caches back commit N's
-    * writes and its handoff (the [[hop]]ped copies of its cross-round
-    * frames); round N+1's plans read only those copies and parquet, and
+  /** Frame-lifetime rule of the loop: round N's caches and the [[hop]]ped
+    * copies of its cross-round frames back commit N's writes; round N+1's
+    * plans read only those copies and parquet, and
     * materialize no later than commit N+1. So both retire together exactly
     * when commit N+1 settles — freeing them earlier would fail round N+1's
     * plans on a released block (a cached frame would instead silently
@@ -246,17 +224,55 @@ object Crawl {
       fut: scala.concurrent.Future[CrawlRound.RoundResult],
       frames: Iterable[DataFrame])
 
-  /** The cross-round handoff of one frame: forced on the calling thread,
-    * lineage cut by [[graft.operators.Ranks.truncate]] (reliable checkpoint
-    * under the session's checkpoint dir, local checkpoint otherwise). A
-    * round's plan embeds its input frame several times over (eligibility,
-    * scheduled anti-join, discovery union), so chaining raw DataFrames
-    * grows the LOGICAL tree exponentially in round count — measured as a
-    * driver OOM just stringifying a 3-round tree. The hop plays the role an
-    * Iceberg table boundary plays on a real cluster. */
+  /** The cross-round handoff of one frame: computed once on the loop
+    * thread, before the barrier, and pinned with its lineage cut by
+    * [[graft.operators.Ranks.truncate]] (reliable checkpoint under the
+    * session's checkpoint dir, local checkpoint otherwise). The hopped copy
+    * is what commit N writes and what round N+1 reads, so the commit only
+    * encodes rows that already exist. A round's plan embeds its input frame
+    * several times over (eligibility, scheduled anti-join, discovery
+    * union), so chaining raw DataFrames grows the LOGICAL tree
+    * exponentially in round count — measured as a driver OOM just
+    * stringifying a 3-round tree. The hop plays the role an Iceberg table
+    * boundary plays on a real cluster. */
   private[crawl] def hop(df: DataFrame): DataFrame =
     graft.operators.Ranks.truncate(df, eager = true)
 
+  /** Runs up to `maxRounds` rounds after the catalog's latest, committing
+    * each, and returns their results. Stops early when a round makes no
+    * progress (the frontier drained).
+    *
+    * One round N, in order:
+    *   1. run + rank: [[CrawlRound.run]] plans the round and materializes
+    *      its rank (fetch + parse), under commit N-1;
+    *   2. hop: the cross-round frames are computed once and pinned by
+    *      [[hop]], still under commit N-1 — the new seen keys first, then
+    *      the next frontier, the merged sketch and (when enabled) the
+    *      robots and host-graph deltas as concurrent jobs;
+    *   3. barrier: wait for commit N-1 to settle;
+    *   4. handoff: submit commit N, which writes the hopped frames, then
+    *      build round N+1's inputs from the same hopped frames plus as-of
+    *      loads anchored on manifest N-1 (the loads start no job). From
+    *      commit N's submission to round N+1's first job the loop thread
+    *      waits for nothing.
+    *
+    * Serial-floor discipline (the measured crawl-throughput bound was the
+    * per-round job count, not compute):
+    *   - `pages_canon` is loaded ONCE (see [[openState]]), so every round's
+    *     fetch join leaves the corpus side exchange-free.
+    *   - commit N runs on a background thread under round N+1's compute;
+    *     round N+1 reads round N's state through the hopped frames, never
+    *     through the catalog.
+    *   - the URL-seen sketch never visits the driver: each round probes
+    *     the previous round's hopped `url_seen` frame map-side
+    *     ([[CrawlRound.probeSeen]]).
+    *   - metrics are Observations riding the commit writes (see
+    *     [[CrawlRound.RoundOutput]]) — zero dedicated metric jobs.
+    *   - no up-front `isEmpty` probe: an empty frontier yields fetched == 0
+    *     through the same dataflow and stops the loop.
+    *
+    * `GRAFT_CRAWL_TIMING` prints each round's four phases and its `LOOP`
+    * total, which they add up to. */
   def runRounds(
       spark: SparkSession,
       catalog: StateCatalog,
@@ -281,6 +297,15 @@ object Crawl {
       val t = new Thread(r, "graft-commit"); t.setDaemon(true); t
     })
     val commitEc = ExecutionContext.fromExecutorService(commitPool)
+    // Hop executor: a round's independent hops run as concurrent jobs, as
+    // the commit's table writes do — each hop is a chain of small stages,
+    // and one at a time they leave most task slots idle. Its threads start
+    // on the loop thread's first submission, so they inherit the caller's
+    // Spark local properties (job group, scheduler pool).
+    val hopPool = java.util.concurrent.Executors.newFixedThreadPool(4, r => {
+      val t = new Thread(r, "graft-hop"); t.setDaemon(true); t
+    })
+    val hopEc = ExecutionContext.fromExecutorService(hopPool)
     // Set when the finally-block quiesce times out and abandons the in-flight
     // commit. The commit closure re-checks it in the metrics thunk — which
     // the catalog evaluates AFTER the table writes and BEFORE the manifest
@@ -442,6 +467,21 @@ object Crawl {
             robotsRules, cfg, round, base, robotsSource, hostRanks, staticDelays)
           live ++= out.persisted
           val tRun = phase("run+rank", tRound)
+
+          // ---- hop round N's cross-round frames, still under commit N-1.
+          // Each is computed exactly once, here; commit N writes the hopped
+          // copy and round N+1 reads it. The hop is the frame's only pin.
+          val hops = scala.collection.mutable.ArrayBuffer[DataFrame]()
+          // newKeys first, alone: its hop materializes the cached new
+          // entries that the frontier and the sketch delta read (hopped at
+          // the same time, each re-ran part of that shared upstream: ~30%
+          // more foreground task time). It is hopped (not just cached)
+          // because seenExact_{N+1} embeds it, and ITS plan embeds
+          // seenExact_N — an un-truncated chain recurses one full round-plan
+          // per round (the linear cousin of the exponential frontier blowup
+          // [[hop]] prevents)
+          val newKeys = hop(out.newKeys)
+          live += newKeys; hops += newKeys
           // always pass the loop's geometry for the bloom tier: on resume it
           // is the COMMITTED geometry (which may differ from cfg's if a
           // prior adaptive run resized) — deltas must match it to OR-merge
@@ -449,14 +489,14 @@ object Crawl {
           // resize = REBUILD from the exact store (the ground truth): blooms
           // of different geometry cannot OR-merge. Sized HERE from the
           // actual key count — one extra count job over the committed store
-          // + this round's cached keys, paid only on the rare (hysteresis-
+          // + this round's hopped keys, paid only on the rare (hysteresis-
           // spaced) rebuild — so the new sketch carries 2× headroom over
           // what it will really hold, not over a two-round-stale counter.
           val rebuildGeo: Option[(Int, Int)] =
             if (!sketchRebuild) None
             else {
               sketchRebuild = false
-              val n = seenExact.select("canon_url").unionByName(out.newKeys).count()
+              val n = seenExact.select("canon_url").unionByName(newKeys).count()
               val target = math.max(
                 2L * n / cfg.numPartitions, cfg.bloomExpectedPerPartition)
               val g = BloomFilter.geometry(target, cfg.bloomFpp)
@@ -465,58 +505,72 @@ object Crawl {
               if (g._1 > bloomGeo._1) Some(g) else None
             }
           val rebuiltThisRound = rebuildGeo.isDefined
-          val sketchNext = rebuildGeo match {
+          val sketchPlan = rebuildGeo match {
             case Some(g) =>
               if (timing) System.err.println(
                 s"[crawl] adaptive sketch: rebuilding at ${g._1} bits (was ${bloomGeo._1})")
               bloomGeo = g
               buildSketchDelta(spark,
-                seenExact.select("canon_url").unionByName(out.newKeys), cfg, Some(g))
+                seenExact.select("canon_url").unionByName(newKeys), cfg, Some(g))
             case None => urlSeenPrev match {
               case Some(prev) =>
-                mergeSketches(prev, buildSketchDelta(spark, out.newKeys, cfg, geo))
-              case None => buildSketchDelta(spark, out.newKeys, cfg, geo)
+                mergeSketches(prev, buildSketchDelta(spark, newKeys, cfg, geo))
+              case None => buildSketchDelta(spark, newKeys, cfg, geo)
             }
           }
-          sketchNext.persist(); live += sketchNext
-          out.frontierNext.persist() // backs the write, the lineage agg AND next round's input
-          live += out.frontierNext
+          // the rest at once: independent plans over pinned inputs
+          def hopAsync(df: DataFrame) = Future(scala.util.Try(hop(df)))(hopEc)
+          val frontierF = hopAsync(out.frontierNext)
+          val sketchF = hopAsync(sketchPlan)
+          val robotsF = out.robotsFetched.map(hopAsync)
+          val edgesF = out.hostEdgesDelta.map(hopAsync)
+          // every hop settles, and each one that succeeded is registered,
+          // before a failed one rethrows: none is left running or unreleased
+          (Seq(frontierF, sketchF) ++ robotsF ++ edgesF)
+            .foreach(f => Await.result(f, Duration.Inf).foreach { h => live += h; hops += h })
+          def hopped(f: Future[scala.util.Try[DataFrame]]): DataFrame =
+            Await.result(f, Duration.Zero).get
+          val frontierNext = hopped(frontierF)
+          val sketchNext = hopped(sketchF)
+          val robotsNew = robotsF.map(hopped)
+          val edgesNew = edgesF.map(hopped)
+          val tHop = phase("hop", tRun)
 
           // ---- barrier: settle round-1's commit before committing this one
           settle()
-          phase("barrier", tRun)
+          val tBarrier = phase("barrier", tHop)
           if (lastRes.exists(noProgress)) {
             // the previous round turned out to be the drain: this round ran
             // SPECULATIVELY and is discarded uncommitted — committed state
-            // stays identical to the sequential loop's.
-            release(out.persisted ++ Seq(out.frontierNext, sketchNext) ++ edgesPin.toSeq)
+            // stays identical to the sequential loop's. Its caches and hops
+            // are in `live`, which the finally block releases right after.
             continue = false
           } else {
             // capture vals for the closure: the loop vars are reassigned at
             // handoff below, BEFORE the async commit reads them
-            val thisOut = out
             val thisBase = base
             val rulesAtRound = robotsRules
+            val lineage = out.lineage(frontierNext)
             val fut = Future {
               var r: CrawlRound.RoundResult = null
-              catalog.commit(thisOut.round, Map(
-                "fetch_log" -> thisOut.fetchLog,
-                "frontier" -> thisOut.frontierNext,
+              catalog.commit(out.round, Map(
+                "fetch_log" -> out.fetchLog,
+                "frontier" -> frontierNext,
                 "url_seen" -> sketchNext,
                 // near-empty every round: 32 one-file-per-task writes of a
                 // ~100-row table are pure job overhead (the Iceberg target-
                 // file-size behavior, done by hand)
-                "denied" -> thisOut.denied.coalesce(math.max(1, cfg.numPartitions / 8)),
-                "lineage" -> thisOut.lineage.coalesce(1))
-                ++ thisOut.robotsFetched.map(rn =>
-                  "robots_rules" -> rulesAtRound.unionByName(rn)), metrics = {
+                "denied" -> out.denied.coalesce(math.max(1, cfg.numPartitions / 8)),
+                "lineage" -> lineage.coalesce(1))
+                ++ robotsNew.map(rn => "robots_rules" -> rulesAtRound.unionByName(rn)),
+                metrics = {
                 // abandoned by the quiesce timeout? abort BEFORE the manifest
                 // rename (this thunk runs between writes and publication)
                 if (commitAbandoned.get) throw new IllegalStateException(
-                  s"commit r${thisOut.round} abandoned by quiesce timeout — not publishing")
+                  s"commit r${out.round} abandoned by quiesce timeout — not publishing")
                 // by-name metrics: evaluated after the writes, reading the
                 // Observations those writes fired — no jobs
-                r = CrawlRound.result(thisOut)
+                r = CrawlRound.result(out)
                 Map(
                   "total_fetched" -> (thisBase + r.fetched),
                   "fetched" -> r.fetched,
@@ -531,54 +585,38 @@ object Crawl {
                   "sketch_rebuilt" -> (if (rebuiltThisRound) 1L else 0L))
               },
                 // the monotone seen set is committed as a DELTA (this
-                // round's new keys, already cached) — never a full rewrite.
-                // host_edges likewise: the per-round distinct link-graph
-                // delta appends onto the chain (rankPriority).
-                appends = Map("url_seen_exact" -> thisOut.newKeys)
-                  ++ thisOut.hostEdgesDelta.map("host_edges" -> _),
+                // round's new keys) — never a full rewrite. host_edges
+                // likewise: the per-round distinct link-graph delta appends
+                // onto the chain (rankPriority).
+                appends = Map("url_seen_exact" -> newKeys) ++ edgesNew.map("host_edges" -> _),
                 // once the quiesce timeout abandons this commit, it may
                 // neither start further table writes nor publish
                 abort = () => commitAbandoned.get)
-              if (r == null) r = CrawlRound.result(thisOut)
+              if (r == null) r = CrawlRound.result(out)
               r
             }(commitEc)
-            // round N's frames: its caches, then the hopped copies below
-            val frames = scala.collection.mutable.ArrayBuffer[DataFrame](
-              out.persisted ++ Seq(out.frontierNext, sketchNext) ++ edgesPin.toSeq: _*)
-            inFlight = Some(InFlight(round, fut, frames))
+            inFlight = Some(InFlight(round, fut, out.persisted ++ edgesPin ++ hops))
 
             // ---- hand off state for round+1 IN MEMORY, overlapping commit
-            // N: hopped frames plus as-of reads anchored on SETTLED
-            // manifests (≤ round-1). Chains re-anchor on parquet every round,
-            // so no handed-off plan reaches past one hop. Skipped after this
-            // call's last round — nothing would read it (a later call
-            // resumes from the catalog).
-            if (round + 1 < startRound + maxRounds) {
-              def handOff(df: DataFrame): DataFrame = {
-                val h = hop(df); live += h; frames += h; h
-              }
-              frontier = handOff(out.frontierNext)
-              // newKeys is hopped too: seenExact_{N+1} embeds it, and ITS
-              // plan embeds seenExact_N — an un-truncated chain recurses one
-              // full round-plan per round (the linear cousin of the
-              // exponential frontier blowup [[hop]] prevents)
-              seenExact = catalog.load(spark, "url_seen_exact", Some(round - 1)).get
-                .unionByName(handOff(out.newKeys))
-              urlSeenPrev = Some(handOff(sketchNext))
-              if (cfg.robotsFetchInLoop) {
-                val settled = catalog.load(spark, "robots_rules", Some(round - 1)).get
-                robotsRules = out.robotsFetched.map(rn => settled.unionByName(handOff(rn)))
-                  .getOrElse(settled)
-              }
-              // host graph: settled delta chain (≤ round-1) + this round's
-              // hopped delta — the deltas ≤ round that a resume reads back
-              out.hostEdgesDelta.foreach { d =>
-                val h = handOff(d)
-                hostEdges = Some(catalog.load(spark, "host_edges", Some(round - 1))
-                  .map(_.unionByName(h)).getOrElse(h))
-              }
+            // N: the hopped frames plus as-of reads anchored on SETTLED
+            // manifests (≤ round-1), which start no job. Chains re-anchor on
+            // parquet every round, so no handed-off plan reaches past one hop.
+            frontier = frontierNext
+            seenExact = catalog.load(spark, "url_seen_exact", Some(round - 1)).get
+              .unionByName(newKeys)
+            urlSeenPrev = Some(sketchNext)
+            if (cfg.robotsFetchInLoop) {
+              val settled = catalog.load(spark, "robots_rules", Some(round - 1)).get
+              robotsRules = robotsNew.map(settled.unionByName).getOrElse(settled)
+            }
+            // host graph: settled delta chain (≤ round-1) + this round's
+            // hopped delta — the deltas ≤ round that a resume reads back
+            edgesNew.foreach { h =>
+              hostEdges = Some(catalog.load(spark, "host_edges", Some(round - 1))
+                .map(_.unionByName(h)).getOrElse(h))
             }
             base += out.fetchedCount
+            phase("handoff", tBarrier)
             if (timing) System.err.println(
               f"[crawl] r$round LOOP ${(System.nanoTime() - tRound) / 1e9}%.2fs fetched=${out.fetchedCount}")
             round += 1
@@ -588,6 +626,7 @@ object Crawl {
       settle() // the last committed round
       results.toSeq
     } finally {
+      hopEc.shutdown()
       commitEc.shutdown()
       // Quiesce BEFORE propagating anything: an exception mid-loop must not
       // leave the daemon thread free to publish a manifest after the caller
@@ -773,7 +812,7 @@ object Crawl {
     val latest = catalog.latestRound.getOrElse(return emptyFetchLog(spark))
     (0 to latest).flatMap(r =>
       if (r == 0) None
-      else catalog.load(spark, "fetch_log", Some(r)).filter(_ => true))
+      else catalog.load(spark, "fetch_log", Some(r)))
       .reduceOption(_ unionByName _)
       .getOrElse(emptyFetchLog(spark))
   }

@@ -40,13 +40,20 @@ import graft.sketch.{KeyHash, SeenFilter}
 object CrawlRound {
 
   /** Round outputs + the frames run() persisted (caller unpersists after
-    * commit — they back the committed writes, so not before).
+    * commit — they back the committed writes, so not before). The
+    * cross-round frames (`frontierNext`, `newKeys`, `robotsFetched`,
+    * `hostEdgesDelta`) are NOT persisted: the caller pins each with one
+    * eager hop and hands the hopped copy to both the commit and the next
+    * round, so each is computed exactly once.
     *
     * Metrics cost ZERO extra jobs AND sit above every cache: all round
     * counters are per-(partition, metric) rows of the ONE folded `lineage`
     * frame, and a single `observe()` (CollectMetrics) node on top of that
     * frame — the topmost node of the only plan that consumes it (the
-    * lineage commit write) — re-aggregates them to round totals. No
+    * lineage commit write) — re-aggregates them to round totals. `lineage`
+    * builds that frame over the copy of `frontierNext` the commit writes
+    * (the hopped one), so the frontier count reads the pinned rows; call it
+    * once per round, since the frame carries `obsLineage`. No
     * CollectMetrics is ever buried inside a persisted subtree (a cached
     * observe is invisible to the metrics collector on some Spark versions),
     * and no observed frame feeds two written paths (double-registration).
@@ -61,7 +68,7 @@ object CrawlRound {
       newKeys: DataFrame, // this round's newly-seen canon_urls — committed as the url_seen_exact APPEND delta
       denied: DataFrame,
       logged: DataFrame,
-      lineage: DataFrame,
+      lineage: DataFrame => DataFrame,
       robotsFetched: Option[DataFrame], // in-loop mode: newly acquired rules
       obsLineage: org.apache.spark.sql.Observation,
       robotsFetchedCount: Long, // in-loop mode: |missing hosts| this round (driver-known)
@@ -452,18 +459,16 @@ object CrawlRound {
     // seen-dedup — a link to an already-crawled page still confers rank.
     // Self-edges (intra-host navigation) are dropped: they only inflate a
     // host's own score. Reads the persisted parse cache; distinct host
-    // pairs are hosts²-bounded, tiny next to the discovery set.
-    // persisted like every other frame that crosses the round boundary:
-    // the commit thread appends it AND round+1's rank pin re-reads it —
-    // without the pin each consumer re-runs the explode+canonicalize pass
-    // over all outlinks (the distinct result is tiny; the scan is not)
+    // pairs are hosts²-bounded, tiny next to the discovery set. Like every
+    // cross-round frame it is pinned by the caller's hop, which both the
+    // commit's append and round+1's rank pin read — without a pin each
+    // consumer would re-run the explode+canonicalize pass over all outlinks
     val hostEdgesDelta =
       if (!cfg.rankPriority) None
       else Some(discovered
         .select(url_host(col("src_url")).as("src"), col("host").as("dst"))
         .filter(col("src") =!= col("dst"))
-        .distinct()
-        .persist())
+        .distinct())
 
     // ---- 10. seen-dedup: sketch negative test ⇒ definitely new; the rest
     // verify against the exact store (keeps exactness, shrinks the join).
@@ -519,8 +524,8 @@ object CrawlRound {
     val obsLineage = org.apache.spark.sql.Observation(s"lineage_r$round")
     def totalOf(metric: String): Column =
       sum(when(col("metric") === metric, col("value")).otherwise(0L)).as(metric)
-    val lineage = Seq(
-      branch(frontierNext, "frontier_rows" -> lit(1L)),
+    def lineage(frontier: DataFrame): DataFrame = Seq(
+      branch(frontier, "frontier_rows" -> lit(1L)),
       branch(logged,
         "fetched" -> lit(1L),
         "parsed_ok" -> when(col("status") === 200, 1L).otherwise(0L),
@@ -544,7 +549,7 @@ object CrawlRound {
       newEntries.select(col("canon_url")), denied, logged, lineage,
       robotsNewOpt, obsLineage, nRobotsFetched, hostEdgesDelta,
       persisted = Seq(logged, parseCache, rankSorted, scheduled, newEntries, flagged, denied)
-        ++ missingHostsOpt.toSeq ++ hostEdgesDelta.toSeq,
+        ++ missingHostsOpt.toSeq,
       fetchedCount = nRanked)
   }
 

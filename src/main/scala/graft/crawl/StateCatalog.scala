@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Snapshot-table catalog (SURVEY.md §7.4). The engine only ever talks to
@@ -89,6 +90,12 @@ final class HadoopSnapshotCatalog(rootDir: String) extends StateCatalog {
   private val manifestDir: Path = root.resolve("_manifests")
   Files.createDirectories(manifestDir)
 
+  /** The schema sidecar inside every data directory. Spark's file index
+    * skips `_`-prefixed names, so readers of the directory see only the
+    * parquet files; the manifest's flat parser could not hold the schema's
+    * quoted JSON. */
+  private val SchemaFile = "_schema.json"
+
   private def manifestPath(round: Int): Path = manifestDir.resolve(f"manifest_$round%06d.json")
 
   override def latestRound: Option[Int] = {
@@ -110,8 +117,32 @@ final class HadoopSnapshotCatalog(rootDir: String) extends StateCatalog {
 
   override def load(spark: SparkSession, table: String, atRound: Option[Int]): Option[DataFrame] = {
     val upTo = atRound.orElse(latestRound).getOrElse(return None)
-    relsOf(table, upTo).map(rel =>
-      spark.read.parquet(rel.split(',').map(r => root.resolve(r).toString).toIndexedSeq: _*))
+    relsOf(table, upTo).map(read(spark, _))
+  }
+
+  /** Reads a relpath chain with the schema its first directory recorded at
+    * write time ([[writeDir]]), so the read starts no schema-inference job.
+    * Every directory of a chain holds the same table, and every directory
+    * this catalog reads was written by [[writeDir]]. */
+  private def read(spark: SparkSession, chain: String): DataFrame = {
+    val dirs = chain.split(',').map(root.resolve).toIndexedSeq
+    val schema = DataType.fromJson(new String(
+      Files.readAllBytes(dirs.head.resolve(SchemaFile)), StandardCharsets.UTF_8))
+    spark.read.schema(schema.asInstanceOf[StructType]).parquet(dirs.map(_.toString): _*)
+  }
+
+  /** Writes `df` as the data directory `rel`: parquet into `rel.tmp` plus
+    * the writer's schema as [[SchemaFile]], then an
+    * atomic rename that replaces an earlier directory of that name (an
+    * idempotent re-commit of the same round). */
+  private def writeDir(df: DataFrame, rel: String): Unit = {
+    val tmp = root.resolve(rel + ".tmp")
+    val fin = root.resolve(rel)
+    df.write.mode("overwrite").parquet(tmp.toString)
+    Files.write(tmp.resolve(SchemaFile),
+      df.schema.json.getBytes(StandardCharsets.UTF_8))
+    if (Files.exists(fin)) deleteRecursively(fin)
+    Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Relpath chain for `table` as of the newest manifest ≤ `upTo` that
@@ -162,8 +193,6 @@ final class HadoopSnapshotCatalog(rootDir: String) extends StateCatalog {
           if (abort()) throw new IllegalStateException(
             s"commit r$round aborted by caller before writing $name")
           val rel = f"$name/r$round%06d"
-          val tmp = root.resolve(rel + ".tmp")
-          val fin = root.resolve(rel)
           val t0 = System.nanoTime()
           // every job of this write is tagged with the round's commit group
           // so an abandoning owner can cancel RUNNING writes (freeing this
@@ -173,14 +202,9 @@ final class HadoopSnapshotCatalog(rootDir: String) extends StateCatalog {
           val sc = df.sparkSession.sparkContext
           sc.setJobGroup(StateCatalog.commitJobGroup(round),
             s"graft commit r$round: $name", interruptOnCancel = true)
-          try {
-            df.write.mode("overwrite").parquet(tmp.toString)
-          } finally sc.clearJobGroup()
+          try writeDir(df, rel) finally sc.clearJobGroup()
           if (sys.env.contains("GRAFT_CRAWL_TIMING")) System.err.println(
             f"[commit] r$round $name ${(System.nanoTime() - t0) / 1e9}%.2fs")
-          // idempotent re-commit of the same round: clear any previous final dir
-          if (Files.exists(fin)) deleteRecursively(fin)
-          Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
           // append: the manifest entry carries the full relpath chain
           // (anchored at the chain read as of round-1, so an idempotent
           // re-commit of this round rebuilds the same chain), and load()
@@ -222,16 +246,11 @@ final class HadoopSnapshotCatalog(rootDir: String) extends StateCatalog {
     val rel = relsOf(table, latest).getOrElse(return 0)
     val parts = rel.split(',')
     if (parts.length <= 1) return 0
-    val df = spark.read.parquet(parts.map(r => root.resolve(r).toString).toIndexedSeq: _*)
     // 'c' suffix: the compacted base belonging to this snapshot — never
     // collides with a round's own delta dir, and a later compaction at a
     // later round gets its own name
     val relC = f"$table/r$latest%06dc"
-    val tmp = root.resolve(relC + ".tmp")
-    val fin = root.resolve(relC)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    if (Files.exists(fin)) deleteRecursively(fin)
-    Files.move(tmp, fin, StandardCopyOption.ATOMIC_MOVE)
+    writeDir(read(spark, rel), relC)
     // metadata-only swap on the latest manifest; all other entries
     // (sibling tables, metrics, snapshot id) ride along unchanged
     writeManifestAtomic(latest, readManifest(latest).updated(s"table.$table", relC))

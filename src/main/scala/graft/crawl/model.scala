@@ -41,9 +41,11 @@ final case class Scheduled(
   * shape. Commit N (table writes + manifest) runs under round N+1's
   * compute — depth exactly 1, commits strictly ordered, so a crash loses
   * at most the one in-flight round and committed bytes equal those of a
-  * crawl resumed after every round. The cross-round frames hop through
-  * `Crawl.hop`, which truncates their lineage with a reliable checkpoint
-  * when the session has a checkpoint dir and a local checkpoint otherwise.
+  * crawl resumed after every round. Round N hops its cross-round frames
+  * through `Crawl.hop` before waiting on commit N-1; commit N then writes
+  * those hopped copies and round N+1 reads them, so each is computed once.
+  * The hop truncates their lineage with a reliable checkpoint when the
+  * session has a checkpoint dir and a local checkpoint otherwise.
   * Deployment: on a cluster, set `spark.checkpoint.dir` to shared storage
   * (the catalog's fault domain), so the hop survives executor loss; a lost
   * local-checkpoint block fails the round loudly, and recovery is resume

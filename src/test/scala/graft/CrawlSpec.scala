@@ -604,15 +604,30 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
-  test("runRounds + CrawlState.close() release every block the crawl pinned, hopped frames included") {
-    val (catalog, _) = bootstrapCrawl(tmp(), 1000, 8, cfg)
+  /** Bootstraps and runs `rounds` rounds over an eagerly opened state,
+    * closes it, and asserts no RDD the crawl persisted is left. */
+  private def crawlReleasingEveryBlock(nPages: Long, nSeeds: Int,
+      rounds: Int): Seq[CrawlRound.RoundResult] = {
+    val (catalog, _) = bootstrapCrawl(tmp(), nPages, nSeeds, cfg)
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     val st = Crawl.openState(spark, catalog, cfg, eager = true)
-    val results = try Crawl.runRounds(spark, catalog, cfg, 3, st) finally st.close()
-    assert(results.size == 3, "the crawl stopped before its two handoffs")
+    val results = try Crawl.runRounds(spark, catalog, cfg, rounds, st) finally st.close()
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"the crawl left ${leaked.size} persisted RDDs: $leaked")
+    results
+  }
+
+  test("runRounds + CrawlState.close() release every block the crawl pinned, hopped frames included") {
+    val results = crawlReleasingEveryBlock(1000, 8, 3)
+    assert(results.size == 3, "the crawl stopped before its two handoffs")
+  }
+
+  test("a draining runRounds releases every block, the discarded speculative round's hops included") {
+    // the handoff spec's draining fixture: the loop runs one round past the
+    // drain, hops its frames before the barrier, then discards it
+    val results = crawlReleasingEveryBlock(400, 6, 30)
+    assert(results.size < 30, "fixture did not drain — the discard path went unexercised")
   }
 
   test("abandoned in-flight commit never publishes its manifest (quiesce poison)") {
@@ -896,6 +911,77 @@ class CrawlSpec extends AnyFunSuite {
     val b = round3(catB2)
     assert(a.length == b.length && a.sameElements(b),
       "crawl resumed after maintenance diverged from the uninterrupted control")
+  }
+
+  test("catalog load starts no job and returns the schema inference would") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val sc = spark.sparkContext
+    // jobs started by THIS thread only (a probe property rides its jobs)
+    val probe = "graft.spec.loadProbe"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(probe) != null)) jobs.incrementAndGet()
+    }
+    /** Loads `table`, asserting the load ran no job and its schema equals
+      * what `spark.read.parquet` infers from the same directories; returns
+      * the frame and its directory count. */
+    def check(cat: StateCatalog, table: String, at: Option[Int], what: String)
+        : (org.apache.spark.sql.DataFrame, Int) = {
+      sc.setLocalProperty(probe, what)
+      val df = try cat.load(spark, table, at).getOrElse(fail(s"$what: no $table"))
+      finally sc.setLocalProperty(probe, null)
+      org.apache.spark.ListenerDrain(sc)
+      assert(jobs.getAndSet(0) == 0, s"$what: loading $table started a job")
+      val dirs = df.queryExecution.analyzed.collectFirst {
+        case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+          l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString)
+      }.getOrElse(fail(s"$what: $table is not a file scan"))
+      assert(df.schema == spark.read.parquet(dirs: _*).schema, s"$what: $table schema differs")
+      (df, dirs.size)
+    }
+    sc.addSparkListener(listener)
+    try {
+      // in-loop robots: round 1 only acquires robots, so its denied table
+      // has zero rows
+      val c = cfg.copy(robotsFetchInLoop = true)
+      val dir = tmp()
+      val uni = FixtureGen.Universe(500)
+      val robots = (0 until uni.nHosts).flatMap(i => uni.robotsBody(i).map(b => (uni.host(i), b)))
+        .toDF("host", "robots_body")
+      val cat = new HadoopSnapshotCatalog(dir)
+      Crawl.bootstrap(spark, cat, spark.range(500).map(p => uni.pageRow(p)).toDF(), robots,
+        uni.seeds(8), c)
+      Crawl.runRounds(spark, cat, c, 3)
+      assert(cat.latestRound.contains(3))
+      check(cat, "pages_canon", None, "full table")
+      check(cat, "frontier", None, "full table")
+      val (_, links) = check(cat, "url_seen_exact", None, "append chain")
+      assert(links == 4, s"expected bootstrap + 3 deltas, got $links directories")
+      val (denied, _) = check(cat, "denied", Some(1), "zero-row table")
+      assert(denied.count() == 0, "round 1's denied table is not empty")
+      val (log0, _) = check(cat, "fetch_log", Some(0), "zero-row table")
+      assert(log0.count() == 0, "round 0's fetch_log is not empty")
+
+      assert(cat.compactTable(spark, "url_seen_exact") == 4)
+      val (_, folded) = check(cat, "url_seen_exact", None, "compacted chain")
+      assert(folded == 1)
+
+      // a recrawl resets the seen chain with a full table and starts the
+      // recrawl_log append chain
+      val pagesV2 = spark.range(500).map(p => uni.pageRow(p)).toDF()
+        .unionByName(spark.range(500).filter(p => uni.hasSecondVersion(p))
+          .map(p => uni.pageRowV2(p)).toDF())
+      Crawl.recrawlChanged(spark, cat, c, pagesV2)
+      check(cat, "url_seen_exact", None, "chain reset")
+      check(cat, "recrawl_log", None, "chain reset")
+
+      val latest = cat.latestRound.get
+      assert(cat.expireSnapshots(latest).nonEmpty)
+      Seq("frontier", "url_seen_exact", "url_seen", "fetch_log", "denied", "lineage")
+        .foreach(t => check(cat, t, None, "expired manifest"))
+    } finally sc.removeSparkListener(listener)
   }
 
   test("revisit schedule: backoff doubles per unchanged observation, caps, resets on change") {
