@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, DupClusters}
@@ -27,9 +28,9 @@ final case class CurateConfig(
     minJaccard: Double = 0.5,
     splits: Seq[(String, Int)] = Seq(("train", 980), ("valid", 990), ("test", 1000)),
     splitSeed: Long = 0L,
-    /** `false` swaps the one-pass annotate kernels and the minhash
-      * signature kernel for their declarative twins (identical values,
-      * spec-pinned; only slower). No query or bench of this repository sets
+    /** `false` swaps the one-call annotate-and-gate kernel and the
+      * minhash signature kernel for their declarative twins (identical
+      * values, spec-pinned; only slower). No query or bench of this repository sets
       * it; it stays only because perfbench's restated curate stages
       * (`CurateBench.stages`) compile against it. */
     kernels: Boolean = true,
@@ -49,22 +50,33 @@ final case class CurateConfig(
  * End-to-end training-data curation: the composition a corpus pipeline
  * actually runs, as ONE operator —
  *
- *   annotate (lang-ID, quality, repetition)   — fused row-local projection
- *   → threshold filter                        — same stage, no shuffle yet
+ *   annotate + gate (lang-ID, quality,        — one kernel call per document
+ *     repetition thresholds)                    (`TextAnalysis.annotateKernel`)
  *   → exact dedup (min doc_id per md5)        — one hash aggregate
  *   → near-dup removal                        — MinHash+LSH pairs → CC →
  *                                               keep one per cluster
  *   → train/valid/test hash split             — row-local projection
  *
- * Scale shape: everything before exact dedup is a single narrow stage
- * (three one-pass kernels per row, filters fused by codegen); the first
- * shuffle is the dedup aggregate over the FILTERED corpus (quality gates
- * run before dedup precisely because they shrink the expensive stages'
- * input); near-dup discovery is the bounded-bucket LSH path (never
- * all-pairs) and cluster resolution is O(log n)-round large-star/
- * small-star. The split is assigned AFTER dedup so no near-duplicate pair
- * can straddle train/test — the leakage a curation pipeline exists to
+ * Scale shape: everything before exact dedup is a single narrow stage: a
+ * Filter on the gate's `keep` field, then a Project that reads `lang_id`
+ * and `quality` from the same call, so the kernel runs at most twice per
+ * document. The first shuffle is the dedup aggregate over the FILTERED
+ * corpus (quality gates run before dedup precisely because they shrink the
+ * expensive stages' input); near-dup discovery is the bounded-bucket LSH
+ * path (never all-pairs) and cluster resolution is O(log n)-round large-
+ * star/small-star. The split is assigned AFTER dedup so no near-duplicate
+ * pair can straddle train/test — the leakage a curation pipeline exists to
  * prevent.
+ *
+ * Why the gate is ONE opaque predicate: Catalyst's predicate pushdown
+ * (`PushPredicateThroughNonJoin`) moves a Filter below the Projects that
+ * define its columns and inlines their aliases into the condition. Staging
+ * the annotation as separate Projects keeps CollapseProject from
+ * duplicating a kernel in a Project, but nothing stops the pushdown from
+ * doing it in the Filter: a gate over staged `lang_id`/`quality`/`rp`
+ * columns became a Filter holding 189 kernel UDF calls per row. A gate
+ * that reads one boolean field of one UDF call inlines exactly one call.
+ * PlanShapeSpec guards it.
  *
  * Every stage reuses the oracle-checked operator (q21/q22/q53/q25/q27/q52/
  * q51 contracts), so the whole composition has an exact DuckDB mirror
@@ -72,50 +84,37 @@ final case class CurateConfig(
  */
 object CuratePipeline {
 
-  /** Per-doc annotation columns: (lang_id, quality, rep prims). Kernel
-    * forms by default; `kernels = false` swaps in the declarative twins
-    * (identical values — spec-pinned parity — just slower).
-    *
-    * The kernel lang-ID is STAGED exactly like the q21 builder: the marker
-    * array materializes as an attribute, then the per-language scores, and
-    * only then the argmax CASE. Inlining the UDF Column into
-    * `langIdFromScores` instead duplicates the whole marker-count tree into
-    * every score reference of the CASE (~80 copies after the argmax fold) —
-    * measured to blow the generated projection past janino's 64 KB method
-    * limit, knocking the entire annotate+filter stage out of whole-stage
-    * codegen. Staged, each tier references the previous tier's ATTRIBUTE
-    * and CollapseProject keeps multi-referenced non-cheap aliases as real
-    * projection steps. */
-  private def annotate(docs: DataFrame, kernels: Boolean): DataFrame = {
-    val langs = TextAnalysis.langMarkers.map(_._1)
-    val rep =
-      if (kernels) TextAnalysis.repetition_prims_udf(col("text"))
-      else TextAnalysis.repetitionPrims(col("text"))
-    val withLang =
-      if (kernels) {
-        val markers = TextAnalysis.langMarkers
-          .flatMap { case (_, ws) => ws.map(w => s" $w ") }.toArray
-        val nPerLang = TextAnalysis.langMarkers.head._2.size
-        docs
-          .withColumn("__mk", TextAnalysis.markerCountsUdf(markers)(col("text")))
-          .select(col("*") +: langs.zipWithIndex.map { case (l, i) =>
-            (0 until nPerLang).map(j => element_at(col("__mk"), i * nPerLang + j + 1))
-              .reduce(_ + _).as(s"__s_$l")
-          }: _*)
-          .withColumn("lang_id",
-            TextAnalysis.langIdFromScores(langs.map(l => l -> col(s"__s_$l"))))
-          .drop("__mk" +: langs.map(l => s"__s_$l"): _*)
-      } else docs.withColumn("lang_id", TextAnalysis.langId(col("text")))
-    // quality: same staging discipline — the prims UDF/array materializes
-    // as an attribute, the score formula's ~10 references read it by name
-    val withQuality =
-      if (kernels) withLang
-        .withColumn("__qp", TextAnalysis.quality_prims_udf(col("text")))
-        .withColumn("quality", TextAnalysis.qualityScoreFromPrims(col("__qp")))
-        .drop("__qp")
-      else withLang.withColumn("quality", TextAnalysis.qualityScore(col("text")))
-    withQuality.withColumn("rp", rep)
+  /** The gate's per-document result: the annotations curate outputs and
+    * whether the document passes every threshold. */
+  private[graft] final case class Gate(lang_id: String, quality: Double, keep: Boolean)
+
+  /** [[TextAnalysis.annotateKernel]] and `cfg`'s thresholds as one
+    * deterministic UDF returning `struct(lang_id, quality, keep)`. `keep`
+    * is the declarative gate's predicate, value for value: null text has
+    * null repetition primitives, so it never passes. */
+  private[graft] def gateUdf(cfg: CurateConfig): UserDefinedFunction = {
+    val dropUnknownLang = cfg.dropUnknownLang
+    val minQuality = cfg.minQuality
+    val maxTopUnigramFrac = cfg.maxTopUnigramFrac
+    val maxDupBigramFrac = cfg.maxDupBigramFrac
+    udf { (text: String) =>
+      val a = TextAnalysis.annotateKernel(text)
+      val rp = a.repetition
+      Gate(a.langId, a.quality,
+        (!dropUnknownLang || a.langId != "und") &&
+          a.quality >= minQuality &&
+          rp != null &&
+          rp(1).toDouble / math.max(rp(0), 1L).toDouble <= maxTopUnigramFrac &&
+          rp(4).toDouble / math.max(rp(2), 1L).toDouble <= maxDupBigramFrac)
+    }
   }
+
+  /** The declarative branch (`kernels = false`): (lang_id, quality, rep
+    * prims) as built-in column trees, the forms the oracles mirror. */
+  private def annotate(docs: DataFrame): DataFrame =
+    docs.withColumn("lang_id", TextAnalysis.langId(col("text")))
+      .withColumn("quality", TextAnalysis.qualityScore(col("text")))
+      .withColumn("rp", TextAnalysis.repetitionPrims(col("text")))
 
   private def repFrac(countIdx: Int, denomIdx: Int): Column =
     element_at(col("rp"), countIdx).cast("double") /
@@ -145,19 +144,25 @@ object CuratePipeline {
       if (cfg.redactPii) docs.withColumn("text", TextAnalysis.redactPii(col("text")))
       else docs
     // transient pin: the annotated+filtered frame has TWO consumers (the
-    // dedup aggregate and the semi-join's probe side) — unpinned, the three
-    // annotation kernels would run over the full corpus twice, the most
+    // dedup aggregate and the semi-join's probe side) — unpinned, the
+    // annotation kernel would run over the full corpus twice, the most
     // expensive recompute in the pipeline. Released once the smaller
     // post-dedup frame is forced.
-    val gated = annotate(input, cfg.kernels)
-      .filter(
+    val gated =
+      if (cfg.kernels) input
+        .withColumn("__gate", gateUdf(cfg)(col("text")))
+        .filter(col("__gate.keep"))
+        .withColumn("lang_id", col("__gate.lang_id"))
+        .withColumn("quality", col("__gate.quality"))
+        .drop("__gate")
+      else annotate(input).filter(
         (lit(!cfg.dropUnknownLang) || col("lang_id") =!= "und") &&
         col("quality") >= cfg.minQuality &&
         repFrac(2, 1) <= cfg.maxTopUnigramFrac &&
         repFrac(5, 3) <= cfg.maxDupBigramFrac)
     // with a bench set, the gated frame gets a transient pin of its own:
     // the q55 operator reads its train side twice and the anti-join reads
-    // it again — unpinned, each read re-runs the annotate kernels
+    // it again — unpinned, each read re-runs the annotate kernel
     val gatedPin = bench.map(_ => gated.persist())
     val filtered = bench.fold(gated) { b =>
       // anti-join against the contaminated id set: ≤|gated| rows, built

@@ -73,9 +73,11 @@ object TextAnalysis {
     * document per marker (20 copies/row in q21's 4-language scoring).
     * `indexOf` stepping by `tok.length` is exactly the replace-trick's
     * semantics (leftmost-first, non-overlapping). Parity is spec-pinned. */
-  def markerCountsKernel(text: String, tokens: Array[String]): Array[Long] = {
-    if (text == null) return null
-    val pt = " " + normTextJvm(text) + " "
+  def markerCountsKernel(text: String, tokens: Array[String]): Array[Long] =
+    if (text == null) null else countTokens(" " + normTextJvm(text) + " ", tokens)
+
+  /** [[markerCountsKernel]] over already-padded normalized text. */
+  private def countTokens(pt: String, tokens: Array[String]): Array[Long] = {
     val out = new Array[Long](tokens.length)
     var t = 0
     while (t < tokens.length) {
@@ -139,8 +141,13 @@ object TextAnalysis {
     * integers ([[qualityColumnsFromPrims]]), so oracle arithmetic is
     * untouched. ASCII-safe corpus assumption as [[normTextJvm]]. Null text
     * → null. */
-  def qualityPrimsKernel(text: String): Array[Long] = {
-    if (text == null) return null
+  def qualityPrimsKernel(text: String): Array[Long] =
+    if (text == null) null
+    else { val nt = normTextJvm(text); qualityPrims(text, nt, " " + nt + " ") }
+
+  /** [[qualityPrimsKernel]] over the raw text, its normalization `nt` and
+    * the padded `pt` = " " + nt + " ". */
+  private def qualityPrims(text: String, nt: String, pt: String): Array[Long] = {
     var punct = 0L; var digits = 0L; var upper = 0L
     var i = 0
     while (i < text.length) {
@@ -150,13 +157,12 @@ object TextAnalysis {
       else if (c >= 'A' && c <= 'Z') upper += 1
       i += 1
     }
-    val nt = normTextJvm(text)
     val nWords = if (nt.isEmpty) 0L else {
       var sp = 0L; var j = 0
       while (j < nt.length) { if (nt.charAt(j) == ' ') sp += 1; j += 1 }
       sp + 1
     }
-    val stop = markerCountsKernel(text, qualityStopTokens).sum
+    val stop = countTokens(pt, qualityStopTokens).sum
     Array(text.length.toLong, nWords, punct, digits, upper, stop)
   }
 
@@ -185,7 +191,15 @@ object TextAnalysis {
       (nChars.cast("double") / safeWords).as("avg_word_len"))
   }
 
-  /** [[qualityScore]] from the primitives array — same closed form. */
+  /** [[qualityScore]] from the primitives array — same closed form.
+    *
+    * Null text scores 0.7, here and in [[qualityScore]]: its primitives are
+    * null, `least`/`greatest` skip null terms, so the length and stop terms
+    * are each `least(null, 1.0)` = 1.0 and the digit penalty is
+    * 1.0 − 1.0 = 0.0. DuckDB's `least`/`greatest` skip nulls the same way,
+    * so the oracles agree. Consequences: [[sourceQualityStats]] counts a
+    * null-text page as 700 permille, and curate's gate drops null text
+    * whatever its score, because its repetition primitives are null. */
   def qualityScoreFromPrims(p: Column): Column = {
     val nWords = element_at(p, 2).cast("double")
     val stop = element_at(p, 6).cast("double")
@@ -198,7 +212,8 @@ object TextAnalysis {
   }
 
   /** Composite [0,1] quality score — monotone in word count, penalizes
-    * digit/punct-heavy and stopword-free text. Same closed form in SQL. */
+    * digit/punct-heavy and stopword-free text. Same closed form in SQL.
+    * Null text scores 0.7 (see [[qualityScoreFromPrims]]). */
   def qualityScore(text: Column): Column = {
     val nWords = wordCount(text).cast("double")
     val stop = qualityStopwords
@@ -277,6 +292,8 @@ object TextAnalysis {
    * double is cross-engine identical — q22's contract — and floor/CAST are
    * exact), summed as integers (order-free), floored mean — a double mean
    * would hash-differ by summation order. ONE aggregate over the corpus.
+   * A null-text page counts as 700 permille: null text scores 0.7 (see
+   * [[qualityScoreFromPrims]]).
    */
   def sourceQualityStats(df: DataFrame, srcCol: Column, textCol: Column): DataFrame = {
     val q = qualityScoreFromPrims(quality_prims_udf(textCol))
@@ -440,6 +457,62 @@ object TextAnalysis {
   val winnow_udf: org.apache.spark.sql.expressions.UserDefinedFunction =
     org.apache.spark.sql.functions.udf((s: String) => winnowKernel(s))
 
+  // --- one-call annotation (curate's gate) ---------------------------------
+
+  /** One document's lang-ID, quality score and repetition primitives
+    * ([[repetitionPrimsKernel]]'s array; null for null text). */
+  final case class Annotation(langId: String, quality: Double, repetition: Array[Long])
+
+  private val langMarkerTokens: Array[String] =
+    langMarkers.flatMap { case (_, ws) => ws.map(w => s" $w ") }.toArray
+
+  /** Every per-document annotation curate gates on, in one call: the
+    * marker counts, quality primitives and repetition primitives of
+    * [[markerCountsKernel]], [[qualityPrimsKernel]] and
+    * [[repetitionPrimsKernel]] over ONE normalization of the text, then
+    * JVM mirrors of [[langIdFromScores]] and [[qualityScoreFromPrims]].
+    * The mirrors apply the same IEEE operations in the same order, and
+    * every term is finite and non-negative, so `math.min`/`math.max` match
+    * Spark's `least`/`greatest` and the values are bit-identical to the
+    * column forms (spec-pinned, null text included). */
+  def annotateKernel(text: String): Annotation =
+    if (text == null) Annotation("und", qualityScoreJvm(null), null)
+    else {
+      val nt = normTextJvm(text)
+      val pt = " " + nt + " "
+      Annotation(langIdJvm(countTokens(pt, langMarkerTokens)),
+        qualityScoreJvm(qualityPrims(text, nt, pt)), repetitionCounts(nt))
+    }
+
+  /** [[langIdFromScores]] over [[langMarkers]]' counts: the first language
+    * (in [[langMarkers]] order) holding the highest score, "und" when no
+    * marker fires. */
+  private def langIdJvm(counts: Array[Long]): String = {
+    val nPerLang = langMarkers.head._2.size
+    val scores = Array.tabulate(langMarkers.size) { i =>
+      var s = 0L; var j = 0
+      while (j < nPerLang) { s += counts(i * nPerLang + j); j += 1 }
+      s
+    }
+    if (scores.sum > 0) langMarkers(scores.indexOf(scores.max))._1 else "und"
+  }
+
+  /** [[qualityScoreFromPrims]] over a [[qualityPrimsKernel]] array. */
+  private def qualityScoreJvm(p: Array[Long]): Double =
+    // null prims: least/greatest skip the null terms, so the length and
+    // stop terms are 1.0 and the digit penalty 1.0 - 1.0
+    if (p == null) 1.0 * 0.4 + 1.0 * 0.3 + (1.0 - 1.0) * 0.3
+    else {
+      val nWords = p(1).toDouble
+      val stop = p(5).toDouble
+      val digits = p(3).toDouble
+      val nChars = math.max(p(0), 1L).toDouble
+      val lenTerm = math.min(nWords / 100.0, 1.0)
+      val stopTerm = math.min((stop * 5.0) / math.max(nWords, 1.0), 1.0)
+      val digitPenalty = 1.0 - math.min(digits * 3.0 / nChars, 1.0)
+      lenTerm * 0.4 + stopTerm * 0.3 + digitPenalty * 0.3
+    }
+
   // --- repetition signals (Gopher-style quality filters) ---------------------
 
   /** Repetition primitives over the normalized token stream — the raw
@@ -456,9 +529,11 @@ object TextAnalysis {
     * null propagation). One pass, one HashMap per row, no explode — at
     * corpus scale this is a row-local projection with NO shuffle, where
     * the explode+groupBy form would shuffle one row per token. */
-  def repetitionPrimsKernel(text: String): Array[Long] = {
-    if (text == null) return null
-    val nt = normTextJvm(text)
+  def repetitionPrimsKernel(text: String): Array[Long] =
+    if (text == null) null else repetitionCounts(normTextJvm(text))
+
+  /** [[repetitionPrimsKernel]] over already-normalized text. */
+  private def repetitionCounts(nt: String): Array[Long] = {
     if (nt.isEmpty) return Array(0L, 0L, 0L, 0L, 0L)
     val toks = nt.split(' ')
     val uni = new java.util.HashMap[String, Long]()

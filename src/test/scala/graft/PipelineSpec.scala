@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -614,7 +615,10 @@ class PipelineSpec extends AnyFunSuite {
       (102L, good(1)._2 + " and the tail"),                // near dup of 2 (J ≈ 0.83)
       (201L, "spam spam spam spam spam spam spam spam"),   // repetition junk
       (202L, "palabras sin marcadores reconocibles aqui"), // 'und' lang
-      (203L, "1 2 3 4 5 6 7 8 9 0 1 2 3 4 5 6 7 8 9 0"))  // digit junk
+      (203L, "1 2 3 4 5 6 7 8 9 0 1 2 3 4 5 6 7 8 9 0"),  // digit junk
+      (204L, null: String),                                // null text
+      (205L, ""),                                          // empty text
+      (206L, "  \t\n "))                                    // whitespace only
     ): _*)
     val cfg = CurateConfig(minQuality = 0.3, maxTopUnigramFrac = 0.4)
     val out = CuratePipeline.curate(corpus, cfg)
@@ -622,8 +626,7 @@ class PipelineSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     spark.catalog.clearCache()
     val ids = out.map(_._1).toSet
-    assert(!ids.contains(201L) && !ids.contains(202L) && !ids.contains(203L),
-      s"junk docs must be filtered: $ids")
+    assert((201L to 206L).forall(id => !ids.contains(id)), s"junk docs must be filtered: $ids")
     assert(!ids.contains(101L), "exact dup must lose to min id 1")
     assert(!ids.contains(102L), "near dup must lose to min id 2")
     assert(ids.contains(1L) && ids.contains(2L), s"representatives must survive: $ids")
@@ -667,6 +670,91 @@ class PipelineSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
     spark.catalog.clearCache()
     assert(scrub == Set(5L), s"scrubbed doc must pass the gate: $scrub")
+  }
+
+  test("annotate kernel ≡ column forms: curate's (lang_id, quality, keep), bit for bit") {
+    import graft.operators.{CurateConfig, CuratePipeline}
+    val texts: Seq[String] = Seq(
+      null, "", " \t\n ",
+      "hello",                                     // one word
+      "palabras sin marcadores reconocibles aqui", // no markers: und
+      "der the",                                   // en/de tie → en
+      "das und ist the and of",                    // en/de tie → en
+      "el le que les",                             // es/fr tie → es
+      "der die und the",                           // de wins outright
+      "1 2 3 4 5 6 7 8 9 0 1 2 3 the and",         // digit-heavy
+      "the a the b the c the d",                   // top unigram = 4/8 = 0.5
+      "the a the b the c the",                     // top unigram = 4/7
+      "the a a of the dog dog dog a of the",       // dup bigrams = 6/10 = 0.6
+      "the a a of the dog dog dog a of the dog",   // dup bigrams = 8/11
+      "The quick brown fox, and the lazy dog; of course it is in the end.")
+    val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val langs = TextAnalysis.langMarkers.map(_._1)
+    val markers = TextAnalysis.langMarkers.flatMap { case (_, ws) => ws.map(w => s" $w ") }.toArray
+    val nPerLang = TextAnalysis.langMarkers.head._2.size
+    val columns = d
+      .withColumn("__mk", TextAnalysis.markerCountsUdf(markers)(col("text")))
+      .select(col("*") +: langs.zipWithIndex.map { case (l, i) =>
+        (0 until nPerLang).map(j => element_at(col("__mk"), i * nPerLang + j + 1))
+          .reduce(_ + _).as(s"__s_$l")
+      }: _*)
+      .withColumn("lang_id", TextAnalysis.langIdFromScores(langs.map(l => l -> col(s"__s_$l"))))
+      .withColumn("quality",
+        TextAnalysis.qualityScoreFromPrims(TextAnalysis.quality_prims_udf(col("text"))))
+      .withColumn("rp", TextAnalysis.repetition_prims_udf(col("text")))
+    def repFrac(c: Int, dn: Int): Column =
+      element_at(col("rp"), c).cast("double") / greatest(element_at(col("rp"), dn), lit(1L))
+    def bits(x: Double) = java.lang.Double.doubleToRawLongBits(x)
+    /** Compares the fused gate with the column forms on every doc; returns
+      * each doc's keep. A null predicate drops the row, as the Filter does. */
+    def parity(cfg: CurateConfig): Seq[(Long, String, Double, Boolean)] = {
+      val keep = coalesce(
+        (lit(!cfg.dropUnknownLang) || col("lang_id") =!= "und") &&
+          col("quality") >= cfg.minQuality &&
+          repFrac(2, 1) <= cfg.maxTopUnigramFrac && repFrac(5, 3) <= cfg.maxDupBigramFrac,
+        lit(false))
+      val rows = columns
+        .select(col("doc_id"), col("lang_id"), col("quality"), keep.as("keep"),
+          CuratePipeline.gateUdf(cfg)(col("text")).as("g"))
+        .select(col("doc_id"), col("lang_id"), col("quality"), col("keep"),
+          col("g.lang_id").as("g_lang"), col("g.quality").as("g_quality"), col("g.keep").as("g_keep"))
+        .as[(Long, String, Double, Boolean, String, Double, Boolean)].collect().sortBy(_._1)
+      rows.foreach { case (id, l, q, k, gl, gq, gk) =>
+        assert((gl, bits(gq), gk) == ((l, bits(q), k)),
+          s"doc $id ${Option(texts(id.toInt))} under $cfg: kernel ($gl, $gq, $gk), columns ($l, $q, $k)")
+      }
+      rows.map(r => (r._1, r._2, r._3, r._4)).toSeq
+    }
+    val base = parity(CurateConfig())
+    assert(base.map(_._2).slice(4, 9) == Seq("und", "en", "en", "es", "de"), base)
+    // the repetition boundary docs pass (<=); their one-token-longer twins do not
+    assert(base.map(_._4).slice(10, 14) == Seq(true, false, true, false), base)
+    parity(CurateConfig(dropUnknownLang = false, minQuality = 0.0))
+    parity(CurateConfig(maxTopUnigramFrac = 0.6, maxDupBigramFrac = 0.7))
+    // minQuality at doc 12's own score: the >= boundary
+    val atQ = parity(CurateConfig(minQuality = base(12)._3))
+    assert(atQ(12)._4 && base(10)._3 < base(12)._3 && !atQ(10)._4, atQ)
+  }
+
+  test("null text: quality 0.7 in both forms, 700 permille per source, dropped by curate") {
+    import graft.operators.{CurateConfig, CuratePipeline}
+    val d = docs(1L -> null)
+    val (q, qp) = d.select(TextAnalysis.qualityScore(col("text")),
+        TextAnalysis.qualityScoreFromPrims(TextAnalysis.quality_prims_udf(col("text"))))
+      .as[(Double, Double)].head()
+    assert(q == 0.7 && qp == 0.7, s"null text: qualityScore $q, qualityScoreFromPrims $qp")
+    assert(TextAnalysis.annotateKernel(null).quality == 0.7)
+    val stats = TextAnalysis.sourceQualityStats(
+        d.withColumn("source", lit("s")), col("source"), col("text"))
+      .select("n_docs", "avg_quality_permille").as[(Long, Long)].collect()
+    assert(stats.toSeq == Seq((1L, 700L)), stats.toSeq)
+    // the gate drops it whatever its score: its repetition prims are null
+    val lax = CurateConfig(dropUnknownLang = false, minQuality = 0.0)
+    for (cfg <- Seq(lax, lax.copy(kernels = false))) {
+      val kept = CuratePipeline.curate(d, cfg).collect()
+      spark.catalog.clearCache()
+      assert(kept.isEmpty, s"null text passed curate (kernels = ${cfg.kernels}): ${kept.toSeq}")
+    }
   }
 
   // ---- dup-cluster resolution (connected components) -----------------------

@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,6 +35,50 @@ class PlanShapeSpec extends AnyFunSuite {
 
   private def physical(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** The operators of `plan`, one frame per plan: AQE stages are entered in
+    * place, and each pinned frame's build plan (an InMemoryRelation's
+    * `cachedPlan`) is a frame of its own. */
+  private def frames(plan: SparkPlan): Seq[Seq[SparkPlan]] = {
+    val pinned = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case s: QueryStageExec => walk(s.plan)
+      case m: InMemoryTableScanExec => pinned += m.relation.cachedPlan; Seq(m)
+      case o => o +: o.children.flatMap(walk)
+    }
+    walk(plan) +: pinned.distinct.toSeq.flatMap(frames)
+  }
+
+  private def udfCalls(e: Expression): Int = e.collect { case u: ScalaUDF => u }.size
+
+  test("curate's gate: one UDF per Filter; the annotate kernel runs at most twice per row") {
+    // Predicate pushdown inlines a Filter's aliases: a gate over staged
+    // lang/quality/repetition columns held 189 kernel calls per row
+    import graft.operators.CuratePipeline
+    // built on range, not a local Seq: the optimizer evaluates a gate over
+    // a LocalRelation at planning time and no Filter would be left
+    val text = when(col("id") === 41, lit("spam spam spam spam"))
+      .when(col("id") === 42, lit("palabras sin marcadores"))
+      .when(col("id") === 43, lit(null).cast("string"))
+      .otherwise(concat(lit("the item "), col("id"), lit(" and the other of to in the end w"),
+        col("id"), lit("a w"), col("id"), lit("b")))
+    val out = CuratePipeline.curate(spark.range(1, 44).select(col("id").as("doc_id"), text.as("text")))
+    try {
+      assert(out.collect().length == 40)
+      val fs = frames(out.queryExecution.executedPlan)
+      val filters = fs.flatten.collect { case f: FilterExec => f }
+      filters.foreach(f => assert(udfCalls(f.condition) <= 1,
+        s"a Filter holds ${udfCalls(f.condition)} UDF calls per row: ${f.condition.sql.take(400)}"))
+      val gate = fs.filter(_.exists {
+        case f: FilterExec => udfCalls(f.condition) > 0
+        case _ => false
+      })
+      assert(gate.size == 1, s"expected one gate frame: ${fs.map(_.head.nodeName)}")
+      val calls = gate.head.map(_.expressions.map(udfCalls).sum).sum
+      assert(calls <= 2, s"the gate frame makes $calls UDF calls per row: ${gate.head.head}")
+    } finally spark.catalog.clearCache()
+  }
 
   test("column pruning: link-free pass never reads the html column") {
     val df = spark.read.parquet(s"$pagesDir/pages.parquet").select("url", "warc_ts", "lang")
